@@ -272,7 +272,7 @@ final class Engine(val catalog: GraphCatalog,
     // is one level deep. Superseded generations are unpersisted only after
     // their successor's count(), so the truncated (non-recomputable) blocks
     // are never needed again. (DataFrame-level localCheckpoint would do the
-    // same but trips the AQE attribute bug PropertyPaths documents; the raw
+    // same but trips the AQE attribute bug Generations documents; the raw
     // RDD path bypasses Catalyst entirely.)
     def cutR(df: DataFrame): (DataFrame,
         org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long) = {

@@ -412,7 +412,7 @@ final class Compiler(val catalog: GraphCatalog) {
       existsCs: Seq[(Op, Boolean)],
       exMarks: Seq[(String, Op, Boolean)] = Nil): Sol = {
     val lid = "__lid"
-    val ldf = graft.paths.PropertyPaths.cut(catalog.spark,
+    val ldf = graft.exec.Generations.cut(
       l0.df.withColumn(lid, monotonically_increasing_id()))
     val l = Sol(ldf, l0.cert + lid, l0.maybe)
     val rSol = compile(r)

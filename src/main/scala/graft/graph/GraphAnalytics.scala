@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exec.Generations
 import graft.model.Rdf
 
 /** GraphX bridge for whole-graph analytics (BASELINE.json `spark_approach`:
@@ -78,7 +79,6 @@ object GraphAnalytics {
     */
   def pageRankFixed(quads: DataFrame, predicates: Seq[String] = Nil,
       iters: Int = 3): DataFrame = {
-    val spark = quads.sparkSession
     val Scale = 100000000L // 1e8
     val e = edgeDF(quads, predicates).select(col("src"), col("dst"))
     val verts = e.select(col("src").as("iri")).unionAll(e.select(col("dst")))
@@ -90,31 +90,27 @@ object GraphAnalytics {
     // references to this identical join subtree dedupe via Spark's exchange
     // reuse (ReusedExchange), so the cache would buy nothing anyway.
     val edges = e.join(outdeg, Seq("src"))
-    var r = verts.select(col("iri"), lit(Scale).as("r"))
-    var prevCut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    for (i <- 0 until iters) {
-      val contrib = edges.join(r.withColumnRenamed("iri", "src"), Seq("src"))
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
-      r = verts.join(contrib.withColumnRenamed("dst", "iri"), Seq("iri"), "left_outer")
-        .select(col("iri"), expr(
-          s"CAST(${15L * Scale / 100} AS BIGINT) + " +
-            "(85 * coalesce(csum, CAST(0 AS BIGINT))) div 100").as("r"))
-      // High-iteration runs: cut the lineage every 8 rounds (analyzer depth
-      // grows per iteration), releasing the previous cut once the new one
-      // materializes — at most ONE cut RDD is ever live, and none at all at
-      // the default iters=3.
-      if ((i + 1) % 8 == 0 && i != iters - 1) {
-        val rdd = r.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        prevCut.foreach(_.unpersist(blocking = false))
-        prevCut = Some(rdd)
-        r = spark.createDataFrame(rdd, r.schema)
+    val ranks = Generations.scope { gen =>
+      var r = verts.select(col("iri"), lit(Scale).as("r"))
+      for (i <- 0 until iters) {
+        val contrib = edges.join(r.withColumnRenamed("iri", "src"), Seq("src"))
+          .select(col("dst"), expr("r div d").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
+        r = verts.join(contrib.withColumnRenamed("dst", "iri"), Seq("iri"), "left_outer")
+          .select(col("iri"), expr(
+            s"CAST(${15L * Scale / 100} AS BIGINT) + " +
+              "(85 * coalesce(csum, CAST(0 AS BIGINT))) div 100").as("r"))
+        // High-iteration runs: cut the lineage every 8 rounds (analyzer depth
+        // grows per iteration), releasing the previous cut once the new one
+        // materializes — at most ONE cut RDD is ever live, and none at all at
+        // the default iters=3.
+        if ((i + 1) % 8 == 0 && i != iters - 1) r = gen.advance(r, r)
       }
+      r
     }
     // The scaled-integer rank is exact; ONE final double division (same
     // constant both engines) needs no rounding to hash-match.
-    r.select(col("iri"), (col("r").cast("double") / lit(1e8)).as("rank"))
+    ranks.select(col("iri"), (col("r").cast("double") / lit(1e8)).as("rank"))
   }
 
   /** In/out degree per IRI — plain DataFrame aggregation (no GraphX needed,
@@ -177,7 +173,7 @@ object GraphAnalytics {
     * shortest-path complement to the whole-graph GraphX ops. Semi-naive:
     * each round joins only the FRONTIER (vertices first reached last
     * round) against the edges, anti-joins the visited set, and cuts
-    * lineage (reusing [[graft.paths.PropertyPaths.cut]]) so the plan stays
+    * lineage ([[graft.exec.Generations]]) so the plan stays
     * flat; per-round cost is |frontier ⋈ edges|, never |visited| × edges.
     * Early-exits when the frontier drains. Returns (v, dist) with the
     * minimum hop count ≤ maxDepth per reachable vertex.
@@ -188,36 +184,24 @@ object GraphAnalytics {
     val und0 = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
-    // Cut with RELEASE (the pageRankFixed cache-hygiene pattern): each
-    // generation is materialized eagerly, superseded generations are
-    // unpersisted as soon as the next one exists — at most the current
-    // frontier + visited stay cached during the loop, and only the
-    // RETURNED snapshot remains after (recomputable via lineage; a
-    // long-lived caller can unpersist via df.rdd).
-    val live = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-    def cut(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      live += rdd
-      spark.createDataFrame(rdd, df.schema)
+    Generations.scope { gen =>
+      // materialize once — the edge lineage must not re-execute per round
+      val (und, _) = gen.cut(und0)
+      var (visited, fn) = gen.cut(Seq((source, 0L)).toDF("v", "dist"))
+      var frontier = visited
+      var depth = 0
+      while (depth < maxDepth && fn > 0) {
+        depth += 1
+        val (next, nn) = gen.cut(
+          frontier.join(und, frontier("v") === und("src"))
+            .select(und("dst").as("v")).distinct()
+            .join(visited, Seq("v"), "left_anti")
+            .select(col("v"), lit(depth.toLong).as("dist")))
+        visited = gen.cut(visited.unionAll(next))._1
+        frontier = next; fn = nn
+      }
+      visited
     }
-    // materialize once — the edge lineage must not re-execute per round
-    val und = cut(und0)
-    var visited = cut(Seq((source, 0L)).toDF("v", "dist"))
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val next = cut(
-        frontier.join(und, frontier("v") === und("src"))
-          .select(und("dst").as("v")).distinct()
-          .join(visited, Seq("v"), "left_anti")
-          .select(col("v"), lit(depth.toLong).as("dist")))
-      visited = cut(visited.unionAll(next))
-      frontier = next
-    }
-    live.dropRight(1).foreach(_.unpersist(blocking = false))
-    visited
   }
 
   /** COST-BOUNDED weighted single-source shortest paths: min path cost to
@@ -234,56 +218,43 @@ object GraphAnalytics {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxCost >= 0)
-    val live = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-    // cut returns the materialized frame AND its row count: a LogicalRDD
-    // has no stats, so without an explicit hint Spark would shuffle the
-    // (tiny) frontier against the edge set every round — the count drives
-    // broadcast decisions instead.
-    def cutN(df: DataFrame): (DataFrame, Long) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = rdd.count()
-      live += rdd
-      (spark.createDataFrame(rdd, df.schema), n)
-    }
     val BcastLimit = 500000L
     def bc(df: DataFrame, n: Long): DataFrame =
       if (n <= BcastLimit) broadcast(df) else df
-    // materialize the edge set ONCE — its lineage (often an expensive
-    // self-join) must not re-execute every relaxation round
-    val (und, _) = cutN(edges.select(col("src"), col("dst"), col("w"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(min(col("w")).as("w"))) // parallel edges: keep cheapest
-    var (best, bestN) = cutN(Seq((source, 0L)).toDF("v", "dist"))
-    var frontier = best
-    var frontierN = bestN
-    var go = true
-    while (go && frontierN > 0) {
-      // broadcast the frontier: the edge set never shuffles per round
-      val cand = bc(frontier, frontierN).join(und, frontier("v") === und("src"))
-        .select(und("dst").as("v"), (frontier("dist") + und("w")).as("dist"))
-        .filter(col("dist") <= maxCost)
-        .groupBy("v").agg(min(col("dist")).as("dist"))
-      val (improved, impN) = cutN(cand.alias("c")
-        .join(bc(best, bestN).alias("b"), Seq("v"), "left_outer")
-        .filter(col("b.dist").isNull || col("c.dist") < col("b.dist"))
-        .select(col("v"), col("c.dist").as("dist")))
-      if (impN == 0) go = false
-      else {
-        // lineage cut WITHOUT a count job: |best ∪ improved| ≤ bestN + impN
-        // and the count only feeds the broadcast bound, so the upper bound
-        // keeps decisions safe and saves one job per relaxation round
-        val rdd = best.join(bc(improved, impN), Seq("v"), "left_anti")
-          .unionAll(improved).rdd
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        live += rdd
-        best = spark.createDataFrame(rdd, best.schema)
-        bestN = bestN + impN
-        frontier = improved; frontierN = impN
+    Generations.scope { gen =>
+      // materialize the edge set ONCE — its lineage (often an expensive
+      // self-join) must not re-execute every relaxation round
+      val (und, _) = gen.cut(edges.select(col("src"), col("dst"), col("w"))
+        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+        .filter(col("src") =!= col("dst"))
+        .groupBy("src", "dst").agg(min(col("w")).as("w"))) // parallel edges: keep cheapest
+      var (best, bestN) = gen.cut(Seq((source, 0L)).toDF("v", "dist"))
+      var frontier = best
+      var frontierN = bestN
+      var go = true
+      while (go && frontierN > 0) {
+        // broadcast the frontier: the edge set never shuffles per round
+        val cand = bc(frontier, frontierN).join(und, frontier("v") === und("src"))
+          .select(und("dst").as("v"), (frontier("dist") + und("w")).as("dist"))
+          .filter(col("dist") <= maxCost)
+          .groupBy("v").agg(min(col("dist")).as("dist"))
+        val (improved, impN) = gen.cut(cand.alias("c")
+          .join(bc(best, bestN).alias("b"), Seq("v"), "left_outer")
+          .filter(col("b.dist").isNull || col("c.dist") < col("b.dist"))
+          .select(col("v"), col("c.dist").as("dist")))
+        if (impN == 0) go = false
+        else {
+          // lineage cut WITHOUT a count job: |best ∪ improved| ≤ bestN + impN
+          // and the count only feeds the broadcast bound, so the upper bound
+          // keeps decisions safe and saves one job per relaxation round
+          best = gen.cutLazy(best.join(bc(improved, impN), Seq("v"), "left_anti")
+            .unionAll(improved))
+          bestN = bestN + impN
+          frontier = improved; frontierN = impN
+        }
       }
+      best
     }
-    live.dropRight(1).foreach(_.unpersist(blocking = false))
-    best
   }
 
   /** k-CORE decomposition: the maximal subgraph in which every vertex has
@@ -298,42 +269,32 @@ object GraphAnalytics {
     * must land inside it — exceeding it throws rather than diverging
     * silently.
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
-    val spark = edges.sparkSession
-    val live = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-    def cutN(df: DataFrame): (DataFrame, Long) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = rdd.count()
-      live += rdd
-      (spark.createDataFrame(rdd, df.schema), n)
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame =
+    Generations.scope { gen =>
+      val (und0, _) = gen.cut(edges.select(col("src"), col("dst"))
+        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")).distinct())
+      var cur = und0
+      var prev = -1L
+      var rounds = 0
+      var deg = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      var (keep, n) = gen.cut(deg.filter(col("deg") >= k).select(col("src").as("v")))
+      while (n != prev) {
+        rounds += 1
+        require(rounds <= maxRounds,
+          s"kCore: no fixpoint within $maxRounds rounds — raise maxRounds " +
+            "(and the oracle's unroll depth)")
+        prev = n
+        // no broadcast hint: the survivor set starts graph-sized — AQE
+        // downgrades to broadcast as peeling shrinks it
+        cur = gen.cut(cur
+          .join(keep, cur("src") === keep("v"), "left_semi")
+          .join(keep, cur("dst") === keep("v"), "left_semi"))._1
+        deg = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        val kn = gen.cut(deg.filter(col("deg") >= k).select(col("src").as("v")))
+        keep = kn._1; n = kn._2
+      }
+      deg.filter(col("deg") >= k)
+        .select(col("src").as("v"), col("deg").cast("bigint").as("deg"))
     }
-    val (und0, _) = cutN(edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct())
-    var cur = und0
-    var prev = -1L
-    var rounds = 0
-    var deg = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var (keep, n) = cutN(deg.filter(col("deg") >= k).select(col("src").as("v")))
-    while (n != prev) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"kCore: no fixpoint within $maxRounds rounds — raise maxRounds " +
-          "(and the oracle's unroll depth)")
-      prev = n
-      // no broadcast hint: the survivor set starts graph-sized — AQE
-      // downgrades to broadcast as peeling shrinks it
-      val (nextEdges, _) = cutN(cur
-        .join(keep, cur("src") === keep("v"), "left_semi")
-        .join(keep, cur("dst") === keep("v"), "left_semi"))
-      cur = nextEdges
-      deg = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val kn = cutN(deg.filter(col("deg") >= k).select(col("src").as("v")))
-      keep = kn._1; n = kn._2
-    }
-    val out = deg.filter(col("deg") >= k)
-      .select(col("src").as("v"), col("deg").cast("bigint").as("deg"))
-    live.dropRight(2).foreach(_.unpersist(blocking = false))
-    out
-  }
 }

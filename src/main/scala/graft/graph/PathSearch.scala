@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exec.Generations
 
 /** Graph Path Search — the GraphDB Graph-Path-Search plugin analog (the
   * 10.7 binary the reference ships, `Dockerfile:2`, exposes the
@@ -47,41 +48,6 @@ object PathSearch {
     import spark.implicits._
     Seq.empty[(Long, Long, Long, String, String, String)]
       .toDF("path_idx", "plen", "edge_idx", "start", "pred", "end")
-  }
-
-  // Cut-with-release (the bfsDepths cache-hygiene pattern): materialize
-  // each generation eagerly, unpersist superseded ones when the loop ends.
-  // `cut` returns the materialized frame AND its row count so callers can
-  // make size-aware plan choices (broadcast a small frontier) — RDD-backed
-  // frames carry no Catalyst stats, so without the explicit count every
-  // frontier join would fall back to a full shuffle of the edge view.
-  private final class Cutter(spark: org.apache.spark.sql.SparkSession) {
-    private val live =
-      collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-    private val livDf = collection.mutable.ArrayBuffer[DataFrame]()
-    def cut(df: DataFrame): (DataFrame, Long) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = rdd.count()
-      live += rdd
-      (spark.createDataFrame(rdd, df.schema), n)
-    }
-    /** Columnar Dataset cache for STATIC frames (the edge view): keeps
-      * whole-stage codegen + compact columnar storage; lineage is fine
-      * because the frame never grows per round.
-      */
-    def cache(df: DataFrame): DataFrame = {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      livDf += df
-      df
-    }
-    /** Release every RDD generation except the final `keep` snapshots,
-      * plus all columnar caches.
-      */
-    def release(keep: Int): Unit = {
-      live.dropRight(keep).foreach(_.unpersist(blocking = false))
-      livDf.foreach(_.unpersist(blocking = false))
-    }
   }
 
   /** Broadcast `df` when its known row count is frontier-sized; above the
@@ -137,7 +103,7 @@ object PathSearch {
     * dedups: forward and reversed copies can collide.
     */
   private def edgeView(edges0: DataFrame, bidirectional: Boolean,
-      c: Cutter, assumeSet: Boolean): DataFrame = {
+      gen: Generations, assumeSet: Boolean): DataFrame = {
     val base = edges0.select(col("src"), col("p"), col("dst"))
       // self-loops can never sit on a simple path
       .filter(col("src") =!= col("dst"))
@@ -147,12 +113,12 @@ object PathSearch {
     // groups — without it the hash-scattered batches all overlap and
     // every hop scans the whole cache
     if (bidirectional)
-      c.cache(base.unionAll(
+      gen.cache(base.unionAll(
         edges0.select(col("dst").as("src"), col("p"), col("src").as("dst"))
           .filter(col("src") =!= col("dst"))).distinct()
         .sortWithinPartitions("src"))
     else if (assumeSet) base
-    else c.cache(base.distinct().sortWithinPartitions("src"))
+    else gen.cache(base.distinct().sortWithinPartitions("src"))
   }
 
   /** Number qualifying paths by (length, element-wise path array) and
@@ -184,32 +150,31 @@ object PathSearch {
     require(maxLen >= 1 && maxLen <= 16,
       s"path search: maxPathLength must be in 1..16, got $maxLen")
     if (source == dest) return emptyResult(edges0)
-    val c = new Cutter(spark)
-    val edges = edgeView(edges0, bidirectional, c, assumeSet)
-    // frontier rows: (end, nodes — the cycle guard, path — nodes+preds)
-    var (frontier, fn) = c.cut(Seq((source, Seq(source), Seq(source)))
-      .toDF("end", "nodes", "path"))
-    val hits = collection.mutable.ArrayBuffer[DataFrame]()
-    var depth = 0
-    while (depth < maxLen && fn > 0) {
-      depth += 1
-      val fr = maybeBroadcast(frontier, fn, width = depth)
-      val hop = frontierEdges(edges, frontier, fn)
-      val (ext, _) = c.cut(hop.join(fr, fr("end") === hop("src"))
-        .filter(!array_contains(col("nodes"), col("dst")))
-        .select(col("dst").as("end"),
-          concat(col("nodes"), array(col("dst"))).as("nodes"),
-          concat(col("path"), array(col("p"), col("dst"))).as("path")))
-      hits += ext.filter(col("end") === lit(dest)).select(col("path"))
-      // a simple path through dest cannot return to dest — stop extending
-      val cutF = c.cut(ext.filter(col("end") =!= lit(dest)))
-      frontier = cutF._1; fn = cutF._2
+    Generations.scope { gen =>
+      val edges = edgeView(edges0, bidirectional, gen, assumeSet)
+      // frontier rows: (end, nodes — the cycle guard, path — nodes+preds)
+      var (frontier, fn) = gen.cut(Seq((source, Seq(source), Seq(source)))
+        .toDF("end", "nodes", "path"))
+      val hits = collection.mutable.ArrayBuffer[DataFrame]()
+      var depth = 0
+      while (depth < maxLen && fn > 0) {
+        depth += 1
+        val fr = maybeBroadcast(frontier, fn, width = depth)
+        val hop = frontierEdges(edges, frontier, fn)
+        val (ext, _) = gen.cut(hop.join(fr, fr("end") === hop("src"))
+          .filter(!array_contains(col("nodes"), col("dst")))
+          .select(col("dst").as("end"),
+            concat(col("nodes"), array(col("dst"))).as("nodes"),
+            concat(col("path"), array(col("p"), col("dst"))).as("path")))
+        hits += ext.filter(col("end") === lit(dest)).select(col("path"))
+        // a simple path through dest cannot return to dest — stop extending
+        val cutF = gen.cut(ext.filter(col("end") =!= lit(dest)))
+        frontier = cutF._1; fn = cutF._2
+      }
+      val all = hits.reduceOption(_.unionAll(_))
+        .getOrElse(Seq.empty[Seq[String]].toDF("path"))
+      gen.cut(explodePaths(all))._1
     }
-    val all = hits.reduceOption(_.unionAll(_))
-      .getOrElse(Seq.empty[Seq[String]].toDF("path"))
-    val (out, _) = c.cut(explodePaths(all))
-    c.release(keep = 1)
-    out
   }
 
   /** THE shortest directed path `source → dest` within `maxLen` hops —
@@ -232,37 +197,35 @@ object PathSearch {
     require(maxLen >= 1 && maxLen <= 16,
       s"path search: maxPathLength must be in 1..16, got $maxLen")
     if (source == dest) return emptyResult(edges0)
-    val c = new Cutter(spark)
-    val edges = edgeView(edges0, bidirectional, c, assumeSet)
-    var (visited, vn) = c.cut(Seq(source).toDF("v"))
-    var (frontier, fn) = c.cut(Seq((source, Seq(source))).toDF("end", "path"))
-    var result: DataFrame = null
-    var depth = 0
-    while (result == null && depth < maxLen && fn > 0) {
-      depth += 1
-      val fr = maybeBroadcast(frontier, fn, width = depth)
-      val hop = frontierEdges(edges, frontier, fn)
-      val (ext, _) = c.cut(hop.join(fr, fr("end") === hop("src"))
-        .join(maybeBroadcast(visited, vn), col("dst") === visited("v"),
-          "left_anti")
-        .select(col("dst").as("end"),
-          concat(col("path"), array(col("p"), col("dst"))).as("path")))
-      val destPath = ext.filter(col("end") === lit(dest))
-        .agg(min(col("path")).as("path")).filter(col("path").isNotNull)
-      if (!destPath.isEmpty) result = destPath
-      else {
-        val (nxt, nn) = c.cut(ext.groupBy(col("end"))
-          .agg(min(col("path")).as("path")))
-        val cutV = c.cut(visited.unionAll(nxt.select(col("end").as("v"))))
-        visited = cutV._1; vn = cutV._2
-        frontier = nxt; fn = nn
+    Generations.scope { gen =>
+      val edges = edgeView(edges0, bidirectional, gen, assumeSet)
+      var (visited, vn) = gen.cut(Seq(source).toDF("v"))
+      var (frontier, fn) = gen.cut(Seq((source, Seq(source))).toDF("end", "path"))
+      var result: DataFrame = null
+      var depth = 0
+      while (result == null && depth < maxLen && fn > 0) {
+        depth += 1
+        val fr = maybeBroadcast(frontier, fn, width = depth)
+        val hop = frontierEdges(edges, frontier, fn)
+        val (ext, _) = gen.cut(hop.join(fr, fr("end") === hop("src"))
+          .join(maybeBroadcast(visited, vn), col("dst") === visited("v"),
+            "left_anti")
+          .select(col("dst").as("end"),
+            concat(col("path"), array(col("p"), col("dst"))).as("path")))
+        val destPath = ext.filter(col("end") === lit(dest))
+          .agg(min(col("path")).as("path")).filter(col("path").isNotNull)
+        if (!destPath.isEmpty) result = destPath
+        else {
+          val (nxt, nn) = gen.cut(ext.groupBy(col("end"))
+            .agg(min(col("path")).as("path")))
+          val cutV = gen.cut(visited.unionAll(nxt.select(col("end").as("v"))))
+          visited = cutV._1; vn = cutV._2
+          frontier = nxt; fn = nn
+        }
       }
-    }
-    val out =
       if (result == null) emptyResult(edges0)
-      else c.cut(explodePaths(result))._1
-    c.release(keep = 1)
-    out
+      else gen.cut(explodePaths(result))._1
+    }
   }
 
   /** Minimum hop distance `source → dest` within `maxLen` (the

@@ -45,11 +45,11 @@ import graft.model.{Quad, Rdf, RdfTerm}
   * fixpoint is SEMI-NAIVE: iteration k joins the round-(k-1) DELTA into
   * each premise position against the full set (never full × full after
   * round 1), new facts are the anti-join against everything known, and
-  * every round's frames are lineage-cut ([[graft.paths.PropertyPaths.cut]])
-  * so no executor replays a growing DAG. Work per round ∝ |delta ⋈ …|,
-  * the Datalog textbook bound, and rounds stop at the fixpoint — the
-  * same loop discipline as [[Inference.materialize]] and the path
-  * closure.
+  * every round's frames are lineage-cut ([[graft.exec.Generations]],
+  * superseded rounds released) so no executor replays a growing DAG. Work
+  * per round ∝ |delta ⋈ …|, the Datalog textbook bound, and rounds stop at
+  * the fixpoint — the same loop discipline as [[Inference.materialize]]
+  * and the path closure.
   */
 object CustomRules {
 
@@ -542,7 +542,7 @@ object CustomRules {
     val withAxioms =
       if (ruleset.axioms.isEmpty) quads
       else quads.unionAll(graft.sources.GraphUpdate.quadsDf(spark, ruleset.axioms))
-    materializeRules(spark, withAxioms, ruleset.rules, maxIters)
+    materializeRules(withAxioms, ruleset.rules, maxIters)
   }
 
   /** Premise solutions over the full store — the rule-firing join tree
@@ -608,25 +608,25 @@ object CustomRules {
     sols.except(ok)
   }
 
-  private def materializeRules(spark: SparkSession, quads: DataFrame,
-      rules: Seq[Rule], maxIters: Int): DataFrame = {
-    val cut = (df: DataFrame) => graft.paths.PropertyPaths.cut(spark, df)
-    val all0 = cut(quads.distinct())
-    stratify(rules) match {
-      case Some(order) =>
-        var all = all0
-        order.foreach { r =>
-          fire(r, all, all, 0).reduceOption(_.unionAll(_)).foreach { d =>
-            val fresh = d.distinct()
-              .join(all, Seq("graph", "s", "p", "o"), "left_anti")
-            all = cut(all.unionAll(fresh))
+  private def materializeRules(quads: DataFrame,
+      rules: Seq[Rule], maxIters: Int): DataFrame =
+    graft.exec.Generations.scope { gen =>
+      val (all0, n0) = gen.cut(quads.distinct())
+      stratify(rules) match {
+        case Some(order) =>
+          var all = all0
+          order.foreach { r =>
+            fire(r, all, all, 0).reduceOption(_.unionAll(_)).foreach { d =>
+              val fresh = d.distinct()
+                .join(all, Seq("graph", "s", "p", "o"), "left_anti")
+              all = gen.advance(all.unionAll(fresh), all)
+            }
           }
-        }
-        all
-      case None => loop(spark, all0, all0, rules, maxIters,
-        deltaIsAll = true)
+          all
+        case None => loop(gen, all0, all0, n0, rules, maxIters,
+          deltaIsAll = true)
+      }
     }
-  }
 
   /** INCREMENTAL insert: `closed` is already a fixpoint, `added` the new
     * facts — semi-naive restarts with delta = added, so the work is
@@ -637,22 +637,24 @@ object CustomRules {
     * derived fact may lose its last support.
     */
   def materializeIncremental(spark: SparkSession, closed: DataFrame,
-      added: DataFrame, rules: Seq[Rule], maxIters: Int = 64): DataFrame = {
-    val cut = (df: DataFrame) => graft.paths.PropertyPaths.cut(spark, df)
-    val fresh = cut(added.distinct()
-      .join(closed, Seq("graph", "s", "p", "o"), "left_anti"))
-    if (fresh.isEmpty) return closed
-    val all = cut(closed.unionAll(fresh))
-    loop(spark, all, fresh, rules, maxIters, deltaIsAll = false)
-  }
+      added: DataFrame, rules: Seq[Rule], maxIters: Int = 64): DataFrame =
+    graft.exec.Generations.scope { gen =>
+      val (fresh, nFresh) = gen.cut(added.distinct()
+        .join(closed, Seq("graph", "s", "p", "o"), "left_anti"))
+      if (nFresh == 0) closed
+      else loop(gen, gen.cut(closed.unionAll(fresh))._1, fresh, nFresh,
+        rules, maxIters, deltaIsAll = false)
+    }
 
-  private def loop(spark: SparkSession, all0: DataFrame, delta0: DataFrame,
-      rules: Seq[Rule], maxIters: Int, deltaIsAll: Boolean): DataFrame = {
-    val cut = (df: DataFrame) => graft.paths.PropertyPaths.cut(spark, df)
+  /** Semi-naive rounds to the fixpoint; `delta0` has `n0` rows. */
+  private def loop(gen: graft.exec.Generations, all0: DataFrame,
+      delta0: DataFrame, n0: Long, rules: Seq[Rule], maxIters: Int,
+      deltaIsAll: Boolean): DataFrame = {
     var all = all0
     var delta = delta0
+    var nDelta = n0
     var iter = 0
-    while (iter < maxIters && !delta.isEmpty) {
+    while (iter < maxIters && nDelta > 0) {
       val derived = rules.flatMap { r =>
         // when delta == all (round 0 of a full materialize), ONE firing
         // position covers every derivation; otherwise the delta must
@@ -664,13 +666,14 @@ object CustomRules {
         case None => return all
         case Some(d) => d.distinct()
       }
-      val fresh = cut(derived.join(all, Seq("graph", "s", "p", "o"),
-        "left_anti"))
+      val (fresh, nFresh) = gen.cut(derived.join(all,
+        Seq("graph", "s", "p", "o"), "left_anti"))
+      if (nFresh > 0) all = gen.advance(all.unionAll(fresh), all, delta)
       delta = fresh
-      if (!fresh.isEmpty) all = cut(all.unionAll(fresh))
+      nDelta = nFresh
       iter += 1
     }
-    if (iter == maxIters && !delta.isEmpty)
+    if (iter == maxIters && nDelta > 0)
       throw new IllegalStateException(
         s"custom ruleset: no fixpoint within $maxIters rounds")
     all

@@ -179,9 +179,9 @@ object Inference {
     * through a global distinct again (at 100 TB a per-iteration distinct over
     * the whole fact store would dominate everything else).
     *
-    * Each iteration's output is lineage-cut (PropertyPaths.cut): the iterative
-    * union lineage otherwise grows multiplicatively and every later query over
-    * the inferred store would re-carry that whole logical plan per
+    * Each iteration's output is a [[graft.exec.Generations]] cut: the
+    * iterative union lineage otherwise grows multiplicatively and every later
+    * query over the inferred store would re-carry that whole logical plan per
     * triple-pattern scan (SURVEY §7.4 risk #4 — observed as an analyzer OOM).
     */
   /** Single-pass closure for NON-RECURSIVE vocabularies — the streaming
@@ -245,7 +245,7 @@ object Inference {
     // `cut = false` when the caller materializes the result itself
     // (mergeToStore persists each batch's union) — a cut here would
     // double-materialize every batch.
-    if (cut) graft.paths.PropertyPaths.cut(spark, out) else out
+    if (cut) graft.exec.Generations.cut(out) else out
   }
 
   /** `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
@@ -289,31 +289,34 @@ object Inference {
       return spark.createDataset(local).toDF()
     }
     val v = vocab(quads)
-    var all = graft.paths.PropertyPaths.cut(spark, quads.distinct())
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val derivedNow = applyRules(all, v, withSameAsSubst = sameAsSubst)
-      val transClosed = v.transitive.toSeq.map { p =>
-        val edges = all.filter(col("p") === p && col("o.kind") === Rdf.KindIri)
-          .select(col("s").as("src"), col("o.value").as("dst"))
-        val closed = graft.paths.PropertyPaths.closure(spark, edges)
-        // sameAs cycles (x↔y) would close reflexively; rdfsplus-optimized
-        // drops `x sameAs x` noise (true but useless). Ordinary transitive
-        // properties KEEP cycle-reflexivity (`a part+ a` is an answer).
-        val noRefl = if (p == Rdf.OwlSameAs) closed.filter(col("src") =!= col("dst"))
-        else closed
-        noRefl.select(lit(Rdf.DefaultGraph).as("graph"), col("src").as("s"),
-          lit(p).as("p"), graft.sources.DirectMapper.iriTerm(col("dst")).as("o"))
+    graft.exec.Generations.scope { gen =>
+      var all = gen.cut(quads.distinct())._1
+      var iter = 0
+      var done = false
+      while (!done && iter < maxIters) {
+        val derivedNow = applyRules(all, v, withSameAsSubst = sameAsSubst)
+        val transClosed = v.transitive.toSeq.map { p =>
+          val edges = all.filter(col("p") === p && col("o.kind") === Rdf.KindIri)
+            .select(col("s").as("src"), col("o.value").as("dst"))
+          val closed = gen.adopt(graft.paths.PropertyPaths.closure(spark, edges))
+          // sameAs cycles (x↔y) would close reflexively; rdfsplus-optimized
+          // drops `x sameAs x` noise (true but useless). Ordinary transitive
+          // properties KEEP cycle-reflexivity (`a part+ a` is an answer).
+          val noRefl = if (p == Rdf.OwlSameAs) closed.filter(col("src") =!= col("dst"))
+          else closed
+          noRefl.select(lit(Rdf.DefaultGraph).as("graph"), col("src").as("s"),
+            lit(p).as("p"), graft.sources.DirectMapper.iriTerm(col("dst")).as("o"))
+        }
+        val derived = (derivedNow ++ transClosed).reduce(_.unionAll(_)).distinct()
+        val (newFacts, nNew) =
+          gen.cut(derived.join(all, Seq("graph", "s", "p", "o"), "left_anti"))
+        // `derived` reads the old store and this round's adopted closures
+        if (nNew == 0) done = true
+        else all = gen.advance(all.unionAll(newFacts), derived, newFacts)
+        iter += 1
       }
-      val derived = (derivedNow ++ transClosed).reduce(_.unionAll(_)).distinct()
-      val newFacts = graft.paths.PropertyPaths.cut(spark,
-        derived.join(all, Seq("graph", "s", "p", "o"), "left_anti"))
-      if (newFacts.count() == 0) done = true
-      else all = graft.paths.PropertyPaths.cut(spark, all.unionAll(newFacts))
-      iter += 1
+      all
     }
-    all
   }
 
   /** Driver-local mirror of the distributed fixpoint — the SAME rule set,

@@ -2,8 +2,8 @@ package graft.paths
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.algebra._
+import graft.exec.Generations
 import graft.model.Rdf
 
 /** SPARQL 1.1 property paths (SURVEY §2.9 G3-G6).
@@ -52,30 +52,21 @@ object PropertyPaths {
     case PZeroOrOne(step) => PathZeroOrOneOp(s, step, o, graph)
   }
 
-  /** Transitive closure of an edge set (`src`,`dst` columns of any equatable
-    * type — strings or term structs) — semi-naive: join only the frontier
-    * with the edges each round.
-    */
-  /** Cut the logical-plan lineage: materialize to a persisted RDD and re-wrap
-    * as a LogicalRDD leaf. A persist-only loop re-carries every previous
-    * iteration's plan into each new join (analyzer blow-up at depth);
-    * `localCheckpoint` would do the same cut but trips an AQE attribute-
-    * resolution bug ("key not found: …#N") on multi-partition plans.
-    */
-  def cut(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // eager materialization
-    spark.createDataFrame(rdd, df.schema)
-  }
-
-  /** Pairs below this count are broadcast in the closure joins: the RDD
-    * re-wrap in [[cut]] drops partitioning info, so a shuffle join would
+  /** Pairs below this count are broadcast in the closure joins: a cut
+    * frame carries no partitioning info, so a shuffle join would
     * re-shuffle BOTH sides every iteration. Most real edge sets (ontology
     * hierarchies, location forests) are far below it; at/above it the loop
     * falls back to shuffle joins, which is the right plan for huge graphs.
     */
   private val BroadcastPairLimit = 1000000L
 
+  /** Transitive closure of an edge set (`src`,`dst` columns of any equatable
+    * type — strings or term structs) — semi-naive: join only the frontier
+    * with the edges each round. Each round's frontier and accumulator are
+    * [[graft.exec.Generations]] cuts; superseded ones are released as their
+    * successors materialize, and the returned accumulator stays pinned
+    * until the caller drops it.
+    */
   def closure(spark: SparkSession, edges0: DataFrame, maxIters: Int = 30,
       withG: Boolean = false): DataFrame = {
     // `withG`: edges carry a `g` column (GRAPH ?g scope) and the closure is
@@ -88,49 +79,35 @@ object PropertyPaths {
         .select(col("src.g").as("g"), col("src.src").as("src"),
           col("dst.dst").as("dst"))
     }
-    // cut + handle, so superseded generations can be RELEASED: each round
-    // unpersists the previous frontier/accumulator once its successor is
-    // materialized (the GraphX-style persist cascade). At most three cached
-    // RDDs are live at any moment (edges, current all, current frontier);
-    // the returned accumulator keeps its own — callers consume and drop it.
-    def cutR(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-    val (edges, edgesRdd) = cutR(edges0.select("src", "dst").distinct())
-    val eCount = edges.count()
-    val e = if (eCount <= BroadcastPairLimit) broadcast(edges) else edges
-    var all = edges
-    var allRdd = edgesRdd
-    var allCount = eCount
-    var frontierRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    var frontier = edges
-    var iter = 0
-    var done = eCount == 0
-    while (!done && iter < maxIters) {
-      val next = frontier.alias("f")
-        .join(e.alias("e"), col("f.dst") === col("e.src"))
-        .select(col("f.src").as("src"), col("e.dst").as("dst"))
-        .distinct()
-      val allB = if (allCount <= BroadcastPairLimit) broadcast(all) else all
-      val (newPairs, npRdd) = cutR(next.join(allB, Seq("src", "dst"), "left_anti"))
-      frontierRdd.foreach(_.unpersist(blocking = false))
-      frontierRdd = Some(npRdd)
-      val npCount = newPairs.count()
-      if (npCount == 0) done = true
-      else {
-        val (all2, all2Rdd) = cutR(all.unionAll(newPairs))
-        if (allRdd ne edgesRdd) allRdd.unpersist(blocking = false)
-        all = all2; allRdd = all2Rdd
-        allCount += npCount
+    Generations.scope { gen =>
+      val (edges, eCount) = gen.cut(edges0.select("src", "dst").distinct())
+      val e = if (eCount <= BroadcastPairLimit) broadcast(edges) else edges
+      var all = edges
+      var allCount = eCount
+      var frontier = edges
+      var iter = 0
+      var done = eCount == 0
+      while (!done && iter < maxIters) {
+        val next = frontier.alias("f")
+          .join(e.alias("e"), col("f.dst") === col("e.src"))
+          .select(col("f.src").as("src"), col("e.dst").as("dst"))
+          .distinct()
+        val allB = if (allCount <= BroadcastPairLimit) broadcast(all) else all
+        val (newPairs, npCount) =
+          gen.cut(next.join(allB, Seq("src", "dst"), "left_anti"))
+        if (frontier ne edges) gen.release(frontier)
         frontier = newPairs
+        if (npCount == 0) done = true
+        else {
+          val all2 = gen.cut(all.unionAll(newPairs))._1
+          if (all ne edges) gen.release(all)
+          all = all2
+          allCount += npCount
+        }
+        iter += 1
       }
-      iter += 1
+      all
     }
-    if (allRdd ne edgesRdd) edgesRdd.unpersist(blocking = false)
-    frontierRdd.foreach(r => if (r ne allRdd) r.unpersist(blocking = false))
-    all
   }
 
   /** Conf key selecting the zero-length-path domain: `incident` (default —

@@ -221,25 +221,19 @@ object GraphUpdate {
   private val CutEvery = 8
 
   /** Apply a full SPARQL Update request (text) to a quad snapshot. Long
-    * `;`-chained requests get a lineage cut every [[CutEvery]] ops (the
-    * [[graft.paths.PropertyPaths.cut]] RDD re-wrap); the previous cut's RDD
-    * is released as soon as the next materializes, so at most ONE cached RDD
-    * is live per request — and none at all for short requests.
+    * `;`-chained requests get a [[graft.exec.Generations]] lineage cut every
+    * [[CutEvery]] ops; the previous cut is released as soon as the next
+    * materializes, so at most ONE cached RDD is live per request — and none
+    * at all for short requests.
     */
   def update(store: DataFrame, text: String,
-      decorate: GraphCatalog => GraphCatalog = identity): DataFrame = {
-    val spark = store.sparkSession
-    var prevCut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    graft.parser.SparqlParser.parseUpdate(text).zipWithIndex.foldLeft(store) {
-      case (s, (f, i)) =>
-        val next = applyUpdate(s, f, decorate = decorate)
-        if ((i + 1) % CutEvery == 0) {
-          val rdd = next.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          rdd.count() // eager: later snapshots build on rows, not the plan
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = Some(rdd)
-          spark.createDataFrame(rdd, next.schema)
-        } else next
+      decorate: GraphCatalog => GraphCatalog = identity): DataFrame =
+    graft.exec.Generations.scope { gen =>
+      graft.parser.SparqlParser.parseUpdate(text).zipWithIndex.foldLeft(store) {
+        case (s, (f, i)) =>
+          val next = applyUpdate(s, f, decorate = decorate)
+          // `next` reads the previous cut
+          if ((i + 1) % CutEvery == 0) gen.advance(next, next) else next
+      }
     }
-  }
 }

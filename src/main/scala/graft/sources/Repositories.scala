@@ -342,7 +342,7 @@ final class Repositories(spark: SparkSession) {
     cat.registerPseudoGraph(Rdf.OntoExplicit, () => explicitQ())
     cat.registerPseudoGraph(Rdf.OntoImplicit,
       () => r.implicitV.getOrElse {
-        val v = graft.paths.PropertyPaths.cut(spark,
+        val v = graft.exec.Generations.cut(
           quads(id).join(explicitQ(), Seq("graph", "s", "p", "o"),
             "left_anti"))
         r.implicitV = Some(v)

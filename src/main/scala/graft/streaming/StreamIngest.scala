@@ -221,26 +221,22 @@ object StreamIngest {
     */
   def mergeToStore(spark: SparkSession, quadStream: DataFrame,
       initial: DataFrame,
-      inferDelta: DataFrame => DataFrame = identity): DataFrame = {
-    val keys = Seq("graph", "s", "p", "o")
-    var store = initial
-    var prevCut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    val q = quadStream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val delta = inferDelta(batch.dropDuplicates(keys))
-        val fresh = delta.join(store, keys, "left_anti")
-        val next = store.unionByName(fresh)
-        val rdd = next.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count() // eager: the next batch builds on rows, not the plan
-        prevCut.foreach(_.unpersist(blocking = false))
-        prevCut = Some(rdd)
-        store = spark.createDataFrame(rdd, next.schema)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    store
-  }
+      inferDelta: DataFrame => DataFrame = identity): DataFrame =
+    graft.exec.Generations.scope { gen =>
+      val keys = Seq("graph", "s", "p", "o")
+      var store = initial
+      val q = quadStream.writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val delta = inferDelta(batch.dropDuplicates(keys))
+          val fresh = delta.join(store, keys, "left_anti")
+          // eager: the next batch builds on rows, not the plan
+          store = gen.advance(store.unionByName(fresh), store)
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      store
+    }
 
   /** Continuous merge under a CUSTOM RULESET (r14 cont. — the streaming
     * twin of `Repositories.updateCustom`'s additive path): each arriving
@@ -255,28 +251,24 @@ object StreamIngest {
     */
   def mergeWithRules(spark: SparkSession, quadStream: DataFrame,
       initial: DataFrame,
-      rules: Seq[graft.inference.CustomRules.Rule]): DataFrame = {
-    var prevCut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    def cut(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      prevCut.foreach(_.unpersist(blocking = false))
-      prevCut = Some(rdd)
-      spark.createDataFrame(rdd, df.schema)
+      rules: Seq[graft.inference.CustomRules.Rule]): DataFrame =
+    graft.exec.Generations.scope { gen =>
+      // both closers return materialized generations: adopt, don't re-cut
+      var closed = gen.adopt(graft.inference.CustomRules.materialize(
+        spark, initial, rules))
+      val q = quadStream.writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val next = gen.adopt(graft.inference.CustomRules.materializeIncremental(
+            spark, closed, batch.dropDuplicates(Seq("graph", "s", "p", "o")),
+            rules))
+          if (next ne closed) gen.release(closed)
+          closed = next
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      closed
     }
-    var closed = cut(graft.inference.CustomRules.materialize(
-      spark, initial, rules))
-    val q = quadStream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        closed = cut(graft.inference.CustomRules.materializeIncremental(
-          spark, closed, batch.dropDuplicates(Seq("graph", "s", "p", "o")),
-          rules))
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    closed
-  }
 
   /** DELETE-AWARE continuous merge — the streaming mirror of
     * `Repositories.update`'s asserted/closed split (S4 × S6): the stream
@@ -296,41 +288,34 @@ object StreamIngest {
   def mergeWithRetractions(spark: SparkSession, quadStream: DataFrame,
       initial: DataFrame,
       inferDelta: DataFrame => DataFrame = identity,
-      closeAll: DataFrame => DataFrame = identity): DataFrame = {
-    val keys = Seq("graph", "s", "p", "o")
-    val cuts = scala.collection.mutable.Map[String,
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-    def cut(name: String, df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count() // eager: the next batch builds on rows, not the plan
-      cuts.remove(name).foreach(_.unpersist(blocking = false))
-      cuts(name) = rdd
-      spark.createDataFrame(rdd, df.schema)
+      closeAll: DataFrame => DataFrame = identity): DataFrame =
+    graft.exec.Generations.scope { gen =>
+      val keys = Seq("graph", "s", "p", "o")
+      var asserted = initial
+      var closed = closeAll(initial)
+      val q = quadStream.writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val b = batch.dropDuplicates(keys :+ "tombstone")
+          val dels = b.filter(col("tombstone")).select(keys.map(col): _*)
+          val adds = b.filter(!col("tombstone")).select(keys.map(col): _*)
+          val hasDels = !dels.isEmpty
+          val remaining =
+            if (hasDels) asserted.join(dels, keys, "left_anti") else asserted
+          // eager: the next batch builds on rows, not the plan
+          asserted = gen.advance(
+            remaining.unionByName(adds.join(remaining, keys, "left_anti")),
+            asserted)
+          closed = gen.advance(
+            if (hasDels) closeAll(asserted)
+            else closed.unionByName(
+              inferDelta(adds).join(closed, keys, "left_anti")),
+            closed)
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      closed
     }
-    var asserted = initial
-    var closed = closeAll(initial)
-    val q = quadStream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.dropDuplicates(keys :+ "tombstone")
-        val dels = b.filter(col("tombstone")).select(keys.map(col): _*)
-        val adds = b.filter(!col("tombstone")).select(keys.map(col): _*)
-        val hasDels = !dels.isEmpty
-        val remaining =
-          if (hasDels) asserted.join(dels, keys, "left_anti") else asserted
-        asserted = cut("asserted",
-          remaining.unionByName(adds.join(remaining, keys, "left_anti")))
-        closed =
-          if (hasDels) cut("closed", closeAll(asserted))
-          else {
-            val fresh = inferDelta(adds).join(closed, keys, "left_anti")
-            cut("closed", closed.unionByName(fresh))
-          }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    closed
-  }
 
   def documentsSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
