@@ -22,21 +22,9 @@ import graft.sources.{GraphCatalog, GraphUpdate}
 final class Engine(val catalog: GraphCatalog,
     val queryTimeoutSec: Option[Int] = None) {
   val compiler = new Compiler(catalog)
-  // Custom Catalyst rule: dateTime-shadow range filters rewrite onto the
-  // raw timestamp column so they PUSH to the parquet scan (idempotent
-  // registration per session). Catalyst's own conditional simplifiers
-  // join the fixpoint batch: the rewritten comparison sits inside the
-  // SPARQL error-guard `CASE WHEN isnotnull(shadow) THEN cmp ELSE false`,
-  // which they collapse to a conjunction whose comparison conjunct is
-  // then translatable by the datasource strategy.
-  locally {
-    val opts = catalog.spark.experimental.extraOptimizations
-    if (!opts.contains(graft.plans.SargableTimestamps))
-      catalog.spark.experimental.extraOptimizations = opts ++ Seq(
-        graft.plans.SargableTimestamps,
-        org.apache.spark.sql.catalyst.optimizer.SimplifyConditionals,
-        org.apache.spark.sql.catalyst.optimizer.BooleanSimplification)
-  }
+  // Custom Catalyst rules: dateTime-shadow range filters and constant-IRI
+  // comparisons rewrite onto raw columns so they PUSH to the parquet scan.
+  graft.plans.OptimizerRules.setup(catalog.spark)
 
   /** Run an eager block under this engine's query timeout (no-op if None). */
   def runGuarded[T](body: => T): T =
@@ -535,31 +523,21 @@ final class Engine(val catalog: GraphCatalog,
 }
 
 object Engine {
-  /** Sink-side row stream for the result serializers: `toLocalIterator`
-    * holds ONE partition on the driver at a time (a `collect()` would pin
-    * the whole result), and `spark.graft.sink.maxRows` (0 = unlimited)
-    * fails a pathological result with an explicit error instead of a
-    * driver OOM. The reference's HTTP responses are likewise driver-sized,
-    * but its server streams them; this is the Spark equivalent.
+  /** Result rows for the serializers, fetched by ONE job. Every caller
+    * builds its whole document in memory, so streaming partitions one job
+    * at a time (`toLocalIterator`) bought nothing but a job per partition.
+    * `spark.graft.sink.maxRows` (0 = unlimited) bounds the fetch at
+    * cap + 1 rows and fails a pathological result with an explicit error
+    * instead of a driver OOM.
     */
   def sinkRows[T](ds: org.apache.spark.sql.Dataset[T]): Iterator[T] = {
     val cap = ds.sparkSession.conf.get("spark.graft.sink.maxRows", "0").toLong
-    val it = ds.toLocalIterator()
-    val base: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
-    }
-    if (cap <= 0) base
-    else new Iterator[T] {
-      private var seen = 0L
-      def hasNext: Boolean = base.hasNext
-      def next(): T = {
-        seen += 1
-        if (seen > cap) throw new IllegalStateException(
-          s"result exceeds spark.graft.sink.maxRows=$cap rows; " +
-            "raise the cap or page the query with LIMIT/OFFSET")
-        base.next()
-      }
-    }
+    val rows =
+      if (cap > 0 && cap < Int.MaxValue) ds.limit(cap.toInt + 1).collect()
+      else ds.collect()
+    if (cap > 0 && rows.length > cap) throw new IllegalStateException(
+      s"result exceeds spark.graft.sink.maxRows=$cap rows; " +
+        "raise the cap or page the query with LIMIT/OFFSET")
+    rows.iterator
   }
 }

@@ -1188,7 +1188,7 @@ final class Compiler(val catalog: GraphCatalog) {
           E.iriTerm(concat(lit("urn:graft:proof:"), col("sol"))))
         case _ => () // a constant ?sol never matches the fresh ids
       }
-      conds.foreach(c => df = df.filter(c))
+      conds.reduceOption(_ && _).foreach(c => df = df.filter(c))
       val out = df.select(bind.toSeq.sortBy(_._1)
         .map { case (n, c) => c.as(n) }: _*)
       Sol(out, bind.keySet, Set.empty)
@@ -1244,13 +1244,14 @@ final class Compiler(val catalog: GraphCatalog) {
       if (proofPs.isEmpty) (Nil: Seq[Sol], patternsQ)
       else compileProof(proofPs, patternsQ)
     val proofSols = proofSols0.map(s => (s, 100.0))
-    // Star groups: same subject var, constant predicates of one table, default
-    // graph → one property-table scan per group (SURVEY §4.3).
+    // Star groups: same subject (a variable, or a constant IRI of the
+    // predicate's own table), constant predicates of one table, default
+    // graph → one property-table scan per group (SURVEY §4.3); groups
+    // linked by key variables merge into one join on raw keys.
     val (starrable, rest) = patterns.partition(p => starTable(p).isDefined)
-    val groups = starrable.groupBy(p => (p.s.asInstanceOf[V].name, starTable(p).get))
-    val starSols = groups.toSeq.sortBy(_._1).map { case ((sv, t), pats) =>
-      (compileStar(sv, t, pats), pats.map(estimate).min / pats.size)
-    }
+    val groups = starrable.groupBy(p => (p.s, starTable(p).get)).toSeq
+      .sortBy { case ((s, t), _) => (s.toString, t) }
+    val starSols = mergeStars(groups.map { case ((s, t), pats) => starOf(s, t, pats) })
     val patSols = rest.map(tp => (compilePattern(tp), estimate(tp)))
     val all = starSols ++ patSols ++ rankSols ++ lucSols ++ simSols ++
       proofSols
@@ -1306,53 +1307,144 @@ final class Compiler(val catalog: GraphCatalog) {
     base * sSel * oSel
   }
 
-  /** Table this pattern can star-collapse onto, if any. */
+  /** Table this pattern can star-collapse onto, if any. A constant subject
+    * qualifies only when it is an IRI of that same table.
+    */
   private def starTable(tp: TriplePattern): Option[String] = tp match {
-    case TriplePattern(V(_), I(p), o, I(g)) =>
+    case TriplePattern(s @ (V(_) | I(_)), I(p), o, I(g)) =>
       val t =
         if (p == Rdf.RdfType) o match {
           case I(cls) => catalog.tableForClass(cls)
           case _ => None // `?s a ?t` over all tables — not a star member
         }
         else catalog.columnForPredicate(p).map(_._1)
-      t.filter(name => catalog.table(name).exists(_._2.graph == g))
+      t.filter { name =>
+        catalog.table(name).exists(_._2.graph == g) && (s match {
+          case I(iri) => iri.startsWith(s"${DirectMapper.Base}/$name/")
+          case _ => true
+        })
+      }
     case _ => None
   }
 
-  private def compileStar(sv: String, table: String, pats: Seq[TriplePattern]): Sol = {
+  private def starOf(s: PTerm, table: String, pats: Seq[TriplePattern]): Star = {
     val (tdf, spec) = catalog.table(table).get
-    var df = tdf
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    def integral(c: String) = tdf.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
     var conds = List.empty[Column]
-    var bind = Map[String, Column](sv -> E.iriTerm(DirectMapper.subjectOf(spec)))
+    var terms = Map.empty[String, (String => Column) => Column]
+    var reads = Vector.empty[String]
+    var keys = Map.empty[String, (String, String)]
+    def bind(n: String, term: (String => Column) => Column, cols: Seq[String],
+        key: Option[(String, String)]): Unit =
+      terms.get(n) match {
+        case Some(t) => conds ::= (t(col) === term(col))
+        case None =>
+          terms += (n -> term)
+          reads ++= cols.filterNot(reads.contains)
+          key.foreach(k => keys += (n -> k))
+      }
+    (s: @unchecked) match { // starTable admits only these two
+      case V(sv) =>
+        val key = spec.pks match {
+          case Seq(pk) if integral(pk) => Some((table, pk))
+          case _ => None
+        }
+        bind(sv, r => E.iriTerm(DirectMapper.entityIri(table, spec.pks.map(r))),
+          spec.pks, key)
+      case I(iri) => conds ::= (DirectMapper.subjectOf(spec) === iri)
+    }
     pats.foreach { tp =>
       val I(p) = tp.p: @unchecked
       if (p == Rdf.RdfType) tp.o match {
         case I(_) => () // class membership: every row of this table qualifies
-        case V(n) => bind += (n -> E.iriTerm(lit(DirectMapper.classIri(table))))
+        case V(n) => bind(n, _ => E.iriTerm(lit(DirectMapper.classIri(table))), Nil, None)
         case L(_) => conds ::= lit(false)
       } else {
         val c = catalog.columnForPredicate(p).get._3
-        val term = spec.fks.get(c) match {
-          case Some(target) => DirectMapper.iriTerm(DirectMapper.entityIri(target, col(c)))
-          case None => DirectMapper.literalTerm(col(c), tdf.schema(c).dataType)
+        val fk = spec.fks.get(c)
+        val term: (String => Column) => Column = r => fk match {
+          case Some(target) => DirectMapper.iriTerm(DirectMapper.entityIri(target, r(c)))
+          case None => DirectMapper.literalTerm(r(c), tdf.schema(c).dataType)
         }
         conds ::= col(c).isNotNull // absent cell = no triple = pattern fails
         tp.o match {
-          case V(n) if bind.contains(n) => conds ::= (bind(n) === term)
-          case V(n) => bind += (n -> term)
-          case I(iri) => // FK-backed object: compare on the raw key (pushdown-friendly)
-            spec.fks.get(c) match {
-              case Some(target) if iri.startsWith(s"${DirectMapper.Base}/$target/") =>
-                conds ::= (col(c).cast("string") === iri.stripPrefix(s"${DirectMapper.Base}/$target/"))
-              case _ => conds ::= (term === E.termLit(RdfTerm.iri(iri)))
-            }
+          case V(n) => bind(n, term, Seq(c), fk.filter(_ => integral(c)).map((_, c)))
+          // an FK object compares its IRI, which SargableIris turns into a
+          // key comparison; a literal cell never equals an IRI
+          case I(iri) => conds ::= fk.fold(lit(false))(t =>
+            DirectMapper.entityIri(t, col(c)) === iri)
           case L(t) => conds ::= t.num.fold(col(c).cast("string") === t.value)(n => col(c) === n)
         }
       }
     }
-    conds.foreach(c => df = df.filter(c))
-    val out = df.select(bind.toSeq.sortBy(_._1).map { case (n, c) => c.as(n) }: _*)
-    Sol(out, bind.keySet, Set.empty)
+    Star(conds.reduceOption(_ && _).fold(tdf)(tdf.filter), reads, terms, keys,
+      pats.map(estimate).min / pats.size)
+  }
+
+  /** Merge star groups linked by key variables, then lift each merged
+    * component to one Sol. A group links to a component when they share a
+    * variable and every shared variable is a key of the same table on both
+    * sides (an FK column and the pk subject it references, or two FKs into
+    * one table). The link joins on the raw keys, which is exact: two IRIs
+    * of one table are equal iff their integral keys are, and an FK key
+    * carries its `isNotNull` guard. Merging starts from the most selective
+    * group and adds the most selective linked group next, so dimension
+    * tables stay broadcast.
+    */
+  private def mergeStars(stars: Seq[Star]): Seq[(Sol, Double)] = {
+    var pending = stars.zipWithIndex.sortBy { case (st, i) => (st.est, i) }.map(_._1)
+    val out = Seq.newBuilder[(Sol, Double)]
+    while (pending.nonEmpty) {
+      var comp = Vector(pending.head)
+      pending = pending.tail
+      var keys = comp.head.keys
+      def links(st: Star): Boolean = {
+        val shared = comp.flatMap(_.vars).toSet.intersect(st.vars)
+        shared.nonEmpty && shared.forall(v =>
+          keys.get(v).exists(k => st.keys.get(v).exists(_._1 == k._1)))
+      }
+      var next = pending.find(links)
+      while (next.isDefined) {
+        comp :+= next.get
+        keys = next.get.keys ++ keys
+        pending = pending.filterNot(_ eq next.get)
+        next = pending.find(links)
+      }
+      out += ((liftStars(comp), comp.head.est))
+    }
+    out.result()
+  }
+
+  /** Join a component's groups on their raw keys and build every term in
+    * one final projection. Only a merge renames columns, and only the ones
+    * a group reads.
+    */
+  private def liftStars(comp: Seq[Star]): Sol = {
+    val vars = comp.flatMap(_.vars).distinct.sorted
+    val (sides, res) =
+      if (comp.size == 1) (Seq(comp.head.df), Seq((c: String) => col(c)))
+      else comp.zipWithIndex.map { case (st, i) =>
+        (st.df.select(st.reads.map(c => col(c).as(s"__s${i}_$c")): _*),
+          (c: String) => col(s"__s${i}_$c"))
+      }.unzip
+    var df = sides.head
+    var keys = comp.head.keys.map { case (v, (_, c)) => v -> res.head(c) }
+    comp.indices.tail.foreach { i =>
+      val st = comp(i)
+      val on = st.vars.intersect(keys.keySet).toSeq.sorted
+        .map(v => keys(v) === res(i)(st.keys(v)._2)).reduce(_ && _)
+      df = df.join(sides(i), on, "inner")
+      keys = st.keys.map { case (v, (_, c)) => v -> res(i)(c) } ++ keys
+    }
+    val lifted = vars.map { v =>
+      val i = comp.indexWhere(_.vars(v))
+      comp(i).terms(v)(res(i)).as(v)
+    }
+    Sol(df.select(lifted: _*), vars.toSet, Set.empty)
   }
 
   /** One triple pattern over the routed quad source. A constant graph
@@ -1415,7 +1507,7 @@ final class Compiler(val catalog: GraphCatalog) {
       case V(n) if bind.contains(n) => conds ::= (bind(n) === col("o"))
       case V(n) => bind += (n -> col("o"))
     }
-    conds.foreach(c => df = df.filter(c))
+    conds.reduceOption(_ && _).foreach(c => df = df.filter(c))
     val out = df.select(bind.toSeq.sortBy(_._1).map { case (n, c) => c.as(n) }: _*)
     Sol(out, bind.keySet, Set.empty)
   }
@@ -1507,6 +1599,20 @@ object Compiler {
     * explaining a federated query never runs jobs.
     */
   private[graft] val planOnly = new scala.util.DynamicVariable[Boolean](false)
+
+  /** One star group, compiled on its raw table: the group's conditions
+    * filter the table once; each bound variable's term is a function of a
+    * column resolver, so a merge can rename the columns it reads and the
+    * final projection builds the IRI strings. `keys` maps a variable to the
+    * table its IRI names and the raw integral column holding the key — a
+    * subject's single-column pk or an FK column.
+    */
+  private final case class Star(df: DataFrame, reads: Seq[String],
+      terms: Map[String, (String => Column) => Column],
+      keys: Map[String, (String, String)], est: Double) {
+    def vars: Set[String] = terms.keySet
+  }
+
   private def ren(n: String) = s"__r_$n"
   private def renameAll(df: DataFrame, vars: Set[String]): DataFrame =
     df.select(vars.toSeq.sorted.map(v => df(v).as(ren(v))): _*)

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{DoubleType, TimestampNTZType, TimestampType}
   * an equality or >= near the boundary.) The NTZ unwrap applies only under
   * a UTC session zone (where the NTZ→TZ cast is the identity on the micros
   * line; the engine pins UTC at every entry point). Registered on
-  * `spark.experimental.extraOptimizations` by [[graft.Engine]].
+  * `spark.experimental.extraOptimizations` by [[OptimizerRules.setup]].
   */
 object SargableTimestamps extends Rule[LogicalPlan] {
 

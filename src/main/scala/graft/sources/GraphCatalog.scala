@@ -520,11 +520,8 @@ object GraphCatalog {
     // r19: pair the scan widen below with the rule that removes it again
     // under pure cheap aggregates (the r18 "widen tax": a1/a2/a3 paid a
     // full-row exchange ahead of a near-free 1-task partial agg). The rule
-    // is a session-level optimizer extension; guard against duplicate
-    // registration across repeated catalog builds in one session.
-    if (!spark.experimental.extraOptimizations.contains(ElideWidenUnderAgg))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ElideWidenUnderAgg
+    // is a session-level optimizer extension, registered once per session.
+    graft.plans.OptimizerRules.setup(spark, Seq(ElideWidenUnderAgg))
     val cat = new GraphCatalog(spark)
     DirectMapper.testdataSpecs.toSeq.sortBy(_._1).foreach { case (t, spec) =>
       scala.util.Try(spark.read.parquet(s"$sfDir/$t.parquet"))

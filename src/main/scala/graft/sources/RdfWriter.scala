@@ -279,7 +279,7 @@ object RdfWriter {
 
   /** Serialize to a single in-memory document string (test/driver-sized
     * graphs only — this is the sink boundary, like `Engine.selectJson`).
-    * Streams partition-at-a-time and honours `spark.graft.sink.maxRows`
+    * Fetched by one job and bounded by `spark.graft.sink.maxRows`
     * ([[graft.Engine.sinkRows]]).
     */
   def document(lines: DataFrame): String = {

@@ -219,4 +219,91 @@ class CompilerSpec extends AnyFunSuite {
       s"id probe must lead:\n$plan")
     assert(sol.df.count() == 1) // i=43: 43%3=1 → c1, so the join hits
   }
+
+  // IRI template inversion (SargableIris + bound-subject stars): a bound
+  // IRI becomes a key predicate only when its text is the canonical,
+  // in-range key of that table; every other IRI keeps the string compare
+  // and matches nothing, exactly as the string compare always did.
+  private def iriRows(q: String): (Set[Seq[String]], String) = {
+    val df = new Engine(catalog).select(q)
+    val rows = df.collect().map(r => r.toSeq.map {
+      case t: org.apache.spark.sql.Row => t.getString(1)
+      case null => null
+    }).toSet
+    (rows, df.queryExecution.optimizedPlan.toString)
+  }
+
+  test("bound canonical IRIs compile to key predicates and answer as the " +
+      "table does") {
+    val (rows, plan) = iriRows("SELECT ?n WHERE { <urn:graft/customer/7> " +
+      "<urn:graft/customer#c_name> ?n }")
+    val expect = spark.read.parquet(s"$sf/customer.parquet")
+      .filter("c_custkey = 7").select("c_name").collect()
+      .map(r => Seq(r.getString(0))).toSet
+    assert(rows == expect && rows.size == 1)
+    assert(!plan.contains("urn:graft/customer/7"), plan)
+    val (fkRows, fkPlan) = iriRows("SELECT ?o WHERE { ?o " +
+      "<urn:graft/orders#o_custkey> <urn:graft/customer/7> }")
+    val fkExpect = spark.read.parquet(s"$sf/orders.parquet")
+      .filter("o_custkey = 7").select("o_orderkey").collect()
+      .map(r => Seq(s"urn:graft/orders/${r.getLong(0)}")).toSet
+    assert(fkRows == fkExpect && fkRows.nonEmpty)
+    assert(!fkPlan.contains("urn:graft/customer/7"), fkPlan)
+  }
+
+  Seq(
+    "leading zero" -> Seq(
+      "SELECT ?n WHERE { <urn:graft/customer/007> <urn:graft/customer#c_name> ?n }",
+      "SELECT ?o WHERE { ?o <urn:graft/orders#o_custkey> <urn:graft/customer/007> }"),
+    "explicit sign" -> Seq(
+      "SELECT ?n WHERE { <urn:graft/customer/+7> <urn:graft/customer#c_name> ?n }",
+      "SELECT ?o WHERE { ?o <urn:graft/orders#o_custkey> <urn:graft/customer/+7> }"),
+    // 2^32 + 7: an int truncation would read it as nation 7
+    "out-of-int-range nation key" -> Seq(
+      "SELECT ?nn WHERE { <urn:graft/nation/4294967303> <urn:graft/nation#n_name> ?nn }",
+      "SELECT ?c WHERE { ?c <urn:graft/customer#c_nationkey> <urn:graft/nation/4294967303> }"),
+    // lineitem's key is (l_orderkey, l_linenumber): a 1-part IRI names no row
+    "1-part lineitem IRI" -> Seq(
+      "SELECT ?q WHERE { <urn:graft/lineitem/7> <urn:graft/lineitem#l_quantity> ?q }"),
+    "IRI of another table" -> Seq(
+      "SELECT ?n WHERE { <urn:graft/orders/7> <urn:graft/customer#c_name> ?n }",
+      "SELECT ?o WHERE { ?o <urn:graft/orders#o_custkey> <urn:graft/supplier/7> }")
+  ).foreach { case (name, qs) =>
+    test(s"IRI guard ($name): the string comparison stays and matches nothing") {
+      qs.foreach { q =>
+        val iri = "<(urn:graft/[^>]*)>".r.findAllMatchIn(q).map(_.group(1))
+          .filterNot(_.contains("#")).next()
+        val (rows, plan) = iriRows(q)
+        assert(rows == Set.empty[Seq[String]], q)
+        assert(plan.contains(iri), s"$q\n$plan")
+      }
+    }
+  }
+
+  test("star groups linked by key variables merge into raw-key joins with " +
+      "the same answer as the table join") {
+    import org.apache.spark.sql.functions.col
+    def t(n: String) = spark.read.parquet(s"$sf/$n.parquet")
+    // FK→PK chain plus an FK→FK link (customer and supplier share ?n)
+    val (rows, _) = iriRows(
+      """SELECT ?cn ?sn ?nn WHERE {
+        |  ?c <urn:graft/customer#c_name> ?cn ;
+        |     <urn:graft/customer#c_nationkey> ?n .
+        |  ?s <urn:graft/supplier#s_name> ?sn ;
+        |     <urn:graft/supplier#s_nationkey> ?n .
+        |  ?n <urn:graft/nation#n_name> ?nn }""".stripMargin)
+    val expect = t("customer").join(t("supplier"), col("c_nationkey") === col("s_nationkey"))
+      .join(t("nation"), col("c_nationkey") === col("n_nationkey"))
+      .select("c_name", "s_name", "n_name").collect()
+      .map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(rows == expect && rows.nonEmpty)
+    // one table on both sides of an FK→FK link: columns are renamed apart
+    val pairs = new Engine(catalog).select(
+      """SELECT ?a ?b WHERE {
+        |  ?a <urn:graft/customer#c_nationkey> ?n .
+        |  ?b <urn:graft/customer#c_nationkey> ?n }""".stripMargin).count()
+    val perNation = t("customer").filter("c_nationkey IS NOT NULL")
+      .groupBy("c_nationkey").count().collect().map(_.getLong(1))
+    assert(pairs == perNation.map(n => n * n).sum)
+  }
 }

@@ -103,6 +103,63 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"), plan)
   }
 
+  test("bound-subject star is ONE scan, no join, and pushes the subject " +
+      "IRI as a key predicate") {
+    val eng = new Engine(catalog)
+    val q = """SELECT ?name ?bal ?seg WHERE { <urn:graft/customer/7>
+      |  <urn:graft/customer#c_name> ?name ;
+      |  <urn:graft/customer#c_acctbal> ?bal ;
+      |  <urn:graft/customer#c_mktsegment> ?seg }""".stripMargin
+    val plan = eng.select(q).queryExecution.executedPlan.toString
+    assert("Scan parquet".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("Join"), plan)
+    val txt = eng.explain(q)
+    assert(txt.contains("EqualNullSafe(c_custkey,7)"), txt)
+  }
+
+  test("constant FK object pushes as a key predicate on the FK column") {
+    val txt = new Engine(catalog).explain(
+      """SELECT ?o ?tp WHERE {
+        |  ?o <urn:graft/orders#o_custkey> <urn:graft/customer/7> ;
+        |     <urn:graft/orders#o_totalprice> ?tp }""".stripMargin)
+    assert(txt.contains("EqualTo(o_custkey,7)"), txt)
+    assert(!txt.contains("urn:graft/customer/7"), txt)
+  }
+
+  test("chain3 joins FK→PK on raw integral keys, never on term structs; " +
+      "dimension sides broadcast") {
+    import org.apache.spark.sql.execution.joins._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val df = new Engine(catalog).select(
+      """SELECT ?cn ?nn WHERE {
+        |  <urn:graft/lineitem/7/1> <urn:graft/lineitem#l_orderkey> ?o .
+        |  ?o <urn:graft/orders#o_custkey> ?c .
+        |  ?c <urn:graft/customer#c_name> ?cn ;
+        |     <urn:graft/customer#c_nationkey> ?n .
+        |  ?n <urn:graft/nation#n_name> ?nn }""".stripMargin)
+    val plan = df.queryExecution.sparkPlan
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 3, plan)
+    assert(plan.collect {
+      case j: SortMergeJoinExec => j
+      case j: BroadcastNestedLoopJoinExec => j
+      case j: ShuffledHashJoinExec => j
+    }.isEmpty, plan)
+    val keyTypes = joins.flatMap(j => j.leftKeys ++ j.rightKeys).map(_.dataType).toSet
+    assert(keyTypes.subsetOf(Set(LongType, IntegerType)), plan)
+    assert(keyTypes.contains(LongType), plan)
+    assert(!plan.toString.contains("named_struct"), plan)
+    val rows = df.collect().map(r => (r.getStruct(0).getString(1), r.getStruct(1).getString(1)))
+    def t(n: String) = spark.read.parquet(s"$sf/$n.parquet")
+    val expect = t("lineitem").filter("l_orderkey = 7 AND l_linenumber = 1")
+      .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(t("customer"), col("o_custkey") === col("c_custkey"))
+      .join(t("nation"), col("c_nationkey") === col("n_nationkey"))
+      .select("c_name", "n_name").collect().map(r => (r.getString(0), r.getString(1)))
+    assert(rows.nonEmpty && rows.toSeq == expect.toSeq)
+  }
+
   test("ORDER BY + LIMIT plans TakeOrderedAndProject (true top-k)") {
     val plan = planOf(Slice(0, Some(10),
       OrderBy(Seq((E.v("tp"), false)), Bgp(Seq(
