@@ -8,7 +8,10 @@ import graft.sources.{GraphCatalog, TurtleReader}
 /** End-to-end SPARQL text tests: the reference's VERBATIM query strings
   * (`README.md:70-78`, `facilities.ttl:190-218`, `init-graphdb.sh:133`) run
   * through parser → algebra → compiler over data loaded by our TurtleReader
-  * from the reference's own files + the synthetic facilities stand-in.
+  * from the reference's two Turtle files + the synthetic facilities
+  * stand-in. The reference files are vendored reconstructions (FIXTURES.md
+  * §A) under `src/test/resources/reference/`, read by
+  * [[ReferenceFiles.read]].
   */
 class SparqlParserSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -16,10 +19,8 @@ class SparqlParserSpec extends AnyFunSuite {
   lazy val engine: Engine = {
     import spark.implicits._
     val docs = Seq(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/data/ontology/facilities.ttl")),
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/data/graph_data/areas.ttl")),
+      ReferenceFiles.read("data/ontology/facilities.ttl"),
+      ReferenceFiles.read("data/graph_data/areas.ttl"),
       SyntheticFacilities.facilitiesDoc)
     val quads = docs.flatMap(TurtleReader.parse(_)).toDS().toDF()
     val cat = new GraphCatalog(spark)

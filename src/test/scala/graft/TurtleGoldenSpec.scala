@@ -6,9 +6,11 @@ import graft.inference.Inference
 import graft.model.Rdf
 import graft.sources.{GraphCatalog, TurtleReader}
 
-/** Golden tests: parse the reference's own Turtle files
-  * (`/root/reference/data/...`, read-only) with our TurtleReader and answer
-  * the reference's documented queries (FIXTURES.md §B) over them.
+/** Golden tests: parse the reference's two readable Turtle files with our
+  * TurtleReader and answer the reference's documented queries (FIXTURES.md
+  * §B) over them. The files are vendored reconstructions rebuilt from the
+  * in-repo record (FIXTURES.md §A), read from the test classpath under
+  * `src/test/resources/reference/` by [[ReferenceFiles.read]].
   */
 object SyntheticFacilities {
   val EX = "http://example.org/dcc/facilities#"
@@ -45,6 +47,23 @@ object SyntheticFacilities {
   }
 }
 
+/** The reference's readable files, vendored as reconstructions under
+  * `src/test/resources/reference/` (each file's header says what the record
+  * pins and what was chosen). `read` takes the reference-relative path,
+  * e.g. `data/graph_data/areas.ttl`.
+  */
+object ReferenceFiles {
+  def read(path: String): String = {
+    val resource = s"/reference/$path"
+    val in = getClass.getResourceAsStream(resource)
+    if (in == null) throw new java.io.FileNotFoundException(
+      s"vendored reference file $path is missing: no test resource " +
+        s"$resource (src/test/resources/reference/$path)")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+}
+
 class TurtleGoldenSpec extends AnyFunSuite {
   import TestSpark.spark
   import SyntheticFacilities.{EX, SCHEMA, facilitiesDoc}
@@ -75,11 +94,9 @@ class TurtleGoldenSpec extends AnyFunSuite {
   lazy val quads: org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val onto = TurtleReader.parse(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/data/ontology/facilities.ttl")))
+      ReferenceFiles.read("data/ontology/facilities.ttl"))
     val areas = TurtleReader.parse(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/data/graph_data/areas.ttl")))
+      ReferenceFiles.read("data/graph_data/areas.ttl"))
     val facs = TurtleReader.parse(facilitiesDoc)
     (onto ++ areas ++ facs).toDS().toDF()
   }
@@ -91,11 +108,11 @@ class TurtleGoldenSpec extends AnyFunSuite {
   }
 
   test("parses the reference ontology + areas files (S1)") {
-    val onto = TurtleReader.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/data/ontology/facilities.ttl")))
+    val onto = TurtleReader.parse(
+      ReferenceFiles.read("data/ontology/facilities.ttl"))
     assert(onto.size > 90) // ~107 triples (SURVEY §6)
-    val areas = TurtleReader.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/data/graph_data/areas.ttl")))
+    val areas = TurtleReader.parse(
+      ReferenceFiles.read("data/graph_data/areas.ttl"))
     assert(areas.size == 15) // 5 areas × 3 triples (FIXTURES §A1)
     // language-tagged literal (areas.ttl:13)
     assert(areas.exists(q => q.o.lang.contains("en") &&
