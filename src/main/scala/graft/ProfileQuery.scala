@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Measurement tool (optimization rounds, guide §1/§7): runs named headline
   * queries with a SparkListener and prints per-JOB and per-STAGE wall/metric
   * attribution — the no-UI substitute for the Stages tab. One warmup rep
   * (codegen + page cache) then one measured rep, so the numbers line up with
-  * the bench's warm medians.
+  * the bench's warm medians. Each rep also prints how many classes Janino
+  * compiled and the milliseconds it spent doing so: that time is driver
+  * work outside every Spark job, and a warm rep of a query whose constants
+  * reach generated code as parameters compiles nothing.
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <q1,q2,...> [reps]
   */
@@ -56,6 +61,9 @@ object ProfileQuery {
     }
   }
 
+  /** Janino compiles: one histogram update per compiled class. */
+  private def compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
@@ -82,10 +90,13 @@ object ProfileQuery {
         Thread.sleep(200)
         l.reset()
         spark.sparkContext.setJobDescription(s"$name rep$r")
+        val (c0, ns0) = (compiles.getCount, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"== $name rep$r: $sec%.3f s wall (cold $warmSec%.3f s)")
+        val compileMs = (CodeGenerator.compileTime - ns0) / 1e6
+        println(f"== $name rep$r: $sec%.3f s wall (cold $warmSec%.3f s); " +
+          f"codegen ${compiles.getCount - c0} compiles, $compileMs%.1f ms")
         println(l.report())
       }
     }

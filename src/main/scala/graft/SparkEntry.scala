@@ -27,12 +27,27 @@ object SparkEntry {
 
   // ------------------------------------------------------------ plumbing
 
-  private val ctxCache = scala.collection.concurrent.TrieMap.empty[String, (GraphCatalog, Compiler)]
-  private def ctx(spark: SparkSession, sfDir: String): (GraphCatalog, Compiler) =
-    ctxCache.getOrElseUpdate(sfDir + "@" + spark.hashCode, {
+  /** A memo per session and string key. The session object itself is the
+    * key, held weakly: `SparkSession` does not override `equals`, so the
+    * map compares sessions by identity, and two sessions never share an
+    * entry the way two equal identity hashes could. A value that references
+    * its session (a catalog does) keeps that session's entry alive.
+    */
+  private final class PerSession[V] {
+    private val sessions =
+      new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, V]]
+    def getOrElseUpdate(s: SparkSession, key: String)(v: => V): V =
+      sessions.synchronized {
+        sessions.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty[String, V])
+      }.getOrElseUpdate(key, v)
+  }
+
+  private val ctxCache = new PerSession[(GraphCatalog, Compiler)]
+  private[graft] def ctx(spark: SparkSession, sfDir: String): (GraphCatalog, Compiler) =
+    ctxCache.getOrElseUpdate(spark, sfDir) {
       val cat = GraphCatalog.testdata(spark, sfDir)
       (cat, new Compiler(cat))
-    })
+    }
 
   private def pred(t: String, c: String): I = I(DirectMapper.predIri(t, c))
   private def cls(t: String): I = I(DirectMapper.classIri(t))
@@ -47,11 +62,10 @@ object SparkEntry {
     * on a 32-core box). Scale-ADAPTIVE: when the planned scan already has
     * >= defaultParallelism partitions (any real multi-row-group/multi-file
     * table, so every production layout), this is the identity — the
-    * round-robin exchange exists only for inputs too small to split, where
-    * it costs one shuffle of the (tiny) raw bytes. The partition count is
-    * memoized per file path: it is a physical property of the file.
+    * exchange exists only for inputs too small to split, where it costs
+    * one shuffle of the (tiny) raw bytes.
     */
-  private def widen(spark: SparkSession, key: String, df: DataFrame): DataFrame = {
+  private def widen(spark: SparkSession, key: Option[String], df: DataFrame): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
     // planning-only probe, recomputed per call (r19, ADVICE: the r18 memo
     // keyed on path + spark.hashCode — identity hashes can collide across
@@ -61,8 +75,10 @@ object SparkEntry {
     // repartition(p) pays a LOCAL SORT of every full-text row first
     // (sortBeforeRepartition, for retry determinism; guide §2.5), profiled
     // as the single biggest stage of dd_decontam's widen. The key is the
-    // table's unique primary key, so the spread is uniform by construction.
-    if (n < p) df.repartition(p, col(key)) else df
+    // table's unique primary key, so the spread is uniform by construction;
+    // a table with no declared key falls back to round-robin.
+    if (n >= p) df
+    else key.fold(df.repartition(p))(k => df.repartition(p, col(k)))
   }
   private def tbl(spark: SparkSession, sfDir: String, t: String): DataFrame = {
     spark.read.parquet(s"$sfDir/$t.parquet")
@@ -75,8 +91,9 @@ object SparkEntry {
     * (the 600k-row round-robin exchange costs more than the 1-task map-side
     * aggregation saves), so widening is per CALL SITE, not in [[tbl]].
     */
-  private def tblW(spark: SparkSession, sfDir: String, t: String): DataFrame =
-    widen(spark, DirectMapper.testdataSpecs(t).pks.head, tbl(spark, sfDir, t))
+  private[graft] def tblW(spark: SparkSession, sfDir: String, t: String): DataFrame =
+    widen(spark, DirectMapper.testdataSpecs.get(t).flatMap(_.pks.headOption),
+      tbl(spark, sfDir, t))
 
   /** Unwrap a term-struct var to a plain typed column. */
   private def sv(df: DataFrame, v: String, as: String): Column =
@@ -102,12 +119,12 @@ object SparkEntry {
     * region key because (l_orderkey, l_linenumber) alone is NOT unique in
     * the synthetic data — a tie with different suppliers could otherwise
     * let Spark and DuckDB pick different endpoints (r12 ADVICE). Memoized
-    * per dir: all three path modes (and every bench rep) share one pick.
+    * per session and dir: all three path modes (and every bench rep) share
+    * one pick.
     */
-  private val pathEndpointCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val pathEndpointCache = new PerSession[(String, String)]
   private def pathSearchEndpoints(s: SparkSession, dir: String): (String, String) =
-    pathEndpointCache.getOrElseUpdate(dir + "@" + s.hashCode, {
+    pathEndpointCache.getOrElseUpdate(s, dir) {
       val li = tbl(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_suppkey")
       val cand = li
@@ -127,7 +144,7 @@ object SparkEntry {
         .limit(1).collect()(0)
       (s"urn:graft/lineitem/${cand.get(0)}/${cand.get(1)}",
         s"urn:graft/region/${cand.get(3)}")
-    })
+    }
 
   /** Memoized full-text index per (sf dir, index name): the FIRST call
     * builds the persisted term-bucketed tables, repeat calls return the

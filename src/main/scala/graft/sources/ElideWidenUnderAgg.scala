@@ -41,8 +41,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    leaf — a deliberate pipeline repartition over computed frames (e.g.
   *    the edge-index `repartition(src).dropDuplicates()`, whose output
   *    partitioning downstream point-lookups rely on) never matches;
-  *  - round-robin widens ([[graft.SparkEntry]] `tblW`) are `Repartition`
-  *    nodes, not `RepartitionByExpression` — untouched.
+  *  - an aggregate with a `FILTER (WHERE …)` clause is cheap only when
+  *    that filter is: it runs per input row, like the function's inputs;
+  *  - the call-site widens of [[graft.SparkEntry]] `tblW` hash on the
+  *    table's key (r19), so they are `RepartitionByExpression` nodes and
+  *    elide under the same conditions; only a keyless round-robin widen
+  *    (a `Repartition` node) is never touched.
   *
   * Scale posture: the catalog widen is already the identity for any input
   * with ≥ parallelism planned partitions (every real multi-row-group
@@ -79,10 +83,10 @@ object ElideWidenUnderAgg extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  /** Aggregate whose per-row (partial-stage) work is cheap: grouping keys
-    * and aggregate-function inputs, with the functions themselves from the
-    * plain partial-aggregable, order-insensitive set (First/Last excluded —
-    * eliding a repartition changes row order). Expressions OUTSIDE the
+  /** Aggregate whose per-row (partial-stage) work is cheap: grouping keys,
+    * aggregate-function inputs and aggregate filters, with the functions
+    * themselves from the plain partial-aggregable, order-insensitive set
+    * (First/Last excluded — eliding a repartition changes row order). Expressions OUTSIDE the
     * aggregate functions in `aggregateExpressions` are evaluated once per
     * output group in the final stage, not per input row, so they don't
     * gate the decision.
@@ -96,7 +100,7 @@ object ElideWidenUnderAgg extends Rule[LogicalPlan] {
         case _: Count | _: Sum | _: Average | _: Min | _: Max => true
         case _ => false
       }
-      known && f.children.forall(cheap)
+      known && f.children.forall(cheap) && ae.filter.forall(cheap)
     })
     fnsOk && agg.groupingExpressions.forall(cheap)
   }

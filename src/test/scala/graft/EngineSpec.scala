@@ -4,9 +4,15 @@ import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+import graft.plans.{Param, ParameterizeScanFilters}
 import graft.sources.{ElideWidenUnderAgg, GraphCatalog}
+import graft.sources.DirectMapper.TableSpec
 
-/** Engine plumbing: the result sink and optimizer-rule registration. */
+/** Engine plumbing: the result sink, optimizer-rule registration, the
+  * per-session testdata caches, and answers for bound constants at type
+  * edges.
+  */
 class EngineSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -84,5 +90,104 @@ class EngineSpec extends AnyFunSuite {
       assert(opts.count(_ eq r) == 1, opts)
     }
     assert(opts.size == 5, opts)
+    assert(session.experimental.extraStrategies == Seq(ParameterizeScanFilters))
+  }
+
+  test("a new session gets its own testdata catalog; one session reuses its own") {
+    val other = spark.newSession()
+    val (mine, theirs) = (SparkEntry.ctx(spark, sf)._1, SparkEntry.ctx(other, sf)._1)
+    assert(mine.spark eq spark)
+    assert(theirs.spark eq other)
+    assert(SparkEntry.ctx(spark, sf)._1 eq mine)
+    assert(SparkEntry.ctx(other, sf)._1 eq theirs)
+  }
+
+  test("tblW widens a table with no declared key round-robin instead of " +
+      "throwing") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val dir = Files.createTempDirectory("graft_nokey").toString
+    spark.range(10).coalesce(1).write.parquet(s"$dir/nokey.parquet")
+    val df = SparkEntry.tblW(spark, dir, "nokey")
+    val widens = df.queryExecution.analyzed.collect { case r: Repartition => r }
+    assert(widens.map(r => (r.numPartitions, r.shuffle)) ==
+      Seq((spark.sparkContext.defaultParallelism, true)), df.queryExecution.analyzed)
+    assert(df.count() == 10)
+  }
+
+  test("bound constants at type edges answer as computed by hand, each " +
+      "constant of a shape in turn (scan filter constants are parameters)") {
+    import java.time.{LocalDate, LocalDateTime}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_edge").toString
+    Seq(
+      (-7L, Int.MinValue, -0.0, "1969-12-31", "1969-12-31T23:59:59"),
+      (Long.MaxValue, Int.MaxValue, 0.0, "1970-01-01", "1970-01-01T00:00:00"),
+      (7L, 7, Double.NaN, "1995-03-15", "1995-03-15T12:00:00"),
+      (0L, -1, 1.5, "2024-02-29", "2024-02-29T00:00:00.001"),
+      (Long.MinValue, 0, -1.5, "2000-01-01", "2000-01-01T00:00:00"))
+      .map { case (k, i, d, day, ts) => (k, i, d, LocalDate.parse(day), LocalDateTime.parse(ts)) }
+      .toDF("e_key", "e_int", "e_dbl", "e_date", "e_ts")
+      .coalesce(1).write.parquet(s"$dir/edge.parquet")
+    val edge = spark.read.parquet(s"$dir/edge.parquet")
+    val eng = new Engine(new GraphCatalog(spark).register(TableSpec("edge", Seq("e_key")), edge))
+    val (max, min) = (Long.MaxValue.toString, Long.MinValue.toString)
+    def values(q: String): Set[String] =
+      eng.select(q).collect().map(_.getStruct(0).getString(1)).toSet
+    def keys(pattern: String): Set[String] =
+      values(s"SELECT ?s WHERE { $pattern }").map(_.stripPrefix("urn:graft/edge/"))
+    def typed(v: String, t: String) = s""""$v"^^<http://www.w3.org/2001/XMLSchema#$t>"""
+    val p = "<urn:graft/edge#"
+
+    // bound subjects: negative, extreme and zero keys, one after another
+    def intOf(k: String) = s"SELECT ?i WHERE { <urn:graft/edge/$k> ${p}e_int> ?i }"
+    val params = eng.select(intOf("-7")).queryExecution.executedPlan.collect {
+      case f: FilterExec => f.condition.collect { case x: Param => x }
+    }.flatten
+    assert(params.nonEmpty)
+    Seq("-7" -> "-2147483648", max -> "2147483647", "7" -> "7", "0" -> "-1",
+      min -> "0").foreach { case (k, i) => assert(values(intOf(k)) == Set(i), k) }
+    assert(values(intOf("9223372036854775808")).isEmpty)
+
+    // double FILTER at -0.0/0.0 (equal values) and against NaN (no order)
+    def dbl(cmp: String) = keys(s"?s ${p}e_dbl> ?d FILTER(?d $cmp)")
+    assert(dbl("= 0.0") == Set("-7", max))
+    assert(dbl("= -0.0") == Set("-7", max))
+    assert(dbl("> -0.0") == Set("0"))
+    assert(dbl(">= -0.0") == Set("-7", max, "0"))
+    assert(dbl("< 0.0") == Set(min))
+    Seq("=", "<", ">").foreach(op =>
+      assert(dbl(s"$op ${typed("NaN", "double")}").isEmpty, op))
+
+    // an int column against integer and xsd:long constants, in and out of range
+    def int(o: String) = keys(s"?s ${p}e_int> $o")
+    assert(int("2147483647") == Set(max))
+    assert(int("-2147483648") == Set("-7"))
+    assert(int(typed("7", "long")) == Set("7"))
+    assert(int(typed("-1", "long")) == Set("0"))
+    assert(int("2147483648").isEmpty)
+    assert(int(typed("-2147483649", "long")).isEmpty)
+
+    // dateTime constants on a timestamp column (the SargableTimestamps path)
+    def ts(cmp: String) = keys(s"?s ${p}e_ts> ?t FILTER(?t $cmp)")
+    assert(ts(s"< ${typed("1995-03-15T12:00:00", "dateTime")}") == Set("-7", max))
+    assert(ts(s">= ${typed("1995-03-15T12:00:00", "dateTime")}") == Set("7", "0", min))
+    assert(ts(s"< ${typed("1970-01-01T00:00:00", "dateTime")}") == Set("-7"))
+    assert(ts(s"> ${typed("2024-02-29T00:00:00", "dateTime")}") == Set("0"))
+
+    // a date column lifts to xsd:dateTime terms: dateTime constants order
+    // against it; an xsd:date constant is a type error, so no row passes
+    def day(cmp: String) = keys(s"?s ${p}e_date> ?t FILTER(?t $cmp)")
+    assert(day(s">= ${typed("1995-03-15T00:00:00", "dateTime")}") == Set("7", "0", min))
+    assert(day(s"< ${typed("1970-01-01T00:00:00", "dateTime")}") == Set("-7"))
+    assert(day(s">= ${typed("1995-03-15", "date")}").isEmpty)
+    // a DATE literal in a scan filter, two dates in turn
+    Seq("1995-03-15" -> Set(7L, 0L, Long.MinValue), "2000-01-02" -> Set(0L)).foreach {
+      case (d, want) =>
+        val got = edge.filter(col("e_date") >= lit(LocalDate.parse(d)))
+          .select("e_key").as[Long].collect().toSet
+        assert(got == want, d)
+    }
   }
 }

@@ -602,5 +602,96 @@ class PlanSpec extends AnyFunSuite {
       .groupBy(col("n")).count()
     assert(optimized(computed).contains("RepartitionByExpression"),
       optimized(computed))
+
+    // a cheap sum whose FILTER clause runs a per-row string kernel: KEPT —
+    // the filter is evaluated on every input row
+    val filtered = widened.groupBy(col("o_orderstatus")).agg(expr(
+      "sum(o_totalprice) FILTER (WHERE upper(o_orderstatus) = 'F')"))
+    assert(optimized(filtered).contains("RepartitionByExpression"),
+      optimized(filtered))
+    // the same clause over a cheap comparison: elided
+    val cheapFilter = widened.groupBy(col("o_orderstatus")).agg(expr(
+      "sum(o_totalprice) FILTER (WHERE o_orderkey > 7)"))
+    assert(!optimized(cheapFilter).contains("RepartitionByExpression"),
+      optimized(cheapFilter))
+  }
+
+  // ------------------------------------ r21: parameterized scan constants
+
+  /** The cleaned whole-stage sources of `df`'s final plan, compared the way
+    * Spark's codegen cache compares them (`CodeAndComment` equality is on
+    * the comment-free body). Runs `df`, so adaptive plans are final.
+    */
+  private def stageSources(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    object H extends AdaptiveSparkPlanHelper
+    H.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w.doCodeGen()._2
+    }
+  }
+
+  /** `Engine.explain` text with expression and plan ids blanked, so two
+    * compiles of one query compare equal.
+    */
+  private def explainText(eng: Engine, q: String): String =
+    eng.explain(q).replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+
+  /** Plan with [[graft.plans.ParameterizeScanFilters]] off for `body`. */
+  private def withoutParams[T](body: => T): T = {
+    val exp = spark.experimental
+    val saved = exp.extraStrategies
+    exp.extraStrategies = saved.filterNot(_ eq graft.plans.ParameterizeScanFilters)
+    try body finally exp.extraStrategies = saved
+  }
+
+  /** Each point-lookup shape, instantiated with two different constants,
+    * and the pushed filter each instance must still carry.
+    */
+  private val lookupShapes: Seq[(String, Seq[(String, String)])] = {
+    def star(k: Int) = s"""SELECT ?name ?bal ?seg WHERE { <urn:graft/customer/$k>
+      |  <urn:graft/customer#c_name> ?name ;
+      |  <urn:graft/customer#c_acctbal> ?bal ;
+      |  <urn:graft/customer#c_mktsegment> ?seg }""".stripMargin
+    def chain2(k: Int, tp: Int) = s"""SELECT ?o ?tp WHERE {
+      |  ?o <urn:graft/orders#o_custkey> <urn:graft/customer/$k> ;
+      |     <urn:graft/orders#o_totalprice> ?tp . FILTER(?tp > $tp) }""".stripMargin
+    def optional(n: Int) = s"""SELECT ?s ?name ?bal WHERE {
+      |  ?s <urn:graft/supplier#s_nationkey> <urn:graft/nation/$n> ;
+      |     <urn:graft/supplier#s_name> ?name .
+      |  OPTIONAL { ?s <urn:graft/supplier#s_acctbal> ?bal . FILTER(?bal > 500) } }""".stripMargin
+    def topk(size: Int, brand: Int) = s"""SELECT ?p ?price WHERE {
+      |  ?p <urn:graft/part#p_size> $size ; <urn:graft/part#p_brand> "Brand#$brand" ;
+      |     <urn:graft/part#p_retailprice> ?price }
+      |ORDER BY DESC(?price) ?p LIMIT 5""".stripMargin
+    Seq(
+      "pl_star" -> Seq(star(7) -> "EqualNullSafe(c_custkey,7)",
+        star(8) -> "EqualNullSafe(c_custkey,8)"),
+      "pl_chain2_filter" -> Seq(chain2(7, 50000) -> "EqualTo(o_custkey,7)",
+        chain2(8, 1000) -> "EqualTo(o_custkey,8)"),
+      "pl_optional" -> Seq(optional(3) -> "EqualTo(s_nationkey,3)",
+        optional(4) -> "EqualTo(s_nationkey,4)"),
+      "pl_topk" -> Seq(topk(7, 13) -> "EqualTo(p_size,7)",
+        topk(8, 14) -> "EqualTo(p_size,8)"))
+  }
+
+  lookupShapes.foreach { case (shape, Seq((q1, pushed1), (q2, pushed2))) =>
+    test(s"$shape: a second constant reuses the first one's generated code; " +
+        "pushed filters and EXPLAIN text are unchanged") {
+      val eng = new Engine(catalog)
+      val (a, b) = (stageSources(eng.select(q1)), stageSources(eng.select(q2)))
+      assert(a.nonEmpty)
+      assert(a == b, a.zip(b).flatMap { case (x, y) =>
+        x.body.split("\n").zip(y.body.split("\n")).filter(p => p._1 != p._2)
+      }.mkString("\n"))
+      // inlined constants made every key a new class
+      assert(withoutParams(stageSources(eng.select(q1)) != stageSources(eng.select(q2))))
+      Seq(q1 -> pushed1, q2 -> pushed2).foreach { case (q, pushed) =>
+        val txt = explainText(eng, q)
+        assert(txt.contains(pushed), txt)
+        assert(txt == withoutParams(explainText(eng, q)))
+      }
+    }
   }
 }
