@@ -110,14 +110,15 @@ object SparqlFunctions {
   private def lexShadow(lex: Column, dIri: Column): Column = {
     val numLexOk =
       lex.rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
-    val inf = when(lex === "INF" || lex === "+INF", Double.PositiveInfinity)
+    val special = when(lex === "INF" || lex === "+INF", Double.PositiveInfinity)
       .when(lex === "-INF", Double.NegativeInfinity)
+      .when(lex === "NaN", Double.NaN)
     when(dIri.isin(Rdf.XsdInteger, Rdf.XsdDecimal, Rdf.XsdDouble),
       when(numLexOk, lex.cast(DoubleType))
-        .otherwise(when(dIri === Rdf.XsdDouble, inf)))
+        .otherwise(when(dIri === Rdf.XsdDouble, special)))
       .when(dIri === Rdf.XsdFloat,
         coalesce(when(numLexOk,
-          lex.cast(FloatType).cast(DoubleType)), inf))
+          lex.cast(FloatType).cast(DoubleType)), special))
       .when(dIri === Rdf.XsdDateTime,
         when(lex.rlike(DateTimeLex),
           unix_micros(try_to_timestamp(lex)).cast(DoubleType)))
@@ -432,12 +433,6 @@ object SparqlFunctions {
   private def isTmp(t: Column): Column = dtNorm(t).isin(
     Rdf.XsdDateTime, XsdDate, Rdf.XsdTime, Rdf.XsdDayTimeDuration,
     Rdf.XsdYearMonthDuration)
-  /** A float/double literal whose value is NaN (kept shadow-less — see
-    * RdfTerm.xsdSpecial): every XPath numeric comparison against it,
-    * including NaN-with-NaN `=`, answers FALSE rather than erroring.
-    */
-  private def nanSide(c: Column): Column = kind(c) === Rdf.KindLiteral &&
-    dt(c).isin(Rdf.XsdFloat, Rdf.XsdDouble) && v(c) === "NaN"
   def eqB(a: Column, b: Column): Column = {
     val aDt = dtNorm(a)
     val bDt = dtNorm(b)
@@ -463,12 +458,11 @@ object SparqlFunctions {
     val sameTerm = kind(a) === kind(b) && v(a) === v(b) &&
       lg(a) <=> lg(b) && aDt === bDt
     // op:numeric-equal(NaN, NaN) is FALSE (XPath; 17.3 dispatches a
-    // float/double pair there BEFORE the same-term shortcut). NaN stays
-    // shadow-less (see RdfTerm.xsdSpecial), so guard on the lexical —
-    // this also makes `!=` answer true (r18).
-    when(nanSide(a) && (nanSide(b) || n(b).isNotNull && !bTmp), lit(false))
-      .when(nanSide(b) && n(a).isNotNull && !aTmp, lit(false))
-      .when(bothNum || bothTmp, n(a) === n(b))
+    // float/double pair there BEFORE the same-term shortcut), while Spark
+    // calls two NaN shadows equal — this also makes `!=` answer true (r18).
+    // Every float/double NaN carries a NaN shadow (RdfTerm.typed,
+    // castDouble), so the shadow test is the whole NaN guard.
+    when(bothNum || bothTmp, n(a) === n(b) && !isnan(n(a)))
       .when(bothStr, v(a) === v(b))
       .when(bothBool, v(a).isin("true", "1") === v(b).isin("true", "1"))
       .when(sameTerm, lit(true))
@@ -506,14 +500,13 @@ object SparqlFunctions {
     // exactly like `=`. isTmp is null-free (dtNorm coalesces), so the
     // guard never mis-skips on IRI/bnode sides; equal datatypes ⟺ the
     // same family (the map is a bijection on its domain).
-    // op:numeric-less-than etc. answer FALSE on any NaN operand (XPath),
-    // provided the other side is numeric-valued (or NaN itself)
-    when(nanSide(a) && (nanSide(b) || n(b).isNotNull && !bTmp) ||
-      nanSide(b) && n(a).isNotNull && !aTmp, lit(false))
-      .when(aTmp && bTmp && dtNorm(a) =!= dtNorm(b),
-        lit(null).cast("boolean"))
+    // op:numeric-less-than etc. answer FALSE on any NaN operand (XPath);
+    // Spark orders a NaN shadow above every number, so the shadow branch
+    // excludes it
+    when(aTmp && bTmp && dtNorm(a) =!= dtNorm(b), lit(null).cast("boolean"))
       .when(aTmp =!= bTmp, lit(null).cast("boolean"))
-      .when(n(a).isNotNull && n(b).isNotNull, f(n(a), n(b)))
+      .when(n(a).isNotNull && n(b).isNotNull,
+        f(n(a), n(b)) && !isnan(n(a)) && !isnan(n(b)))
       // numeric vs non-numeric is a TYPE ERROR (17.3: `<`/`>` are defined
       // only within compatible operand types) → null, which EBV reads as
       // false in FILTER/HAVING. The lexical fallback applies only to
@@ -1665,7 +1658,9 @@ object SparqlFunctions {
       // shadow passthrough only for NUMERIC datatypes: a temporal or
       // duration shadow is not in the XPath casting table (r18 — the
       // epoch used to leak through as an integer)
-      when(graft.algebra.E.hasNumericDt(t), n(t).cast("long")),
+      // (try_cast: NaN and ±INF have no integer value → unbound, not an
+      // ANSI cast error)
+      when(graft.algebra.E.hasNumericDt(t), n(t).try_cast("long")),
       when(dt(t) === Rdf.XsdBoolean,
         when(v(t) === "true", 1L).otherwise(0L)),
       // the XSD whiteSpace facet COLLAPSES before the lexical parse —
@@ -1683,24 +1678,20 @@ object SparqlFunctions {
       when(graft.algebra.E.hasNumericDt(t), n(t)),
       when(dt(t) === Rdf.XsdBoolean,
         when(v(t) === "true", 1.0).otherwise(0.0)),
-      // XSD §3.3.4-5 special lexicals (INF/NaN stay lexical-only: NaN's
-      // shadow would invert under Spark's NaN ordering, see RdfTerm)
+      // XSD §3.3.4-5 special lexicals
       when(lex === "INF" || lex === "+INF", Double.PositiveInfinity),
       when(lex === "-INF", Double.NegativeInfinity),
+      when(kind(t) === Rdf.KindLiteral && lex === "NaN", Double.NaN),
       when(lex.rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$"),
         lex.cast("double")))
     // float rounds through single precision (r18) so float(0.1)≠double(0.1)
     val d = if (asDt == Rdf.XsdFloat) d0.cast(FloatType).cast(DoubleType)
       else d0
     term(lit(Rdf.KindLiteral),
-      coalesce(
-        regexp_replace(
-          (if (asDt == Rdf.XsdFloat) d.cast(FloatType).cast(StringType)
-           else d.cast(StringType)),
-          "Infinity$", "INF"),
-        // "NaN" is a VALID cast (XSD §3.3.4-5) that stays shadow-less —
-        // see the NaN-ordering note on RdfTerm.xsdSpecial
-        when(kind(t) === Rdf.KindLiteral && lex === "NaN", lit("NaN"))),
+      regexp_replace(
+        (if (asDt == Rdf.XsdFloat) d.cast(FloatType).cast(StringType)
+         else d.cast(StringType)),
+        "Infinity$", "INF"),
       lit(asDt), nullS, d)
   }
 

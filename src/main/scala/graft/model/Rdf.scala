@@ -125,10 +125,12 @@ object RdfTerm {
   def str(v: String): RdfTerm = RdfTerm(Rdf.KindLiteral, v, None, None, None)
   def lang(v: String, tag: String): RdfTerm =
     RdfTerm(Rdf.KindLiteral, v, None, Some(tag.toLowerCase), None)
-  /** XSD float/double special lexicals (§3.3.4-5) Java won't parse. NaN
-    * stays UNSHADOWED on purpose: Spark orders NaN = NaN true / NaN above
-    * every number, the opposite of XPath (every NaN comparison false), so
-    * the open-world type error — false under EBV — is the closer answer.
+  /** XSD float/double special lexicals (§3.3.4-5) Java won't parse. Java
+    * does parse "NaN", so a NaN literal carries a NaN shadow, as do
+    * `xsd:double("NaN")` and `STRDT("NaN", xsd:double)`. Spark orders
+    * NaN = NaN true / NaN above every number, the opposite of XPath (every
+    * NaN comparison false), so the SPARQL comparisons exclude NaN shadows
+    * explicitly (SparqlFunctions.eqB/cmp).
     */
   private val xsdSpecial = Map(
     "INF" -> Double.PositiveInfinity, "+INF" -> Double.PositiveInfinity,

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
@@ -41,6 +42,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    leaf — a deliberate pipeline repartition over computed frames (e.g.
   *    the edge-index `repartition(src).dropDuplicates()`, whose output
   *    partitioning downstream point-lookups rely on) never matches;
+  *  - the repartition must carry the widen's signature: exactly the
+  *    session's default parallelism, hashed on one attribute of that leaf.
+  *    A user's explicit `repartition(n, e)` with any other count or
+  *    expression is kept;
   *  - an aggregate with a `FILTER (WHERE …)` clause is cheap only when
   *    that filter is: it runs per input row, like the function's inputs;
   *  - the call-site widens of [[graft.SparkEntry]] `tblW` hash on the
@@ -113,16 +118,25 @@ object ElideWidenUnderAgg extends Rule[LogicalPlan] {
     case _                     => false
   }
 
-  /** Descend through cheap Project/Filter; splice out the first
-    * RepartitionByExpression whose own subtree is a cheap scan chain.
+  /** The widen's own signature, so that a user's explicit repartition is
+    * never touched: hashed into exactly the session's default parallelism,
+    * on one attribute of the relation at the bottom of a cheap scan chain.
     */
+  private def isWiden(r: RepartitionByExpression): Boolean =
+    cheapScanChain(r.child) &&
+      r.optNumPartitions.contains(SparkSession.active.sparkContext.defaultParallelism) &&
+      (r.partitionExpressions match {
+        case Seq(a: AttributeReference) => r.child.collectLeaves().head.outputSet.contains(a)
+        case _ => false
+      })
+
+  /** Descend through cheap Project/Filter; splice out the first widen. */
   private def strip(p: LogicalPlan): Option[LogicalPlan] = p match {
     case pr @ Project(exprs, child) if exprs.forall(cheap) =>
       strip(child).map(c => pr.copy(child = c))
     case f @ Filter(cond, child) if cheap(cond) =>
       strip(child).map(c => f.copy(child = c))
-    case r: RepartitionByExpression if cheapScanChain(r.child) =>
-      Some(r.child)
+    case r: RepartitionByExpression if isWiden(r) => Some(r.child)
     case _ => None
   }
 

@@ -306,4 +306,100 @@ class CompilerSpec extends AnyFunSuite {
       .groupBy("c_nationkey").count().collect().map(_.getLong(1))
     assert(pairs == perNation.map(n => n * n).sum)
   }
+
+  // ------------------------- key constants across joins (filter inference)
+
+  private def t(n: String) = spark.read.parquet(s"$sf/$n.parquet")
+
+  /** Parquet scans of `table` in `df`'s physical plan, with the filters
+    * directly above each.
+    */
+  private def scans(df: org.apache.spark.sql.DataFrame, table: String): Seq[(String, String)] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    val plan = df.queryExecution.sparkPlan
+    plan.collect { case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") =>
+      val above = plan.collect { case f: FilterExec if f.child eq s => f.condition.sql }
+      (s.metadata.getOrElse("PushedFilters", ""), above.mkString(" "))
+    }
+  }
+
+  test("a constant subject propagates through an FK→FK merge into the other " +
+      "group's scan; the answer is the DataFrame join's") {
+    // two orders with line items 1 and 2
+    val keys = t("lineitem").filter("l_linenumber = 1").select("l_orderkey")
+      .intersect(t("lineitem").filter("l_linenumber = 2").select("l_orderkey"))
+      .orderBy("l_orderkey").limit(2).collect().map(_.getLong(0))
+    keys.foreach { k =>
+      val q = s"""SELECT ?ln ?qty WHERE {
+        |  <urn:graft/lineitem/$k/1> <urn:graft/lineitem#l_orderkey> ?o .
+        |  ?l <urn:graft/lineitem#l_orderkey> ?o ;
+        |     <urn:graft/lineitem#l_linenumber> ?ln ;
+        |     <urn:graft/lineitem#l_quantity> ?qty }""".stripMargin
+      val df = new Engine(catalog).select(q)
+      val lineitem = scans(df, "lineitem")
+      assert(lineitem.size == 2, df.queryExecution.sparkPlan)
+      lineitem.foreach { case (pushed, _) =>
+        assert(pushed.contains(s"EqualNullSafe(l_orderkey,$k)"), df.queryExecution.sparkPlan)
+      }
+      val (rows, _) = iriRows(q)
+      val expect = t("lineitem").filter(s"l_orderkey = $k AND l_linenumber = 1")
+        .selectExpr("l_orderkey AS k").join(t("lineitem"),
+          org.apache.spark.sql.functions.expr("k = l_orderkey"))
+        .selectExpr("cast(l_linenumber as string)", "cast(l_quantity as string)")
+        .collect().map(r => Seq(r.getString(0), r.getString(1))).toSet
+      assert(rows == expect && rows.size > 1, k)
+    }
+  }
+
+  test("a constant on an OPTIONAL's required side filters the optional side; " +
+      "a required row with no match is still returned") {
+    val withOrders = t("orders").selectExpr("min(o_custkey)").head().getLong(0)
+    // a customer key no order references
+    val without = t("orders").selectExpr("max(o_custkey) + 1").head().getLong(0)
+    Seq(withOrders, without).foreach { k =>
+      val q = s"""SELECT ?c ?o ?st WHERE {
+        |  BIND(<urn:graft/customer/$k> AS ?c)
+        |  OPTIONAL { ?o <urn:graft/orders#o_custkey> ?c ;
+        |                <urn:graft/orders#o_orderstatus> ?st } }""".stripMargin
+      val df = new Engine(catalog).select(q)
+      val orders = scans(df, "orders")
+      assert(orders.nonEmpty && orders.forall(_._2.contains(s"urn:graft/customer/$k")),
+        df.queryExecution.sparkPlan)
+      val (rows, _) = iriRows(q)
+      val expect = t("orders").filter(s"o_custkey = $k").collect()
+        .map(r => Seq(s"urn:graft/customer/$k",
+          s"urn:graft/orders/${r.getAs[Long]("o_orderkey")}", r.getAs[String]("o_orderstatus")))
+        .toSet
+      if (k == without) assert(rows == Set(Seq(s"urn:graft/customer/$k", null, null)))
+      else assert(rows == expect && expect.nonEmpty)
+    }
+  }
+
+  test("a constant inside an OPTIONAL filters only the optional side, never " +
+      "the required side") {
+    import org.apache.spark.sql.functions.col
+    val q = """SELECT ?c ?n ?o WHERE {
+      |  ?c <urn:graft/customer#c_name> ?n .
+      |  OPTIONAL { <urn:graft/lineitem/7/1> <urn:graft/lineitem#l_orderkey> ?o .
+      |             ?o <urn:graft/orders#o_custkey> ?c } }""".stripMargin
+    val df = new Engine(catalog).select(q)
+    assert(scans(df, "orders").map(_._1).exists(_.contains("EqualNullSafe(o_orderkey,7)")),
+      df.queryExecution.sparkPlan)
+    val customer = scans(df, "customer")
+    assert(customer.nonEmpty && customer.forall { case (pushed, above) =>
+      !pushed.contains("c_custkey,") && !above.contains("c_custkey")
+    }, df.queryExecution.sparkPlan)
+    val (rows, _) = iriRows(q)
+    val order = t("lineitem").filter("l_orderkey = 7 AND l_linenumber = 1")
+      .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+      .select("o_orderkey", "o_custkey")
+    val expect = t("customer").join(order, col("c_custkey") === col("o_custkey"), "left")
+      .collect().map { r =>
+        val o = Option(r.getAs[Any]("o_orderkey")).map(k => s"urn:graft/orders/$k").orNull
+        Seq(s"urn:graft/customer/${r.getAs[Long]("c_custkey")}", r.getAs[String]("c_name"), o)
+      }.toSet
+    assert(rows == expect, rows.diff(expect))
+    assert(rows.size == t("customer").count() && rows.count(_(2) != null) == 1)
+  }
 }

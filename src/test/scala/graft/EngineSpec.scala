@@ -89,8 +89,49 @@ class EngineSpec extends AnyFunSuite {
     (graft.plans.OptimizerRules.engine :+ ElideWidenUnderAgg).foreach { r =>
       assert(opts.count(_ eq r) == 1, opts)
     }
-    assert(opts.size == 5, opts)
+    assert(opts.size == graft.plans.OptimizerRules.engine.size + 1, opts)
     assert(session.experimental.extraStrategies == Seq(ParameterizeScanFilters))
+  }
+
+  test("a NaN cell answers neither FILTER(?x > c) nor FILTER(?x < c); the " +
+      "range reaches the scan with no per-row string cast") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_nan").toString
+    Seq((1L, Double.NaN), (2L, -1.5), (3L, 0.0), (4L, 2.5), (5L, Double.PositiveInfinity))
+      .toDF("n_key", "n_dbl").coalesce(1).write.parquet(s"$dir/nanny.parquet")
+    val eng = new Engine(new GraphCatalog(spark).register(
+      TableSpec("nanny", Seq("n_key")), spark.read.parquet(s"$dir/nanny.parquet")))
+    def q(cmp: String) =
+      s"SELECT ?s WHERE { ?s <urn:graft/nanny#n_dbl> ?d FILTER(?d $cmp) }"
+    def keys(cmp: String): Set[String] = eng.select(q(cmp)).collect()
+      .map(_.getStruct(0).getString(1).stripPrefix("urn:graft/nanny/")).toSet
+    // key 1 is NaN: it is in no answer, whatever the constant
+    Seq("> -1.0E308" -> Set("2", "3", "4", "5"), "< -1.0E308" -> Set[String](),
+      "> 0.0" -> Set("4", "5"), "< 0.0" -> Set("2"),
+      ">= 0.0" -> Set("3", "4", "5"), "<= 0.0" -> Set("2", "3"),
+      "> 1.0E308" -> Set("5"), "< 1.0E308" -> Set("2", "3", "4")).foreach {
+      case (cmp, want) => assert(keys(cmp) == want, cmp)
+    }
+    val plan = eng.explain(q("> 0.0"))
+    assert(plan.contains("GreaterThan(n_dbl,0.0)"), plan)
+    assert(!plan.contains("cast(n_dbl"), plan)
+  }
+
+  test("a NaN built by xsd:double or STRDT compares like a NaN cell: false " +
+      "against a number and itself, != true; xsd:integer of it is unbound") {
+    val eng = new Engine(catalog)
+    val X = "PREFIX xsd: <http://www.w3.org/2001/XMLSchema#> "
+    Seq("xsd:double(\"NaN\")", "xsd:float(\" NaN \")",
+      "STRDT(\"NaN\", xsd:double)").foreach { nan =>
+      val row = eng.select(X + s"SELECT ?lt ?gt ?eq ?ne ?self ?i WHERE { " +
+        s"BIND($nan AS ?x) BIND(?x < 1 AS ?lt) BIND(?x > 1 AS ?gt) " +
+        "BIND(?x = 1 AS ?eq) BIND(?x != 1 AS ?ne) BIND(?x = ?x AS ?self) " +
+        "BIND(xsd:integer(?x) AS ?i) }").collect().toSeq
+      val got = row.map(r => (0 until 6).map(i =>
+        if (r.isNullAt(i)) None else Some(r.getStruct(i).getString(1))))
+      assert(got == Seq(Seq(Some("false"), Some("false"), Some("false"),
+        Some("true"), Some("false"), None)), nan)
+    }
   }
 
   test("a new session gets its own testdata catalog; one session reuses its own") {

@@ -126,6 +126,74 @@ class PlanSpec extends AnyFunSuite {
     assert(!txt.contains("urn:graft/customer/7"), txt)
   }
 
+  private val q5 =
+    """PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+      |SELECT ?nname (SUM(?qty) AS ?sum_qty) WHERE {
+      |  ?r <urn:graft/region#r_name> "ASIA" .
+      |  ?nk <urn:graft/nation#n_regionkey> ?r ;
+      |      <urn:graft/nation#n_name> ?nname .
+      |  ?c <urn:graft/customer#c_nationkey> ?nk .
+      |  ?o <urn:graft/orders#o_custkey> ?c ;
+      |     <urn:graft/orders#o_orderdate> ?od .
+      |  ?l <urn:graft/lineitem#l_orderkey> ?o ;
+      |     <urn:graft/lineitem#l_suppkey> ?sp ;
+      |     <urn:graft/lineitem#l_quantity> ?qty .
+      |  ?sp <urn:graft/supplier#s_nationkey> ?nk .
+      |  FILTER(?od >= "1994-01-01T00:00:00"^^xsd:dateTime)
+      |} GROUP BY ?nname""".stripMargin
+
+  private def chain3(k: Long) =
+    s"""SELECT ?cn ?nn WHERE {
+       |  <urn:graft/lineitem/$k/1> <urn:graft/lineitem#l_orderkey> ?o .
+       |  ?o <urn:graft/orders#o_custkey> ?c .
+       |  ?c <urn:graft/customer#c_name> ?cn ;
+       |     <urn:graft/customer#c_nationkey> ?n .
+       |  ?n <urn:graft/nation#n_name> ?nn }""".stripMargin
+
+  /** PushedFilters of each parquet scan of `table` in `df`'s physical plan. */
+  private def pushed(df: org.apache.spark.sql.DataFrame, table: String): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") =>
+        s.metadata.getOrElse("PushedFilters", "")
+    }
+
+  test("chain3: the bound lineitem key crosses the raw-key join into the " +
+      "orders scan; the answer is the DataFrame join's") {
+    import org.apache.spark.sql.functions.col
+    def t(n: String) = spark.read.parquet(s"$sf/$n.parquet")
+    // two orders with line items 1 and 2
+    val keys = t("lineitem").filter("l_linenumber = 1").select("l_orderkey")
+      .intersect(t("lineitem").filter("l_linenumber = 2").select("l_orderkey"))
+      .orderBy("l_orderkey").limit(2).collect().map(_.getLong(0))
+    keys.foreach { k =>
+      val df = new Engine(catalog).select(chain3(k))
+      val orders = pushed(df, "orders")
+      assert(orders.size == 1 && orders.head.contains(s"EqualNullSafe(o_orderkey,$k)"),
+        df.queryExecution.sparkPlan)
+      val rows = df.collect().map(r => (r.getStruct(0).getString(1), r.getStruct(1).getString(1)))
+      val expect = t("lineitem").filter(s"l_orderkey = $k AND l_linenumber = 1")
+        .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(t("customer"), col("o_custkey") === col("c_custkey"))
+        .join(t("nation"), col("c_nationkey") === col("n_nationkey"))
+        .select("c_name", "n_name").collect().map(r => (r.getString(0), r.getString(1)))
+      assert(rows.nonEmpty && rows.toSeq == expect.toSeq, k)
+    }
+  }
+
+  test("the optimizer converges: re-optimizing an optimized chain3 or q5 " +
+      "plan is the identity, for the whole optimizer and for one more pass " +
+      "of the user batch") {
+    val eng = new Engine(catalog)
+    Seq(chain3(7), q5).foreach { q =>
+      val opt = eng.select(q).queryExecution.optimizedPlan
+      val batch = spark.experimental.extraOptimizations
+      assert(batch.containsSlice(graft.plans.OptimizerRules.engine), batch)
+      assert(batch.foldLeft(opt)((p, r) => r(p)) == opt, opt)
+      assert(spark.sessionState.optimizer.execute(opt) == opt, opt)
+    }
+  }
+
   test("chain3 joins FK→PK on raw integral keys, never on term structs; " +
       "dimension sides broadcast") {
     import org.apache.spark.sql.execution.joins._
@@ -334,21 +402,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("Q5-shaped six-way SPARQL join: no cartesian/nested-loop, dims " +
       "broadcast, at most one shuffle join for the two big sides") {
-    val df = new Engine(catalog).select(
-      """PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
-        |SELECT ?nname (SUM(?qty) AS ?sum_qty) WHERE {
-        |  ?r <urn:graft/region#r_name> "ASIA" .
-        |  ?nk <urn:graft/nation#n_regionkey> ?r ;
-        |      <urn:graft/nation#n_name> ?nname .
-        |  ?c <urn:graft/customer#c_nationkey> ?nk .
-        |  ?o <urn:graft/orders#o_custkey> ?c ;
-        |     <urn:graft/orders#o_orderdate> ?od .
-        |  ?l <urn:graft/lineitem#l_orderkey> ?o ;
-        |     <urn:graft/lineitem#l_suppkey> ?sp ;
-        |     <urn:graft/lineitem#l_quantity> ?qty .
-        |  ?sp <urn:graft/supplier#s_nationkey> ?nk .
-        |  FILTER(?od >= "1994-01-01T00:00:00"^^xsd:dateTime)
-        |} GROUP BY ?nname""".stripMargin)
+    val df = new Engine(catalog).select(q5)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -614,6 +668,28 @@ class PlanSpec extends AnyFunSuite {
       "sum(o_totalprice) FILTER (WHERE o_orderkey > 7)"))
     assert(!optimized(cheapFilter).contains("RepartitionByExpression"),
       optimized(cheapFilter))
+  }
+
+  test("ElideWidenUnderAgg keeps a user's explicit repartition under a " +
+      "cheap count: another partition count or a computed expression") {
+    import org.apache.spark.sql.functions._
+    catalog // force catalog init so the rule is registered on the session
+    val p = spark.sparkContext.defaultParallelism
+    val base = spark.read.parquet(s"$sf/orders.parquet")
+    def count(df: org.apache.spark.sql.DataFrame) = df.groupBy(col("o_orderstatus")).count()
+    val userCount = count(base.repartition(p + 1, col("o_orderkey")))
+    val plan = userCount.queryExecution.executedPlan.toString
+    assert(s"Exchange hashpartitioning\\(o_orderkey#\\d+L, ${p + 1}\\)".r.findFirstIn(plan)
+      .isDefined, plan)
+    assert(userCount.queryExecution.optimizedPlan.toString.contains("RepartitionByExpression"))
+    val userExpr = count(base.repartition(p, col("o_orderkey") % 3))
+    assert(userExpr.queryExecution.optimizedPlan.toString.contains("RepartitionByExpression"),
+      userExpr.queryExecution.optimizedPlan)
+    // the widen's own signature still elides
+    val widen = count(base.repartition(p, col("o_orderkey")))
+    assert(!widen.queryExecution.optimizedPlan.toString.contains("RepartitionByExpression"),
+      widen.queryExecution.optimizedPlan)
+    assert(userCount.collect().toSet == widen.collect().toSet)
   }
 
   // ------------------------------------ r21: parameterized scan constants
