@@ -18,15 +18,15 @@ import graft.model.{Quad, Rdf, RdfTerm}
   *
   *   - target resolution        → predicate-filtered scans (partition-prunable
   *                                when the store is written partitioned by `p`)
-  *   - value extraction         → one equi-join per property shape, keyed on
-  *                                the focus node — AQE picks broadcast vs
-  *                                shuffle from runtime sizes (focus sets
-  *                                range from dim-sized targetNode lists to
-  *                                fact-sized targetClass scans, so a forced
-  *                                hint would be wrong at one end)
-  *   - value-level constraints  → pure column predicates (codegen'd)
-  *   - cardinality constraints  → partial+final hash aggregate per focus,
-  *                                left-joined so absent properties count 0
+  *   - value extraction         → one predicate-IN scan per node shape and
+  *                                pass, joined to the focus set on the focus
+  *                                node (broadcast by default, see
+  *                                [[Shacl.validate]])
+  *   - value-level constraints  → pure column predicates (codegen'd), all of
+  *                                a node shape's in ONE array-filter-explode
+  *   - cardinality constraints  → ONE partial+final hash aggregate per node
+  *                                shape over the focus and value rows, so
+  *                                absent properties count 0
   *   - closed shapes            → one anti-filter over the focus's own quads
   *   - SPARQL constraints       → the `sh:select` text compiles through the
   *                                engine's own SPARQL compiler and runs ONCE
@@ -585,6 +585,15 @@ object Shacl {
       o.getField("dtype") <=> t.dtype.map(lit(_)).getOrElse(nullS) &&
       o.getField("lang") <=> t.lang.map(lit(_)).getOrElse(nullS)
 
+  /** Full-term equality of two term-struct columns (the numeric shadow
+    * follows from the other four fields).
+    */
+  private def termEq(a: Column, b: Column): Column =
+    a.getField("kind") === b.getField("kind") &&
+      a.getField("value") === b.getField("value") &&
+      (a.getField("dtype") <=> b.getField("dtype")) &&
+      (a.getField("lang") <=> b.getField("lang"))
+
   // RDF 1.1: a plain literal IS xsd:string; lang-tagged is rdf:langString.
   private def effDtypeC(o: Column): Column =
     when(o.getField("kind") =!= Rdf.KindLiteral, nullS)
@@ -598,36 +607,91 @@ object Shacl {
       case _ => pattern
     }
 
-  /** Null-free pass-predicate of one value-level branch — the unit the
-    * logical components compose over.
+  /** Null-free pass-predicate of each component of one value-level block,
+    * by component name. Range components compare by VALUE (numeric/temporal
+    * shadow) with non-comparable → fail (the coalesce keeps SQL's NULL from
+    * silently dropping the row); `sh:pattern`/length fail blank nodes per
+    * spec.
     */
-  private def passesC(o: Column, vc: ValueConstraints): Column = {
+  private def componentTests(vc: ValueConstraints, o: Column)
+      : Seq[(String, Column)] = {
     val lex = o.getField("value")
     val isLit = o.getField("kind") === Rdf.KindLiteral
     val isBlank = o.getField("kind") === Rdf.KindBlank
     val num = o.getField("num")
-    val tests: Seq[Column] =
-      vc.datatype.map(dt => coalesce(isLit && effDtypeC(o) === dt,
-        lit(false))).toSeq ++
-      vc.nodeKind.map(kindOkC(o, _)).toSeq ++
-      vc.pattern.map(p => !isBlank &&
-        lex.rlike(regexOf(p, vc.patternFlags))).toSeq ++
-      vc.minLength.map(n => !isBlank && length(lex) >= n).toSeq ++
-      vc.maxLength.map(n => !isBlank && length(lex) <= n).toSeq ++
-      vc.minInclusive.map(n => coalesce(num >= n, lit(false))).toSeq ++
-      vc.maxInclusive.map(n => coalesce(num <= n, lit(false))).toSeq ++
-      vc.minExclusive.map(n => coalesce(num > n, lit(false))).toSeq ++
-      vc.maxExclusive.map(n => coalesce(num < n, lit(false))).toSeq ++
-      (if (vc.in.isEmpty) Nil
-       else Seq(vc.in.map(termEqC(o, _)).reduce(_ || _)))
-    tests.reduceOption(_ && _).getOrElse(lit(true))
+    def c(name: String) = s"sh:${name}ConstraintComponent"
+    vc.datatype.map(dt => c("Datatype") ->
+      coalesce(isLit && effDtypeC(o) === dt, lit(false))).toSeq ++
+    vc.nodeKind.map(nk => c("NodeKind") -> kindOkC(o, nk)).toSeq ++
+    vc.pattern.map(p => c("Pattern") ->
+      (!isBlank && lex.rlike(regexOf(p, vc.patternFlags)))).toSeq ++
+    vc.minLength.map(n => c("MinLength") -> (!isBlank && length(lex) >= n)).toSeq ++
+    vc.maxLength.map(n => c("MaxLength") -> (!isBlank && length(lex) <= n)).toSeq ++
+    vc.minInclusive.map(n => c("MinInclusive") -> coalesce(num >= n, lit(false))).toSeq ++
+    vc.maxInclusive.map(n => c("MaxInclusive") -> coalesce(num <= n, lit(false))).toSeq ++
+    vc.minExclusive.map(n => c("MinExclusive") -> coalesce(num > n, lit(false))).toSeq ++
+    vc.maxExclusive.map(n => c("MaxExclusive") -> coalesce(num < n, lit(false))).toSeq ++
+    (if (vc.in.isEmpty) Nil
+     else Seq(c("In") -> vc.in.map(termEqC(o, _)).reduce(_ || _)))
   }
+
+  /** Null-free pass-predicate of one value-level branch — the unit the
+    * logical components compose over.
+    */
+  private def passesC(o: Column, vc: ValueConstraints): Column =
+    componentTests(vc, o).map(_._2).reduceOption(_ && _).getOrElse(lit(true))
+
+  /** Violation predicates of the logical components over a term column:
+    * sh:or/and/not, and sh:xone (exactly ONE branch passes, counted).
+    */
+  private def logicChecks(or: Seq[ValueConstraints], and: Seq[ValueConstraints],
+      not: Option[ValueConstraints], xone: Seq[ValueConstraints], o: Column)
+      : Seq[(String, Column)] =
+    (if (or.isEmpty) Nil else Seq("sh:OrConstraintComponent" ->
+      !or.map(passesC(o, _)).reduce(_ || _))) ++
+    (if (and.isEmpty) Nil else Seq("sh:AndConstraintComponent" ->
+      !and.map(passesC(o, _)).reduce(_ && _))) ++
+    not.map(vc => "sh:NotConstraintComponent" -> passesC(o, vc)).toSeq ++
+    (if (xone.isEmpty) Nil else Seq("sh:XoneConstraintComponent" ->
+      (xone.map(vc => when(passesC(o, vc), 1).otherwise(0))
+        .reduce(_ + _) =!= 1)))
+
+  /** The VALUE-level violation predicates of one property shape —
+    * `(component, bad)` pairs over a term-struct column.
+    */
+  private[shacl] def valueChecks(ps: PropertyShape, o: Column): Seq[(String, Column)] =
+    componentTests(ValueConstraints(ps.datatype, ps.nodeKind, ps.pattern,
+      ps.patternFlags, ps.minInclusive, ps.maxInclusive, ps.minExclusive,
+      ps.maxExclusive, ps.minLength, ps.maxLength, ps.in), o)
+      .map { case (component, pass) => component -> !pass } ++
+    logicChecks(ps.or, ps.and, ps.not, ps.xone, o)
+
+  /** Node-shape-level `sh:nodeKind` and logic over the focus node's own
+    * term. Unknown kinds THROW in [[kindOkC]] — a silent all-violate would
+    * wrongly reject valid commits through Repositories' transactional gate.
+    */
+  private def nodeChecks(shape: NodeShape, fo: Column): Seq[(String, Column)] =
+    shape.nodeKind.map(nk =>
+      "sh:NodeKindConstraintComponent" -> !kindOkC(fo, nk)).toSeq ++
+    logicChecks(shape.or, shape.and, shape.not, shape.xone, fo)
+
+  /** The SPARQL text of a property shape's path — what `$PATH` substitutes
+    * in a validator.
+    */
+  private def pathText(ps: PropertyShape): String =
+    if (ps.seq.nonEmpty) ps.seq.map(p => s"<$p>").mkString("/")
+    else if (ps.alt.nonEmpty) ps.alt.map(p => s"<$p>").mkString("|")
+    else ps.closure match {
+      case Some((k, p0)) => s"<$p0>$k"
+      case None => if (ps.inverse) s"^<${ps.path}>" else s"<${ps.path}>"
+    }
 
   /** Parse an ASK validator body into boolean column fns. Documented
     * scope: FILTER-only bodies (`ASK { FILTER(...) ... }`) — the
     * value-range/regex shape of real custom components, compiled to
-    * codegen'd predicates like the built-in value constraints. Triple
-    * patterns or `$this` correlation need a SELECT validator.
+    * codegen'd predicates like the built-in value constraints. None for a
+    * body with triple patterns, which evaluates set-based in the batch
+    * validator.
     */
   private def filterOnlyAsk(text: String): Option[Seq[graft.algebra.E.Fn]] = {
     import graft.algebra.{FilterOp, Op, Unit0}
@@ -640,83 +704,93 @@ object Shacl {
         }
         strip(op, Nil) match {
           case (Unit0, fns) if fns.nonEmpty => Some(fns)
-          case _ => None // pattern body — set-based in the batch validator
+          case _ => None
         }
       case _ => throw new IllegalArgumentException(
         "SHACL: sh:ask validator text must be an ASK query")
     }
   }
 
-  private def askFilterFns(text: String): Seq[graft.algebra.E.Fn] =
-    filterOnlyAsk(text).getOrElse(throw new IllegalArgumentException(
-      "SHACL: ROW-LEVEL ASK validators support FILTER-only bodies over " +
-        "$value and the component parameters; pattern bodies evaluate in " +
-        "the batch validator"))
-
-  /** Violation predicate of one instantiated ASK custom constraint over a
-    * value-term column — conforming iff every FILTER evaluates true
-    * ($value = the value node; parameters were substituted as constants).
+  /** The row-level checks of one property shape over a value-term column:
+    * [[valueChecks]] plus its FILTER-only custom ASK validators, as
+    * `(component, bad, message)`. An ASK validator conforms iff every
+    * FILTER evaluates true (`$value` = the value node; parameters were
+    * substituted as constants). Pattern-body validators are not row-level
+    * and are left out.
     */
-  private def customBad(cc: CustomConstraint, o: Column): Column = {
-    val res: String => Column = {
-      case "value" => o
-      case other => throw new IllegalArgumentException(
-        s"SHACL: ASK validators may reference only $$value, got ?$other " +
-          "(use a SELECT validator for $this correlation)")
+  private def rowChecks(ps: PropertyShape, o: Column)
+      : Seq[(String, Column, Option[String])] =
+    valueChecks(ps, o).map { case (c, bad) => (c, bad, ps.message) } ++
+    ps.custom.flatMap { cc =>
+      filterOnlyAsk(cc.text.replace("$PATH", pathText(ps))).map { fns =>
+        val res: String => Column = {
+          case "value" => o
+          case other => throw new IllegalArgumentException(
+            s"SHACL: FILTER-only ASK validators may reference only " +
+              s"$$value, got ?$other (use a pattern body or a SELECT " +
+              "validator for $this correlation)")
+        }
+        (cc.component, !coalesce(fns.map(_(res)).reduce(_ && _), lit(false)),
+          cc.message.orElse(ps.message))
+      }
     }
-    !coalesce(askFilterFns(cc.text).map(_(res)).reduce(_ && _), lit(false))
-  }
 
-  /** The VALUE-level violation predicates of one property shape —
-    * `(component, bad)` pairs over a term-struct column. Range components
-    * compare by VALUE (numeric/temporal shadow) with non-comparable →
-    * violation (the coalesce keeps SQL's NULL from silently dropping the
-    * row); `sh:pattern`/length fail blank nodes per spec.
+  /** One check of a violation-row pass: a row for which `violated` holds
+    * yields one report row with these fields.
     */
-  private[shacl] def valueChecks(ps: PropertyShape, o: Column): Seq[(String, Column)] = {
-    val lex = o.getField("value")
-    val isLit = o.getField("kind") === Rdf.KindLiteral
-    val isBlank = o.getField("kind") === Rdf.KindBlank
-    val num = o.getField("num")
-    ps.datatype.map(dt => "sh:DatatypeConstraintComponent" ->
-      !coalesce(isLit && effDtypeC(o) === dt, lit(false))).toSeq ++
-    ps.nodeKind.map(nk => "sh:NodeKindConstraintComponent" ->
-      !kindOkC(o, nk)).toSeq ++
-    ps.pattern.map(p => "sh:PatternConstraintComponent" ->
-      (isBlank || !lex.rlike(regexOf(p, ps.patternFlags)))).toSeq ++
-    ps.minLength.map(n => "sh:MinLengthConstraintComponent" ->
-      (isBlank || length(lex) < n)).toSeq ++
-    ps.maxLength.map(n => "sh:MaxLengthConstraintComponent" ->
-      (isBlank || length(lex) > n)).toSeq ++
-    ps.minInclusive.map(n => "sh:MinInclusiveConstraintComponent" ->
-      !coalesce(num >= n, lit(false))).toSeq ++
-    ps.maxInclusive.map(n => "sh:MaxInclusiveConstraintComponent" ->
-      !coalesce(num <= n, lit(false))).toSeq ++
-    ps.minExclusive.map(n => "sh:MinExclusiveConstraintComponent" ->
-      !coalesce(num > n, lit(false))).toSeq ++
-    ps.maxExclusive.map(n => "sh:MaxExclusiveConstraintComponent" ->
-      !coalesce(num < n, lit(false))).toSeq ++
-    (if (ps.in.isEmpty) Nil else Seq("sh:InConstraintComponent" ->
-      !ps.in.map(termEqC(o, _)).reduce(_ || _))) ++
-    (if (ps.or.isEmpty) Nil else Seq("sh:OrConstraintComponent" ->
-      !ps.or.map(passesC(o, _)).reduce(_ || _))) ++
-    (if (ps.and.isEmpty) Nil else Seq("sh:AndConstraintComponent" ->
-      !ps.and.map(passesC(o, _)).reduce(_ && _))) ++
-    ps.not.map(vc => "sh:NotConstraintComponent" -> passesC(o, vc)).toSeq ++
-    (if (ps.xone.isEmpty) Nil else Seq("sh:XoneConstraintComponent" ->
-      // exactly-ONE branch must pass: count the passing branches
-      (ps.xone.map(vc => when(passesC(o, vc), 1).otherwise(0))
-        .reduce(_ + _) =!= 1)))
+  private final case class Check(violated: Column, path: Column,
+      component: String, value: Column, shape: String, severity: String,
+      message: Option[String])
+
+  /** The violation rows of `checks` over `rows` in ONE array-explode-filter
+    * (no join, no aggregation, stream-safe; the explode and the filter stay
+    * in generated code, where a `filter` lambda over the array would be
+    * interpreted): the `keep` columns plus the hit's `result_path,
+    * component, value, shape, severity, message`. Both validators build
+    * their value-level rows here.
+    */
+  private def violationRows(rows: DataFrame, keep: Seq[String],
+      checks: Seq[Check]): DataFrame = {
+    val hits = array(checks.map(c => when(c.violated, struct(
+      c.path.as("result_path"), lit(c.component).as("component"),
+      c.value.as("value"), lit(c.shape).as("shape"),
+      lit(c.severity).as("severity"),
+      c.message.map(lit(_)).getOrElse(nullS).as("message")))): _*)
+    rows.select(keep.map(col) :+ explode(hits).as("_h"): _*)
+      .filter(col("_h").isNotNull)
+      .select(keep.map(col) :+ col("_h.*"): _*)
   }
 
   /** Validation report: one row per violation —
-    * `(focus, result_path, component, value, shape)`. `component` is the spec
-    * constraint-component name (`sh:MinCountConstraintComponent` …);
-    * `value` is the offending value node's lexical form (null for
-    * cardinality/closed components where no single value is at fault).
-    * Empty report ⇔ data conforms.
-    */
-  /** @param broadcastFocus hint the focus set to the BUILD side of every
+    * `(focus, result_path, component, value, shape, severity, message)`.
+    * `component` is the spec constraint-component name
+    * (`sh:MinCountConstraintComponent` …); `value` is the offending value
+    * node's lexical form (null for the counting components, where no single
+    * value is at fault). Empty report ⇔ data conforms.
+    *
+    * Each node shape compiles to two passes over tagged rows
+    * `(focus, fo, tag, o)`: focus rows (tag -1, `fo` the focus node's term)
+    * and the value rows of its property shapes (tag = the property shape's
+    * index, `fo` null). Every predicate and alternative path of a pass is
+    * read by one `p IN (…)` scan, semi-joined to the targets (no distinct,
+    * so no shuffle); an inverse, sequence or closure path adds its own
+    * tagged frame.
+    *   - VALUE pass: every value-level check of the property shapes, and the
+    *     node-level `sh:nodeKind`/logic over the focus rows, in one
+    *     array-filter-explode ([[violationRows]], shared with
+    *     [[rowValidator]]).
+    *   - COUNTING pass: one `groupBy(focus, fo)` over the focus rows and the
+    *     counted property shapes' value rows, with one count column per
+    *     `sh:minCount`/`sh:maxCount`, `sh:hasValue` and qualified count,
+    *     exploded the same way. The focus rows make an absent property count
+    *     0; they keep `fo` only for a LITERAL focus node (possible via
+    *     `sh:targetObjectsOf`), which has no value rows by definition and so
+    *     counts 0 even when an IRI subject is spelled the same.
+    * `sh:class`, `sh:node`, the property pairs, `sh:uniqueLang`,
+    * `sh:closed`, pattern-body ASK validators and `sh:sparql` need other
+    * data and keep one frame each.
+    *
+    * @param broadcastFocus hint the targets to the BUILD side of every
     *   focus join (default). Focus sets are target scans — usually
     *   dimension-sized against fact-sized data, where the hint removes all
     *   shuffles. Pass `false` when a shape's target is itself fact-sized
@@ -736,15 +810,6 @@ object Shacl {
       .select(col("s"), col("o.value")).collect()
       .map(r => (r.getString(0), r.getString(1)))
       .groupBy(_._1).map { case (k, v) => (k, v.map(_._2).toSeq) }
-    def superClosure(c: String): Seq[String] = {
-      val seen = collection.mutable.LinkedHashSet(c)
-      var frontier = Seq(c)
-      while (frontier.nonEmpty) {
-        frontier = frontier.flatMap(subClassOf.getOrElse(_, Nil)).filterNot(seen)
-        seen ++= frontier
-      }
-      seen.toSeq
-    }
     def subClosure(c: String): Seq[String] = {
       // classes whose instances count as instances of c (cycle-safe BFS)
       val seen = collection.mutable.LinkedHashSet(c)
@@ -758,17 +823,6 @@ object Shacl {
       seen.toSeq
     }
 
-    def violation(df: DataFrame, path: Option[String], component: String,
-        value: Column, shape: String, sev: String = "sh:Violation",
-        msg: Option[String] = None): DataFrame =
-      df.select(col("focus"),
-        path.map(lit(_)).getOrElse(nullS).as("result_path"),
-        lit(component).as("component"),
-        value.as("value"),
-        lit(shape).as("shape"),
-        lit(sev).as("severity"),
-        msg.map(lit(_)).getOrElse(nullS).as("message"))
-
     // one engine over the SAME quads being validated — built lazily, only
     // when some shape carries sh:sparql. The select text compiles through
     // the ordinary SPARQL compiler, so sh:sparql constraints get the same
@@ -776,464 +830,343 @@ object Shacl {
     lazy val sparqlEngine: graft.Engine = new graft.Engine(
       new graft.sources.GraphCatalog(spark).addQuads(data))
 
-    // per-shape validation against an EXPLICIT focus set — (focus, fo)
-    // rows where fo is the focus node's full TERM struct
-    // (sh:targetObjectsOf can make LITERALS focus nodes, and node-level
-    // constraints need the kind/dtype/lang/num of the node itself). Used
-    // with the resolved targets below, and by sh:node with a property's
-    // value nodes. `seen` carries the sh:node reference chain: a shape id
-    // revisited on one chain is a CYCLE → error (recursive validation is
-    // undefined per spec); acyclic chains recurse to any depth.
-    def shapeViolations(shape: NodeShape, focus: DataFrame,
+    // per-shape validation against EXPLICIT focus nodes — (focus, fo)
+    // rows, repeats allowed, where fo is the focus node's full TERM struct.
+    // Used with the resolved targets below, and by sh:node with a
+    // property's value nodes. `seen` carries the sh:node reference chain: a
+    // shape id revisited on one chain is a CYCLE → error (recursive
+    // validation is undefined per spec); acyclic chains recurse to any
+    // depth.
+    def shapeViolations(shape: NodeShape, targets: DataFrame,
         seen: Set[String]): Seq[DataFrame] = {
 
-        // literal focus nodes have no outgoing arcs by construction — they
-        // contribute nothing to value-node joins (and must not lexically
-        // collide with a same-spelled IRI subject), but they STAY in the
-        // cardinality/hasValue base so minCount ≥ 1 correctly flags them.
-        val focusNonLit = focus.filter(
-          col("fo").getField("kind") =!= Rdf.KindLiteral)
+      // literal focus nodes have no outgoing arcs by construction — they
+      // contribute no value rows (and must not lexically collide with a
+      // same-spelled IRI subject)
+      val nonLitTargets = targets.filter(
+        col("fo").getField("kind") =!= Rdf.KindLiteral)
+      val props = shape.properties.zipWithIndex
 
-        // ---- node-shape-level nodeKind: [[kindOkC]] on the focus term
-        // (unknown kinds THROW there — a silent all-violate would wrongly
-        // reject valid commits through Repositories' transactional gate).
-        val nodeKindViolations = shape.nodeKind.toSeq.map { nk =>
-          violation(focus.filter(!kindOkC(col("fo"), nk)), None,
-            "sh:NodeKindConstraintComponent", col("focus"), shape.id,
-            shape.severity, shape.message)
-        }
+      def violation(df: DataFrame, path: Column, component: String,
+          value: Column, sev: String, msg: Option[String]): DataFrame =
+        df.select(col("focus"), path.as("result_path"),
+          lit(component).as("component"), value.as("value"),
+          lit(shape.id).as("shape"), lit(sev).as("severity"),
+          msg.map(lit(_)).getOrElse(nullS).as("message"))
 
-        // ---- node-shape-level logic (r12): value-level branches against
-        // the focus node's OWN term — sh:or/and/not plus sh:xone
-        // (exactly-one-pass, counted)
-        val nodeLogicViolations = {
-          val fo = col("fo")
-          val checks: Seq[(String, Column)] =
-            (if (shape.or.isEmpty) Nil
-             else Seq("sh:OrConstraintComponent" ->
-               !shape.or.map(passesC(fo, _)).reduce(_ || _))) ++
-            (if (shape.and.isEmpty) Nil
-             else Seq("sh:AndConstraintComponent" ->
-               !shape.and.map(passesC(fo, _)).reduce(_ && _))) ++
-            shape.not.map(vc =>
-              "sh:NotConstraintComponent" -> passesC(fo, vc)).toSeq ++
-            (if (shape.xone.isEmpty) Nil
-             else Seq("sh:XoneConstraintComponent" ->
-               (shape.xone.map(vc => when(passesC(fo, vc), 1).otherwise(0))
-                 .reduce(_ + _) =!= 1)))
-          checks.map { case (component, bad) =>
-            violation(focus.filter(bad), None, component, col("focus"),
-              shape.id, shape.severity, shape.message)
+      // the predicates a predicate or alternative path reads directly
+      def direct(ps: PropertyShape): Seq[String] =
+        if (ps.inverse || ps.seq.nonEmpty || ps.closure.isDefined) Nil
+        else if (ps.alt.nonEmpty) ps.alt
+        else Seq(ps.path)
+      // the `rows` whose `key` is a focus node: a semi-join, so repeated
+      // targets need no distinct (and no shuffle) first
+      def atFocus(rows: DataFrame, key: Column): DataFrame =
+        rows.join(bf(nonLitTargets), key === col("focus"), "left_semi")
+      def scan(preds: Seq[String]): DataFrame =
+        atFocus(data.filter(col("p").isin(preds: _*)), col("s"))
+
+      // value nodes of one property shape: (focus, o)
+      def values(ps: PropertyShape): DataFrame =
+        if (direct(ps).nonEmpty)
+          scan(direct(ps)).select(col("s").as("focus"), col("o"))
+        else if (ps.closure.isDefined) {
+          // closure paths: `+` evaluates through the engine's OWN
+          // distributed property-path machinery (semi-naive frontier,
+          // lineage cuts — never a driver loop); zero-length contributes
+          // the focus node itself. Set semantics per SPARQL
+          // ArbitraryLengthPath.
+          val (kind, p0) = ps.closure.get
+          val selfVals = nonLitTargets.select(col("focus"), col("fo").as("o"))
+          def oneStep = scan(Seq(p0)).select(col("s").as("focus"), col("o"))
+          def plus = {
+            val res = sparqlEngine.select(
+              s"SELECT ?this ?value WHERE { ?this <$p0>+ ?value }")
+            res.join(bf(nonLitTargets), termEq(res("this"),
+                nonLitTargets("fo")), "left_semi")
+              .select(res("this").getField("value").as("focus"),
+                res("value").as("o"))
+          }
+          kind match {
+            case "?" => oneStep.unionByName(selfVals).distinct()
+            case "+" => plus
+            case _ => plus.unionByName(selfVals).distinct()
           }
         }
+        else if (ps.seq.nonEmpty)
+          // SEQUENCE path: chain one predicate-filtered join per step —
+          // intermediate hops traverse IRI/bnode objects only
+          ps.seq.tail.foldLeft(scan(ps.seq.take(1))
+              .select(col("s").as("focus"), col("o"))) { (acc, step) =>
+            acc.filter(col("o.kind") =!= Rdf.KindLiteral)
+              .join(data.filter(col("p") === step)
+                .select(col("s").as("_s"), col("o").as("_o")),
+                col("o.value") === col("_s"))
+              .select(col("focus"), col("_o").as("o"))
+          }
+        else
+          // inverse: the focus is the object IRI, the value node the
+          // subject (as an IRI term)
+          atFocus(data.filter(col("p") === ps.path &&
+              col("o.kind") =!= Rdf.KindLiteral), col("o.value"))
+            .select(col("o.value").as("focus"), struct(
+              lit(Rdf.KindIri).cast(ByteType).as("kind"),
+              col("s").as("value"),
+              nullS.as("dtype"), nullS.as("lang"),
+              lit(null).cast(DoubleType).as("num")).as("o"))
 
-        // ---- closed: every quad of a focus node whose predicate is not
-        // declared by some property shape (nor ignored) is a violation.
-        val closedViolations = if (!shape.closed) Nil else {
-          val declared = shape.properties
-            .filter(p => !p.inverse && p.seq.isEmpty && p.alt.isEmpty &&
-              p.closure.isEmpty).map(_.path) ++
-            shape.ignored
-          val offending = data
-            .join(bf(focusNonLit), data("s") === col("focus"), "inner")
-            .filter(!col("p").isin(declared: _*))
-          Seq(offending.select(col("focus"), col("p").as("result_path"),
-            lit("sh:ClosedConstraintComponent").as("component"),
-            col("o.value").as("value"), lit(shape.id).as("shape"),
-            lit(shape.severity).as("severity"),
-            shape.message.map(lit(_)).getOrElse(nullS).as("message")))
+      // the rows of one pass, `(focus, fo, tag, o)`: the given focus rows
+      // (tag -1), plus the value rows of each (property shape, tag), whose
+      // `fo` is null. Every direct predicate is read by ONE scan; a
+      // predicate several property shapes read carries all their tags.
+      def taggedRows(focusRows: Option[DataFrame],
+          tagged: Seq[(PropertyShape, Int)]): DataFrame = {
+        val tags = tagged.flatMap { case (ps, i) => direct(ps).map(_ -> i) }
+          .groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (p, ts) => p -> ts.map(_._2).distinct }
+        val noFo = lit(null).cast(targets.schema("fo").dataType).as("fo")
+        val directRows = if (tags.isEmpty) None else Some(
+          scan(tags.map(_._1)).select(col("s").as("focus"), noFo,
+            explode(map(tags.flatMap { case (p, ts) =>
+              Seq(lit(p), array(ts.map(lit): _*)) }: _*)(col("p"))).as("tag"),
+            col("o")))
+        val pathRows = tagged.filter(t => direct(t._1).isEmpty).map {
+          case (ps, i) => values(ps).select(col("focus"), noFo,
+            lit(i).as("tag"), col("o"))
+        }
+        val focusPart = focusRows.map(_.select(col("focus"), col("fo"),
+          lit(-1).as("tag"), lit(null).cast(data.schema("o").dataType).as("o")))
+        (focusPart ++ directRows ++ pathRows).reduce(_.unionByName(_))
+      }
+
+      // ---- VALUE pass
+      val nodeLevel = nodeChecks(shape, col("fo")).map { case (c, bad) =>
+        Check(col("tag") === -1 && bad, nullS, c, col("focus"), shape.id,
+          shape.severity, shape.message)
+      }
+      val valueLevel = props.map { case (ps, i) =>
+        (ps, i) -> rowChecks(ps, col("o")).map { case (c, bad, msg) =>
+          Check(col("tag") === i && bad, lit(ps.path), c, col("o.value"),
+            shape.id, ps.severity, msg)
+        }
+      }.filter(_._2.nonEmpty)
+      val valuePass =
+        if (nodeLevel.isEmpty && valueLevel.isEmpty) Nil
+        else Seq(violationRows(
+          taggedRows(if (nodeLevel.isEmpty) None else Some(targets.distinct()),
+            valueLevel.map(_._1)), Seq("focus"),
+          nodeLevel ++ valueLevel.flatMap(_._2)))
+
+      // ---- COUNTING pass: (property shape, tag, count, component, bad)
+      val counted = props.flatMap { case (ps, i) =>
+        def n(c: Column) = count(when(col("tag") === i && c, 1))
+        def gate(q: Column, cmp: String, min: Option[Int], max: Option[Int]) =
+          min.map(m => (ps, i, q, s"sh:${cmp}MinCountConstraintComponent",
+            (_: Column) < m)).toSeq ++
+          max.map(m => (ps, i, q, s"sh:${cmp}MaxCountConstraintComponent",
+            (_: Column) > m))
+        gate(n(lit(true)), "", ps.minCount, ps.maxCount) ++
+        ps.hasValue.map(t => (ps, i, n(termEqC(col("o"), t)),
+          "sh:HasValueConstraintComponent", (_: Column) === 0)) ++
+        ps.qualified.toSeq.flatMap(vc => gate(n(passesC(col("o"), vc)),
+          "Qualified", ps.qualifiedMinCount, ps.qualifiedMaxCount))
+      }
+      // The focus rows are the targets as given (the grouping makes them
+      // distinct), keyed by the focus string alone for IRI and blank
+      // focus nodes — their value rows carry no term — and by the whole
+      // term for a literal focus node, which has no value rows.
+      val countPass = if (counted.isEmpty) Nil else {
+        val aggs = counted.zipWithIndex.map { case ((_, _, n, _, _), k) =>
+          n.as(s"_n$k") }
+        val counts = taggedRows(Some(targets.select(col("focus"),
+              when(col("fo.kind") === Rdf.KindLiteral, col("fo")).as("fo"))),
+            counted.map { case (ps, i, _, _, _) => (ps, i) }.distinct)
+          .groupBy(col("focus"), col("fo")).agg(aggs.head, aggs.tail: _*)
+        Seq(violationRows(counts, Seq("focus"), counted.zipWithIndex.map {
+          case ((ps, _, _, component, bad), k) => Check(bad(col(s"_n$k")),
+            lit(ps.path), component, nullS, shape.id, ps.severity, ps.message)
+        }))
+      }
+
+      // ---- closed: every quad of a focus node whose predicate is not
+      // declared by some property shape (nor ignored) is a violation.
+      val closedViolations = if (!shape.closed) Nil else {
+        val declared = shape.properties
+          .filter(p => !p.inverse && p.seq.isEmpty && p.alt.isEmpty &&
+            p.closure.isEmpty).map(_.path) ++
+          shape.ignored
+        Seq(violation(atFocus(data, col("s"))
+          .filter(!col("p").isin(declared: _*))
+          .select(col("s").as("focus"), col("p"), col("o")),
+          col("p"), "sh:ClosedConstraintComponent", col("o.value"),
+          shape.severity, shape.message))
+      }
+
+      // ---- sh:sparql: run the constraint query ONCE over the data and
+      // keep the solutions whose ?this term IS a focus node — the
+      // set-based form of the spec's per-focus $this pre-binding. The
+      // focus side follows the broadcastFocus hint (see validate); ?path
+      // (node shapes) and ?value projections feed the report when present.
+      def sparqlViolations(sc: SparqlConstraint, text: String, owner: String,
+          path: Option[String], sev: String, msg: Option[String]): DataFrame = {
+        val res = sparqlEngine.select(text)
+        require(res.columns.contains("this"),
+          s"SHACL: sh:select of $owner must project " + "$this")
+        // qualify the focus side's column: the sh:select may legally
+        // project a variable named ?fo, which an unqualified col("fo")
+        // would make ambiguous
+        def field(v: String, default: Column): Column =
+          if (res.columns.contains(v)) res(v).getField("value") else default
+        val focus = res("this").getField("value")
+        val hits = res.join(bf(targets), termEq(res("this"), targets("fo")),
+            "left_semi")
+          .select(focus.as("focus"),
+            path.map(lit(_)).getOrElse(field("path", nullS)).as("_path"),
+            field("value", focus).as("_value"))
+        violation(hits, col("_path"), sc.component, col("_value"), sev,
+          sc.message.orElse(msg))
+      }
+
+      // ---- property-shape components that need other data
+      val propViolations = shape.properties.flatMap { ps =>
+        lazy val vals = values(ps)
+        val isLit = col("o.kind") === Rdf.KindLiteral
+        def pv(df: DataFrame, component: String, value: Column = col("o.value"),
+            msg: Option[String] = ps.message): DataFrame =
+          violation(df, lit(ps.path), component, value, ps.severity, msg)
+
+        val classV = ps.clazz.map { c =>
+          // SHACL-instance: value has rdf:type t with t ⊑ c. One
+          // left-anti join against the typed-instance set.
+          val instanceOf = data.filter(col("p") === Rdf.RdfType &&
+              col("o.kind") === Rdf.KindIri &&
+              col("o.value").isin(subClosure(c): _*))
+            .select(col("s").as("inst")).distinct()
+          // literals never have a class: they match no instance
+          pv(vals.join(instanceOf, col("o.value") === col("inst") && !isLit,
+            "left_anti"), "sh:ClassConstraintComponent")
         }
 
-        // ---- property shapes
-        val propViolations = shape.properties.flatMap { ps =>
-          // value nodes: (focus, o) — forward: focus is subject; inverse:
-          // focus is the object IRI, value node is the subject (as IRI term).
-          val vals =
-            if (ps.alt.nonEmpty)
-              // sh:alternativePath: ONE scan with a predicate IN-list —
-              // the union of every alternative's values
-              data.filter(col("p").isin(ps.alt: _*))
-                .join(bf(focusNonLit), col("s") === col("focus"), "inner")
-                .select(col("focus"), col("o"))
-            else if (ps.closure.isDefined) {
-              // closure paths (r12 cont.): `+` evaluates through the
-              // engine's OWN distributed property-path machinery
-              // (semi-naive frontier, lineage cuts — never a driver loop);
-              // zero-length contributes the focus node itself. Set
-              // semantics per SPARQL ArbitraryLengthPath.
-              val (kind, p0) = ps.closure.get
-              val selfVals = focusNonLit
-                .select(col("focus"), col("fo").as("o"))
-              def oneStep = data.filter(col("p") === p0)
-                .join(bf(focusNonLit), col("s") === col("focus"), "inner")
-                .select(col("focus"), col("o"))
-              def plus = {
-                val res = sparqlEngine.select(
-                  s"SELECT ?this ?value WHERE { ?this <$p0>+ ?value }")
-                val t = res("this")
-                val fo = focusNonLit("fo")
-                res.join(bf(focusNonLit),
-                  t.getField("kind") === fo.getField("kind") &&
-                    t.getField("value") === fo.getField("value") &&
-                    (t.getField("dtype") <=> fo.getField("dtype")) &&
-                    (t.getField("lang") <=> fo.getField("lang")), "inner")
-                  .select(focusNonLit("focus").as("focus"),
-                    res("value").as("o"))
-              }
-              kind match {
-                case "?" => oneStep.unionByName(selfVals).distinct()
-                case "+" => plus
-                case _ => plus.unionByName(selfVals).distinct()
-              }
-            }
-            else if (ps.seq.nonEmpty)
-              // SEQUENCE path: chain one predicate-filtered join per step —
-              // intermediate hops traverse IRI/bnode objects only
-              ps.seq.zipWithIndex.foldLeft(
-                focusNonLit.select(col("focus"),
-                  col("focus").as("_hop"))) { case (acc, (step, i)) =>
-                val last = i == ps.seq.size - 1
-                val quads = data.filter(col("p") === step)
-                  .select(col("s").as("_s"), col("o").as("_o"))
-                val joined = acc.join(quads, col("_hop") === col("_s"))
-                if (last) joined.select(col("focus"), col("_o").as("o"))
-                else joined
-                  .filter(col("_o.kind") =!= Rdf.KindLiteral)
-                  .select(col("focus"), col("_o.value").as("_hop"))
-              }
-            else if (!ps.inverse)
-              data.filter(col("p") === ps.path)
-                .join(bf(focusNonLit), col("s") === col("focus"), "inner")
-                .select(col("focus"), col("o"))
-            else
-              data.filter(col("p") === ps.path && col("o.kind") =!= Rdf.KindLiteral)
-                .join(bf(focusNonLit), col("o.value") === col("focus"), "inner")
-                .select(col("focus"), struct(
-                  lit(Rdf.KindIri).cast(ByteType).as("kind"),
-                  col("s").as("value"),
-                  nullS.as("dtype"), nullS.as("lang"),
-                  lit(null).cast(DoubleType).as("num")).as("o"))
-
-          val lex = col("o.value")
-          val isLit = col("o.kind") === Rdf.KindLiteral
-
-          def valueViolation(bad: Column, component: String): DataFrame =
-            violation(vals.filter(bad), Some(ps.path), component, lex,
-              shape.id, ps.severity, ps.message)
-
-          // all value-level components compile through the SAME builder the
-          // streaming row-level validator uses (valueChecks)
-          val perValue: Seq[DataFrame] =
-            valueChecks(ps, col("o")).map { case (component, bad) =>
-              valueViolation(bad, component)
-            } ++
-            ps.clazz.map { c =>
-              // SHACL-instance: value has rdf:type t with t ⊑ c. One
-              // left-anti join against the typed-instance set.
-              val instanceOf = data.filter(col("p") === Rdf.RdfType &&
-                  col("o.kind") === Rdf.KindIri &&
-                  col("o.value").isin(subClosure(c): _*))
-                .select(col("s").as("inst")).distinct()
-              val bad = vals.filter(!isLit)
-                .join(instanceOf, col("o.value") === col("inst"), "left_anti")
-                .unionAll(vals.filter(isLit)) // literals never have a class
-              violation(bad, Some(ps.path), "sh:ClassConstraintComponent",
-                lex, shape.id, ps.severity, ps.message)
-            }.toSeq ++
-            ps.node.map { ref =>
-              // sh:node (ONE level): each value node must CONFORM to the
-              // referenced shape — evaluated by validating the value set
-              // as that shape's focus nodes and flagging any value that
-              // produced a violation. Literal values cannot carry the
-              // referenced shape's property constraints → violation.
-              val rShape = shapes.find(_.id == ref).getOrElse(
-                throw new IllegalArgumentException(
-                  s"SHACL: sh:node references unknown shape <$ref>"))
-              if (seen(ref)) throw new IllegalArgumentException(
-                s"SHACL: cyclic sh:node reference chain at <$ref> " +
-                  "(recursive shape validation is undefined per spec)")
-              val valueFocus = vals.filter(!isLit)
-                .select(col("o.value").as("focus"),
-                  col("o").as("fo")).distinct()
-              val nonConf = shapeViolations(rShape, valueFocus, seen + ref)
-                .map(_.select(col("focus").as("_ncf")))
-                .reduceOption(_.unionAll(_))
-                .map(_.distinct())
-                .getOrElse(Seq.empty[String].toDF("_ncf"))
-              val bad = vals.join(nonConf, col("o.value") === col("_ncf"))
-                .select(col("focus"), col("o"))
-                .unionAll(vals.filter(isLit))
-              violation(bad, Some(ps.path), "sh:NodeConstraintComponent",
-                lex, shape.id, ps.severity, ps.message)
-            }.toSeq
-
-          // cardinality: counts per focus with absent → 0 via left join.
-          // LITERAL focus nodes (possible via sh:targetObjectsOf) have no
-          // outgoing arcs BY DEFINITION — they count 0 directly rather
-          // than joining by focus string, so a literal spelled identically
-          // to an IRI subject can never inherit that subject's count.
-          val cardinality: Seq[DataFrame] =
-            if (ps.minCount.isEmpty && ps.maxCount.isEmpty) Nil
-            else {
-              val counts = focusNonLit.join(
-                vals.groupBy(col("focus")).agg(count(lit(1)).as("n")),
-                Seq("focus"), "left")
-                .select(col("focus"), coalesce(col("n"), lit(0L)).as("n"))
-                .unionAll(focus
-                  .filter(col("fo").getField("kind") === Rdf.KindLiteral)
-                  .select(col("focus"), lit(0L).as("n")))
-              ps.minCount.map(n => violation(counts.filter(col("n") < n),
-                Some(ps.path), "sh:MinCountConstraintComponent", nullS,
-                shape.id, ps.severity, ps.message)).toSeq ++
-              ps.maxCount.map(n => violation(counts.filter(col("n") > n),
-                Some(ps.path), "sh:MaxCountConstraintComponent", nullS,
-                shape.id, ps.severity, ps.message)).toSeq
-            }
-
-          // literal focus nodes can never have the value (no arcs): they
-          // violate unconditionally, and are kept out of the string-keyed
-          // anti-join for the same collision reason as cardinality above.
-          val hasValueV: Seq[DataFrame] = ps.hasValue.map { t =>
-            val having = vals.filter(termEqC(col("o"), t))
-              .select(col("focus")).distinct()
-            violation(focusNonLit.join(having, Seq("focus"), "left_anti")
-                .unionAll(focus.filter(
-                  col("fo").getField("kind") === Rdf.KindLiteral)),
-              Some(ps.path), "sh:HasValueConstraintComponent", nullS,
-              shape.id, ps.severity, ps.message)
-          }.toSeq
-
-          val uniqueLangV: Seq[DataFrame] =
-            if (!ps.uniqueLang) Nil
-            else Seq(violation(
-              vals.filter(col("o.lang").isNotNull)
-                .groupBy(col("focus"), col("o.lang").as("lg"))
-                .agg(count(lit(1)).as("n")).filter(col("n") > 1),
-              Some(ps.path), "sh:UniqueLangConstraintComponent", col("lg"),
-              shape.id, ps.severity, ps.message))
-
-          // ---- property-PAIR components (r12 cont.): the OTHER property's
-          // values at the SAME focus node — one more predicate-filtered scan
-          // joined to the focus set, then per-focus set algebra
-          // against the path's value set. Renamed columns keep the
-          // self-joins unambiguous.
-          def otherVals(prop: String): DataFrame =
-            data.filter(col("p") === prop)
-              .join(bf(focusNonLit), col("s") === col("focus"), "inner")
-              .select(col("focus").as("focus2"), col("o").as("o2"))
-
-          val pairEq: Seq[DataFrame] = ps.equalsP.toSeq.flatMap { prop =>
-            val other = otherVals(prop)
-            // sh:equals: the two value SETS must coincide — a violation per
-            // path value missing from the other property (anti-join on the
-            // full term) and per other-property value missing from the path
-            val missing = vals.join(other,
-              col("focus") === col("focus2") && (col("o") <=> col("o2")),
-              "left_anti")
-            val extra = other.join(vals,
-              col("focus2") === col("focus") && (col("o2") <=> col("o")),
-              "left_anti").select(col("focus2").as("focus"), col("o2").as("o"))
-            Seq(violation(missing, Some(ps.path),
-                "sh:EqualsConstraintComponent", lex,
-                shape.id, ps.severity, ps.message),
-              violation(extra, Some(ps.path),
-                "sh:EqualsConstraintComponent", lex,
-                shape.id, ps.severity, ps.message))
-          }
-
-          val pairDisj: Seq[DataFrame] = ps.disjointP.toSeq.map { prop =>
-            // sh:disjoint: a violation per path value that ALSO appears as
-            // a value of the other property at this focus (semi-join)
-            val other = otherVals(prop)
-            val shared = vals.join(other,
-              col("focus") === col("focus2") && (col("o") <=> col("o2")),
-              "left_semi")
-            violation(shared, Some(ps.path),
-              "sh:DisjointConstraintComponent", lex,
-              shape.id, ps.severity, ps.message)
-          }
-
-          // sh:lessThan / sh:lessThanOrEquals: EVERY (path value, other
-          // value) pair at the focus must compare — numeric/temporal pairs
-          // by the num shadow, plain-string pairs lexically; a
-          // non-comparable pair is a violation per spec (the coalesce keeps
-          // SQL NULL from silently passing it).
-          def pairCmp(prop: String, orEqual: Boolean, component: String)
-              : DataFrame = {
-            val other = otherVals(prop)
-            val joined = vals.join(other, col("focus") === col("focus2"))
-            val n1 = col("o.num"); val n2 = col("o2.num")
-            val bothNum = n1.isNotNull && n2.isNotNull
-            val bothStr = col("o.kind") === Rdf.KindLiteral &&
-              col("o2.kind") === Rdf.KindLiteral &&
-              effDtypeC(col("o")) === Rdf.XsdString &&
-              effDtypeC(col("o2")) === Rdf.XsdString
-            val ok = when(bothNum, if (orEqual) n1 <= n2 else n1 < n2)
-              .when(bothStr,
-                if (orEqual) col("o.value") <= col("o2.value")
-                else col("o.value") < col("o2.value"))
-              .otherwise(lit(false))
-            violation(joined.filter(!ok).select(col("focus"), col("o")),
-              Some(ps.path), component, lex, shape.id, ps.severity, ps.message)
-          }
-          val pairLt: Seq[DataFrame] =
-            ps.lessThanP.toSeq.map(pairCmp(_, orEqual = false,
-              "sh:LessThanConstraintComponent")) ++
-            ps.lessThanOrEqualsP.toSeq.map(pairCmp(_, orEqual = true,
-              "sh:LessThanOrEqualsConstraintComponent"))
-
-          // ---- sh:qualifiedValueShape (r12 cont.): count the values
-          // passing the qualifying VALUE-level shape per focus (absent → 0,
-          // literal focus nodes count 0 — same posture as cardinality) and
-          // gate on qualifiedMin/MaxCount.
-          val qualifiedV: Seq[DataFrame] = ps.qualified.toSeq.flatMap { vc =>
-            val counts = focusNonLit.join(
-              vals.filter(passesC(col("o"), vc))
-                .groupBy(col("focus")).agg(count(lit(1)).as("n")),
-              Seq("focus"), "left")
-              .select(col("focus"), coalesce(col("n"), lit(0L)).as("n"))
-              .unionAll(focus
-                .filter(col("fo").getField("kind") === Rdf.KindLiteral)
-                .select(col("focus"), lit(0L).as("n")))
-            ps.qualifiedMinCount.map(n => violation(counts.filter(col("n") < n),
-              Some(ps.path), "sh:QualifiedMinCountConstraintComponent", nullS,
-              shape.id, ps.severity, ps.message)).toSeq ++
-            ps.qualifiedMaxCount.map(n => violation(counts.filter(col("n") > n),
-              Some(ps.path), "sh:QualifiedMaxCountConstraintComponent", nullS,
-              shape.id, ps.severity, ps.message)).toSeq
-          }
-
-          // ---- instantiated custom ASK constraints (SHACL-SPARQL §6,
-          // r12 cont.): FILTER-only bodies are one codegen'd predicate per
-          // value node; PATTERN bodies (late r12) rewrite `ASK { P }` as a
-          // SELECT over the data projecting the pre-bound vars — a
-          // candidate (focus, value) conforms iff a solution matches it,
-          // so violations are ONE anti-join against the solution set (one
-          // query + one join, never per-pair execution). `$PATH`
-          // substitutes like SELECT validators; the component IRI lands
-          // in the report either way.
-          val shaclPathText =
-            if (ps.seq.nonEmpty) ps.seq.map(p => s"<$p>").mkString("/")
-            else if (ps.alt.nonEmpty) ps.alt.map(p => s"<$p>").mkString("|")
-            else if (ps.closure.isDefined) {
-              val (k, p0) = ps.closure.get; s"<$p0>$k"
-            }
-            else if (ps.inverse) s"^<${ps.path}>"
-            else s"<${ps.path}>"
-          val customV: Seq[DataFrame] = ps.custom.map { cc =>
-            val text = cc.text.replace("$PATH", shaclPathText)
-            filterOnlyAsk(text) match {
-              case Some(fns) =>
-                val res: String => Column = {
-                  case "value" => col("o")
-                  case other => throw new IllegalArgumentException(
-                    s"SHACL: FILTER-only ASK validators may reference only " +
-                      s"$$value, got ?$other (use a pattern body or a " +
-                      "SELECT validator for $this correlation)")
-                }
-                val bad = !coalesce(fns.map(_(res)).reduce(_ && _), lit(false))
-                violation(vals.filter(bad), Some(ps.path),
-                  cc.component, lex, shape.id, ps.severity,
-                  cc.message.orElse(ps.message))
-              case None =>
-                require("[?$]this\\b".r.findFirstIn(text).isDefined,
-                  s"SHACL: a pattern ASK validator must reference $$this " +
-                    s"(${cc.component})")
-                val usesValue = "[?$]value\\b".r.findFirstIn(text).isDefined
-                val selText = text.replaceFirst("(?i)\\bASK\\b",
-                  "SELECT ?this ?value WHERE")
-                val res = sparqlEngine.select(selText)
-                val t = res("this")
-                val vT = res("value")
-                val cond = (t.getField("value") === col("focus")) &&
-                  (if (!usesValue) lit(true)
-                   else vT.getField("kind") === col("o.kind") &&
-                     vT.getField("value") === col("o.value") &&
-                     (vT.getField("dtype") <=> col("o.dtype")) &&
-                     (vT.getField("lang") <=> col("o.lang")))
-                violation(vals.join(res, cond, "left_anti"), Some(ps.path),
-                  cc.component, lex, shape.id, ps.severity,
-                  cc.message.orElse(ps.message))
-            }
-          }
-
-          // ---- sh:sparql on PROPERTY shapes (r12 cont.): same set-based
-          // $this machinery as the node level; `$PATH` substitutes the
-          // shape's SPARQL path text per the spec's validator convention,
-          // so `$this $PATH ?value` reads the constrained values.
-          val propSparqlV: Seq[DataFrame] = ps.sparql.map { sc =>
-            val pathText =
-              if (ps.seq.nonEmpty) ps.seq.map(p => s"<$p>").mkString("/")
-              else if (ps.alt.nonEmpty) ps.alt.map(p => s"<$p>").mkString("|")
-              else if (ps.closure.isDefined) {
-                val (k, p0) = ps.closure.get; s"<$p0>$k"
-              }
-              else if (ps.inverse) s"^<${ps.path}>"
-              else s"<${ps.path}>"
-            val res = sparqlEngine.select(sc.select.replace("$PATH", pathText))
-            require(res.columns.contains("this"),
-              s"SHACL: sh:select of property shape ${ps.id} must project " +
-                "$this")
-            val component = sc.component
-            val t = res("this")
-            val fo = focus("fo")
-            val joined = res.join(bf(focus),
-              t.getField("kind") === fo.getField("kind") &&
-                t.getField("value") === fo.getField("value") &&
-                (t.getField("dtype") <=> fo.getField("dtype")) &&
-                (t.getField("lang") <=> fo.getField("lang")), "inner")
-            val valueC = if (res.columns.contains("value"))
-              res("value").getField("value") else focus("focus")
-            joined.select(focus("focus").as("focus"),
-              lit(ps.path).as("result_path"),
-              lit(component).as("component"),
-              valueC.as("value"),
-              lit(shape.id).as("shape"),
-              lit(ps.severity).as("severity"),
-              sc.message.orElse(ps.message)
-                .map(lit(_)).getOrElse(nullS).as("message"))
-          }
-
-          perValue ++ cardinality ++ hasValueV ++ uniqueLangV ++
-            pairEq ++ pairDisj ++ pairLt ++ qualifiedV ++ customV ++
-            propSparqlV
+        val nodeV = ps.node.map { ref =>
+          // sh:node: each value node must CONFORM to the referenced shape —
+          // evaluated by validating the value set as that shape's focus
+          // nodes and flagging any value that produced a violation. Literal
+          // values cannot carry the referenced shape's property constraints
+          // → violation.
+          val rShape = shapes.find(_.id == ref).getOrElse(
+            throw new IllegalArgumentException(
+              s"SHACL: sh:node references unknown shape <$ref>"))
+          if (seen(ref)) throw new IllegalArgumentException(
+            s"SHACL: cyclic sh:node reference chain at <$ref> " +
+              "(recursive shape validation is undefined per spec)")
+          val valueFocus = vals.filter(!isLit)
+            .select(col("o.value").as("focus"), col("o").as("fo"))
+          val nonConf = shapeViolations(rShape, valueFocus, seen + ref)
+            .map(_.select(col("focus").as("_ncf")))
+            .reduceOption(_.unionAll(_))
+            .map(_.distinct())
+            .getOrElse(Seq.empty[String].toDF("_ncf"))
+          pv(vals.join(nonConf, col("o.value") === col("_ncf") && !isLit, "left")
+            .filter(isLit || col("_ncf").isNotNull), "sh:NodeConstraintComponent")
         }
 
-        // ---- sh:sparql: run the constraint query ONCE over the data and
-        // keep the solutions whose ?this term IS a focus node — the
-        // set-based form of the spec's per-focus $this pre-binding. The
-        // focus side follows the broadcastFocus hint (see validate);
-        // ?path / ?value projections feed the report when present.
-        val sparqlViolations = shape.sparql.map { sc =>
-          val res = sparqlEngine.select(sc.select)
-          require(res.columns.contains("this"),
-            s"SHACL: sh:select of shape ${shape.id} must project " + "$this")
-          val t = res("this")
-          // qualify the focus side's columns: the sh:select may legally
-          // project a variable named ?fo, which an unqualified col("fo.…")
-          // would make ambiguous
-          val fo = focus("fo")
-          val joined = res.join(bf(focus),
-            t.getField("kind") === fo.getField("kind") &&
-              t.getField("value") === fo.getField("value") &&
-              (t.getField("dtype") <=> fo.getField("dtype")) &&
-              (t.getField("lang") <=> fo.getField("lang")), "inner")
-          val pathC = if (res.columns.contains("path"))
-            res("path").getField("value") else nullS
-          val valueC = if (res.columns.contains("value"))
-            res("value").getField("value") else focus("focus")
-          joined.select(focus("focus").as("focus"),
-            pathC.as("result_path"),
-            lit(sc.component).as("component"),
-            valueC.as("value"),
-            lit(shape.id).as("shape"),
-            lit(shape.severity).as("severity"),
-            sc.message.orElse(shape.message)
-              .map(lit(_)).getOrElse(nullS).as("message"))
+        val uniqueLangV = if (!ps.uniqueLang) None else Some(pv(
+          vals.filter(col("o.lang").isNotNull)
+            .groupBy(col("focus"), col("o.lang").as("lg"))
+            .agg(count(lit(1)).as("n")).filter(col("n") > 1),
+          "sh:UniqueLangConstraintComponent", col("lg")))
+
+        // ---- property-PAIR components: the OTHER property's values at the
+        // SAME focus node — one more predicate-filtered scan joined to the
+        // focus set, then per-focus set algebra against the path's value
+        // set. Renamed columns keep the self-joins unambiguous.
+        def otherVals(prop: String): DataFrame = scan(Seq(prop))
+          .select(col("s").as("focus2"), col("o").as("o2"))
+        val sameTerm = col("focus") === col("focus2") && (col("o") <=> col("o2"))
+
+        val pairEq = ps.equalsP.toSeq.flatMap { prop =>
+          // sh:equals: the two value SETS must coincide — a violation per
+          // path value missing from the other property (anti-join on the
+          // full term) and per other-property value missing from the path
+          val other = otherVals(prop)
+          Seq(vals.join(other, sameTerm, "left_anti"),
+            other.join(vals, sameTerm, "left_anti")
+              .select(col("focus2").as("focus"), col("o2").as("o")))
+            .map(pv(_, "sh:EqualsConstraintComponent"))
         }
 
-        nodeKindViolations ++ nodeLogicViolations ++ closedViolations ++
-          propViolations ++ sparqlViolations
+        // sh:disjoint: a violation per path value that ALSO appears as a
+        // value of the other property at this focus (semi-join)
+        val pairDisj = ps.disjointP.map(prop => pv(
+          vals.join(otherVals(prop), sameTerm, "left_semi"),
+          "sh:DisjointConstraintComponent"))
+
+        // sh:lessThan / sh:lessThanOrEquals: EVERY (path value, other
+        // value) pair at the focus must compare — numeric/temporal pairs
+        // by the num shadow, plain-string pairs lexically; a
+        // non-comparable pair is a violation per spec (the coalesce keeps
+        // SQL NULL from silently passing it).
+        def pairCmp(prop: String, orEqual: Boolean, component: String)
+            : DataFrame = {
+          val n1 = col("o.num"); val n2 = col("o2.num")
+          val bothStr = col("o.kind") === Rdf.KindLiteral &&
+            col("o2.kind") === Rdf.KindLiteral &&
+            effDtypeC(col("o")) === Rdf.XsdString &&
+            effDtypeC(col("o2")) === Rdf.XsdString
+          val ok = when(n1.isNotNull && n2.isNotNull,
+              if (orEqual) n1 <= n2 else n1 < n2)
+            .when(bothStr,
+              if (orEqual) col("o.value") <= col("o2.value")
+              else col("o.value") < col("o2.value"))
+            .otherwise(lit(false))
+          pv(vals.join(otherVals(prop), col("focus") === col("focus2"))
+            .filter(!ok), component)
+        }
+        val pairLt =
+          ps.lessThanP.map(pairCmp(_, orEqual = false,
+            "sh:LessThanConstraintComponent")) ++
+          ps.lessThanOrEqualsP.map(pairCmp(_, orEqual = true,
+            "sh:LessThanOrEqualsConstraintComponent"))
+
+        // ---- custom ASK validators with TRIPLE-PATTERN bodies (the
+        // FILTER-only ones are row-level, in the value pass): `ASK { P }`
+        // rewrites as a SELECT over the data projecting the pre-bound vars
+        // — a candidate (focus, value) conforms iff a solution matches it,
+        // so violations are ONE anti-join against the solution set (one
+        // query + one join, never per-pair execution). `$PATH` substitutes
+        // like SELECT validators; the component IRI lands in the report.
+        val patternAskV = ps.custom.flatMap { cc =>
+          val text = cc.text.replace("$PATH", pathText(ps))
+          if (filterOnlyAsk(text).isDefined) None else {
+            require("[?$]this\\b".r.findFirstIn(text).isDefined,
+              s"SHACL: a pattern ASK validator must reference $$this " +
+                s"(${cc.component})")
+            val usesValue = "[?$]value\\b".r.findFirstIn(text).isDefined
+            val res = sparqlEngine.select(text.replaceFirst("(?i)\\bASK\\b",
+              "SELECT ?this ?value WHERE"))
+            val cond = (res("this").getField("value") === col("focus")) &&
+              (if (usesValue) termEq(res("value"), col("o")) else lit(true))
+            Some(pv(vals.join(res, cond, "left_anti"), cc.component,
+              msg = cc.message.orElse(ps.message)))
+          }
+        }
+
+        // ---- sh:sparql on PROPERTY shapes: `$PATH` substitutes the
+        // shape's SPARQL path text per the spec's validator convention, so
+        // `$this $PATH ?value` reads the constrained values.
+        val propSparqlV = ps.sparql.map(sc => sparqlViolations(sc,
+          sc.select.replace("$PATH", pathText(ps)), s"property shape ${ps.id}",
+          Some(ps.path), ps.severity, ps.message))
+
+        classV.toSeq ++ nodeV ++ uniqueLangV ++ pairEq ++ pairDisj ++
+          pairLt ++ patternAskV ++ propSparqlV
+      }
+
+      val nodeSparqlV = shape.sparql.map(sc => sparqlViolations(sc, sc.select,
+        s"shape ${shape.id}", None, shape.severity, shape.message))
+
+      valuePass ++ countPass ++ closedViolations ++ propViolations ++
+        nodeSparqlV
     }
 
     val reports: Seq[DataFrame] = shapes.flatMap { shape =>
@@ -1267,8 +1200,7 @@ object Shacl {
           .select(col("o.value").as("focus"), col("o").as("fo")))
       ).flatten
       if (targets.isEmpty) Nil
-      else shapeViolations(shape,
-        targets.reduce(_.unionAll(_)).distinct(), Set(shape.id))
+      else shapeViolations(shape, targets.reduce(_.unionAll(_)), Set(shape.id))
     }
 
     if (reports.isEmpty)
@@ -1288,60 +1220,47 @@ object Shacl {
     * quad `(s, p, o)` proves its own focus membership and every check is a
     * pure column predicate. The returned function applies unchanged to a
     * batch OR streaming DataFrame (no state, no aggregation, one scan —
-    * all checks evaluate as one codegen'd array-filter-explode), which is
-    * the continuous data-quality hook on the ingest path. Cardinality,
-    * class, closed, hasValue/uniqueLang, inverse paths, and other target
-    * kinds need the whole focus set and are rejected here — run them in
-    * the batch validator.
+    * the batch validator's value pass, [[violationRows]], applied to the
+    * quads), which is the continuous data-quality hook on the ingest path.
+    * Cardinality, class, closed, hasValue/uniqueLang, inverse paths, and
+    * other target kinds need the whole focus set and are rejected here —
+    * run them in the batch validator.
     *
     * Output: one row per violation `(graph, s, p, value, component,
     * shape, severity, message)`.
     */
   def rowValidator(shapes: Seq[NodeShape]): DataFrame => DataFrame = {
-    val checks: Seq[(String, String, String, String, Option[String], Column)] =
-      shapes.flatMap { shape =>
-        require(shape.targetClass.isEmpty && shape.targetNode.isEmpty &&
-          shape.targetObjectsOf.isEmpty && !shape.closed &&
-          shape.nodeKind.isEmpty && shape.sparql.isEmpty,
-          s"SHACL rowValidator: shape ${shape.id} must target subjects-of only")
-        shape.properties.flatMap { ps =>
-          require(!ps.inverse && ps.seq.isEmpty && ps.alt.isEmpty &&
-            ps.closure.isEmpty &&
-            shape.targetSubjectsOf.contains(ps.path),
-            s"SHACL rowValidator: property path <${ps.path}> of ${shape.id} " +
-              "must be one of the shape's sh:targetSubjectsOf predicates")
-          require(ps.minCount.isEmpty && ps.maxCount.isEmpty &&
-            ps.clazz.isEmpty && ps.hasValue.isEmpty && !ps.uniqueLang &&
-            ps.node.isEmpty && ps.equalsP.isEmpty && ps.disjointP.isEmpty &&
-            ps.lessThanP.isEmpty && ps.lessThanOrEqualsP.isEmpty &&
-            ps.qualified.isEmpty && ps.sparql.isEmpty,
-            s"SHACL rowValidator: ${shape.id} carries non-row-level components")
-          valueChecks(ps, col("o")).map { case (component, bad) =>
-            (shape.id, ps.path, component, ps.severity, ps.message, bad)
-          } ++
-          // custom ASK constraints are FILTER-only over the value — pure
-          // column predicates, so they are row-level too (r12 cont.)
-          ps.custom.map { cc =>
-            (shape.id, ps.path, cc.component, ps.severity,
-              cc.message.orElse(ps.message), customBad(cc, col("o")))
-          }
+    val checks: Seq[Check] = shapes.flatMap { shape =>
+      require(shape.targetClass.isEmpty && shape.targetNode.isEmpty &&
+        shape.targetObjectsOf.isEmpty && !shape.closed &&
+        shape.nodeKind.isEmpty && shape.sparql.isEmpty,
+        s"SHACL rowValidator: shape ${shape.id} must target subjects-of only")
+      shape.properties.flatMap { ps =>
+        require(!ps.inverse && ps.seq.isEmpty && ps.alt.isEmpty &&
+          ps.closure.isEmpty &&
+          shape.targetSubjectsOf.contains(ps.path),
+          s"SHACL rowValidator: property path <${ps.path}> of ${shape.id} " +
+            "must be one of the shape's sh:targetSubjectsOf predicates")
+        require(ps.minCount.isEmpty && ps.maxCount.isEmpty &&
+          ps.clazz.isEmpty && ps.hasValue.isEmpty && !ps.uniqueLang &&
+          ps.node.isEmpty && ps.equalsP.isEmpty && ps.disjointP.isEmpty &&
+          ps.lessThanP.isEmpty && ps.lessThanOrEqualsP.isEmpty &&
+          ps.qualified.isEmpty && ps.sparql.isEmpty,
+          s"SHACL rowValidator: ${shape.id} carries non-row-level components")
+        require(ps.custom.forall(cc =>
+          filterOnlyAsk(cc.text.replace("$PATH", pathText(ps))).isDefined),
+          "SHACL: ROW-LEVEL ASK validators support FILTER-only bodies over " +
+            "$value and the component parameters; pattern bodies evaluate " +
+            "in the batch validator")
+        rowChecks(ps, col("o")).map { case (component, bad, msg) =>
+          Check(col("p") === ps.path && bad, lit(ps.path), component,
+            col("o.value"), shape.id, ps.severity, msg)
         }
       }
-    df => {
-      val hits = array(checks.map { case (sid, path, comp, sev, msg, bad) =>
-        when(col("p") === path && bad, struct(
-          lit(comp).as("component"), lit(sid).as("shape"),
-          lit(sev).as("severity"),
-          msg.map(lit(_)).getOrElse(nullS).as("message")))
-      }: _*)
-      df.withColumn("_hits", filter(hits, h => h.isNotNull))
-        .filter(size(col("_hits")) > 0)
-        .select(col("graph"), col("s"), col("p"),
-          col("o.value").as("value"), explode(col("_hits")).as("h"))
-        .select(col("graph"), col("s"), col("p"), col("value"),
-          col("h.component").as("component"), col("h.shape").as("shape"),
-          col("h.severity").as("severity"), col("h.message").as("message"))
     }
+    df => violationRows(df, Seq("graph", "s", "p"), checks)
+      .select("graph", "s", "p", "value", "component", "shape", "severity",
+        "message")
   }
 
   /** True iff `data` conforms (empty report). */

@@ -147,17 +147,19 @@ final class Repositories(spark: SparkSession) {
 
   /** Transactional SHACL gate: validate a candidate post-state against the
     * repository's shapes; throws (bounded violation sample in the message)
-    * instead of committing when the state does not conform.
+    * instead of committing when the state does not conform. The report is
+    * cut once — validated and counted in one job — and the sample reads the
+    * cut rows; the scope releases them on the throw as on the return.
     */
   private def requireConforms(r: Repo, candidate: DataFrame): Unit =
-    if (r.shapes.nonEmpty) {
-      val report = graft.shacl.Shacl.validate(candidate, r.shapes)
-      val sample = report.limit(4).collect().map(row =>
-        (row.getString(0), row.getString(1), row.getString(2))).toSeq
-      if (sample.nonEmpty) {
-        val total = report.count()
-        throw new graft.shacl.ShaclViolationException(sample, total)
-      }
+    if (r.shapes.nonEmpty) graft.exec.Generations.scope { g =>
+      val (report, total) =
+        g.cut(graft.shacl.Shacl.validate(candidate, r.shapes))
+      if (total > 0) throw new graft.shacl.ShaclViolationException(
+        report.limit(4).collect().map(row =>
+          (row.getString(0), row.getString(1), row.getString(2))).toSeq,
+        total)
+      spark.emptyDataFrame
     }
 
   def list: Seq[String] = repos.keys.toSeq

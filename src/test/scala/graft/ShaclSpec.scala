@@ -311,6 +311,16 @@ class ShaclSpec extends AnyFunSuite {
     assert(e.getMessage.contains("MaxInclusive"))
     val left = repos.quads("shrepo").collect()
     assert(left.length == 1 && left(0).getString(1) == s"$Ex/a")
+    // two violating values in one insert: the exception counts both, and
+    // the store still holds only its committed quad
+    val e2 = intercept[graft.shacl.ShaclViolationException] {
+      repos.update("shrepo",
+        s"INSERT DATA { <$Ex/c> <$Ex/score> 200 . <$Ex/d> <$Ex/score> 300 }")
+    }
+    assert(e2.getMessage.contains("2 violation(s)"), e2.getMessage)
+    assert(e2.sample.map(_._1).toSet == Set(s"$Ex/c", s"$Ex/d"))
+    val after = repos.quads("shrepo").collect()
+    assert(after.length == 1 && after(0).getString(1) == s"$Ex/a")
     // bad shapes fail fast at create
     intercept[IllegalArgumentException] {
       repos.create("bad", graft.sources.RepoConfig(shapesTtl = Some(
@@ -370,6 +380,77 @@ class ShaclSpec extends AnyFunSuite {
            |  sh:property [ sh:path <$Ex/v> ; sh:minCount 1 ] .
            |""".stripMargin)))
     }
+    // every row-level component, through both validators on the same
+    // quads: the violation rows agree as a multiset
+    val allShapes = Shacl.parseShapes(graft.sources.TurtleReader.parse(
+      s"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+         |@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+         |<$Ex/MinScore> a sh:ConstraintComponent ;
+         |  sh:parameter [ sh:path <$Ex/minScore> ] ;
+         |  sh:validator [ sh:ask "ASK { FILTER($$value >= $$minScore) }" ] .
+         |<$Ex/All> a sh:NodeShape ;
+         |  sh:targetSubjectsOf <$Ex/dt>, <$Ex/kind>, <$Ex/pat>, <$Ex/len>,
+         |    <$Ex/rng>, <$Ex/in>, <$Ex/or>, <$Ex/and>, <$Ex/not>, <$Ex/xone>,
+         |    <$Ex/cu> ;
+         |  sh:property [ sh:path <$Ex/dt> ; sh:datatype xsd:integer ] ;
+         |  sh:property [ sh:path <$Ex/kind> ; sh:nodeKind sh:IRI ] ;
+         |  sh:property [ sh:path <$Ex/pat> ; sh:pattern "^ab" ; sh:flags "i" ] ;
+         |  sh:property [ sh:path <$Ex/len> ; sh:minLength 2 ; sh:maxLength 4 ] ;
+         |  sh:property [ sh:path <$Ex/rng> ; sh:minInclusive 0 ;
+         |                sh:maxInclusive 10 ; sh:minExclusive -5 ;
+         |                sh:maxExclusive 9 ] ;
+         |  sh:property [ sh:path <$Ex/in> ; sh:in ( "a" <$Ex/b> 3 ) ] ;
+         |  sh:property [ sh:path <$Ex/or> ;
+         |                sh:or ( [ sh:datatype xsd:integer ] [ sh:minLength 3 ] ) ] ;
+         |  sh:property [ sh:path <$Ex/and> ;
+         |                sh:and ( [ sh:minLength 2 ] [ sh:pattern "^a" ] ) ] ;
+         |  sh:property [ sh:path <$Ex/not> ; sh:not [ sh:datatype xsd:integer ] ] ;
+         |  sh:property [ sh:path <$Ex/xone> ;
+         |                sh:xone ( [ sh:datatype xsd:integer ] [ sh:minInclusive 5 ] ) ] ;
+         |  sh:property [ sh:path <$Ex/cu> ; <$Ex/minScore> 50 ;
+         |                sh:severity sh:Warning ; sh:message "low score" ] .
+         |""".stripMargin))
+    def q(s: String, p: String, o: RdfTerm) = Quad(Rdf.DefaultGraph, s"$Ex/$s", s"$Ex/$p", o)
+    val allData = quads(
+      q("a", "dt", RdfTerm.int(5)), q("a", "dt", RdfTerm.str("5")),
+      Quad(s"$Ex/g2", s"$Ex/b", s"$Ex/dt", RdfTerm.str("x")),
+      q("b", "dt", RdfTerm.str("x")),
+      q("a", "kind", RdfTerm.iri(s"$Ex/b")), q("a", "kind", RdfTerm.str("lit")),
+      q("a", "kind", RdfTerm.blank("_:z")),
+      q("a", "pat", RdfTerm.str("ABc")), q("a", "pat", RdfTerm.str("xab")),
+      q("a", "len", RdfTerm.str("a")), q("a", "len", RdfTerm.str("abc")),
+      q("a", "len", RdfTerm.str("abcdef")),
+      q("a", "rng", RdfTerm.int(5)), q("a", "rng", RdfTerm.int(10)),
+      q("a", "rng", RdfTerm.int(-3)), q("a", "rng", RdfTerm.int(-5)),
+      q("a", "rng", RdfTerm.int(11)), q("a", "rng", RdfTerm.str("x")),
+      q("a", "in", RdfTerm.str("a")), q("a", "in", RdfTerm.iri(s"$Ex/b")),
+      q("a", "in", RdfTerm.int(3)), q("a", "in", RdfTerm.str("c")),
+      q("a", "in", RdfTerm.str("3")),
+      q("a", "or", RdfTerm.int(1)), q("a", "or", RdfTerm.str("abc")),
+      q("a", "or", RdfTerm.str("ab")),
+      q("a", "and", RdfTerm.str("ab")), q("a", "and", RdfTerm.str("b")),
+      q("a", "and", RdfTerm.str("bc")),
+      q("a", "not", RdfTerm.int(1)), q("a", "not", RdfTerm.str("1")),
+      q("a", "xone", RdfTerm.int(7)), q("a", "xone", RdfTerm.int(2)),
+      q("a", "xone", RdfTerm.dbl(6.0)), q("a", "xone", RdfTerm.str("x")),
+      q("a", "cu", RdfTerm.int(60)), q("a", "cu", RdfTerm.int(30)),
+      q("a", "cu", RdfTerm.str("high")))
+    def bag(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (0 until 6).map(r.getString): Seq[String]).groupBy(identity)
+      .map { case (k, v) => k -> v.size }
+    val rowBag = bag(Shacl.rowValidator(allShapes)(allData)
+      .select("s", "p", "component", "value", "severity", "message"))
+    val batchBag = bag(Shacl.validate(allData, allShapes)
+      .select("focus", "result_path", "component", "value", "severity", "message"))
+    assert(rowBag == batchBag)
+    assert(rowBag.keySet.map(_(2)) == Set("Datatype", "NodeKind", "Pattern",
+      "MinLength", "MaxLength", "MinInclusive", "MaxInclusive",
+      "MinExclusive", "MaxExclusive", "In", "Or", "And", "Not", "Xone")
+      .map(c => s"sh:${c}ConstraintComponent") + s"$Ex/MinScore")
+    // the datatype failure asserted in two graphs is two rows
+    assert(rowBag(Seq(s"$Ex/b", s"$Ex/dt", "sh:DatatypeConstraintComponent",
+      "x", "sh:Violation", null)) == 2)
+    assert(rowBag.values.sum == 28, rowBag)
   }
 
   test("sh:node: each value must conform to the referenced shape; " +
@@ -942,6 +1023,120 @@ class ShaclSpec extends AnyFunSuite {
     assert(rows(zooReport) == Set(
       (s"$Ex/w", s"$Ex/boss?", "sh:DatatypeConstraintComponent", s"$Ex/w"),
       (s"$Ex/w", s"$Ex/boss?", "sh:DatatypeConstraintComponent", s"$Ex/m")))
+  }
+
+  test("the report is an exact multiset of rows: a value failing two " +
+      "components, one triple in two graphs, a literal focus under " +
+      "minCount, hasValue and qualified counts") {
+    val data = quads(
+      Quad(Rdf.DefaultGraph, s"$Ex/a", Rdf.RdfType, RdfTerm.iri(s"$Ex/C")),
+      Quad(Rdf.DefaultGraph, s"$Ex/a", s"$Ex/v", RdfTerm.str("TooLong1")),
+      Quad(s"$Ex/g1", s"$Ex/a", s"$Ex/v", RdfTerm.str("TooLong1")),
+      Quad(Rdf.DefaultGraph, s"$Ex/a", s"$Ex/t", RdfTerm.int(7)),
+      Quad(Rdf.DefaultGraph, s"$Ex/a", s"$Ex/t", RdfTerm.str("y")),
+      Quad(Rdf.DefaultGraph, s"$Ex/b", Rdf.RdfType, RdfTerm.iri(s"$Ex/C")),
+      Quad(Rdf.DefaultGraph, s"$Ex/b", s"$Ex/v", RdfTerm.str("ok")),
+      Quad(Rdf.DefaultGraph, s"$Ex/b", s"$Ex/t", RdfTerm.str("x")),
+      Quad(Rdf.DefaultGraph, s"$Ex/b", s"$Ex/t", RdfTerm.int(1)),
+      Quad(Rdf.DefaultGraph, s"$Ex/b", s"$Ex/t", RdfTerm.int(2)),
+      Quad(Rdf.DefaultGraph, s"$Ex/b", s"$Ex/name", RdfTerm.str("B")),
+      Quad(Rdf.DefaultGraph, s"$Ex/c", Rdf.RdfType, RdfTerm.iri(s"$Ex/C")),
+      // the same spelling as an IRI focus and as a literal focus
+      Quad(Rdf.DefaultGraph, s"$Ex/a", s"$Ex/ref", RdfTerm.iri(s"$Ex/b")),
+      Quad(Rdf.DefaultGraph, s"$Ex/a", s"$Ex/ref", RdfTerm.str(s"$Ex/b")))
+    val report = Shacl.validateTtl(data,
+      s"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+         |@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+         |<$Ex/S1> a sh:NodeShape ; sh:targetClass <$Ex/C> ;
+         |  sh:property [ sh:path <$Ex/v> ; sh:pattern "^[a-z]+$$" ;
+         |                sh:maxLength 5 ; sh:maxCount 1 ] ;
+         |  sh:property [ sh:path <$Ex/t> ; sh:hasValue "x" ;
+         |                sh:qualifiedValueShape [ sh:datatype xsd:integer ] ;
+         |                sh:qualifiedMinCount 2 ; sh:message "x and two ints" ] .
+         |<$Ex/S2> a sh:NodeShape ; sh:targetObjectsOf <$Ex/ref> ;
+         |  sh:nodeKind sh:IRI ;
+         |  sh:property [ sh:path <$Ex/name> ; sh:minCount 1 ;
+         |                sh:severity sh:Warning ] .
+         |""".stripMargin)
+    val bag = report.select("focus", "result_path", "component", "value",
+        "severity", "message").collect().toSeq
+      .map(r => (0 until 6).map(r.getString): Seq[String]).groupBy(identity)
+      .map { case (k, v) => k -> v.size }
+    val (a, b, c) = (s"$Ex/a", s"$Ex/b", s"$Ex/c")
+    def comp(n: String) = s"sh:${n}ConstraintComponent"
+    val msg = "x and two ints"
+    assert(bag == Map(
+      Seq(a, s"$Ex/v", comp("Pattern"), "TooLong1", "sh:Violation", null) -> 2,
+      Seq(a, s"$Ex/v", comp("MaxLength"), "TooLong1", "sh:Violation", null) -> 2,
+      Seq(a, s"$Ex/v", comp("MaxCount"), null, "sh:Violation", null) -> 1,
+      Seq(a, s"$Ex/t", comp("HasValue"), null, "sh:Violation", msg) -> 1,
+      Seq(a, s"$Ex/t", comp("QualifiedMinCount"), null, "sh:Violation", msg) -> 1,
+      Seq(c, s"$Ex/t", comp("HasValue"), null, "sh:Violation", msg) -> 1,
+      Seq(c, s"$Ex/t", comp("QualifiedMinCount"), null, "sh:Violation", msg) -> 1,
+      Seq(b, null, comp("NodeKind"), b, "sh:Violation", null) -> 1,
+      Seq(b, s"$Ex/name", comp("MinCount"), null, "sh:Warning", null) -> 1))
+  }
+
+  test("a node shape reads its simple paths in one scan per pass and " +
+      "shuffles only for its counts (the perfbench facility shape)") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      EqualTo, In, InSet, Literal}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeLike}
+    val (fac, lat, lon, name) = (s"$Ex/Facility", s"$Ex/latitude",
+      s"$Ex/longitude", s"$Ex/name")
+    def f(i: Int, la: Double, lo: Double, names: String*) = Seq(
+      Quad(Rdf.DefaultGraph, s"$Ex/f$i", Rdf.RdfType, RdfTerm.iri(fac)),
+      Quad(Rdf.DefaultGraph, s"$Ex/f$i", lat, RdfTerm.dbl(la)),
+      Quad(Rdf.DefaultGraph, s"$Ex/f$i", lon, RdfTerm.dbl(lo))) ++
+      names.map(n => Quad(Rdf.DefaultGraph, s"$Ex/f$i", name, RdfTerm.str(n)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_shacl_plan").resolve("q")
+    quads(f(1, 10, 20, "A") ++ f(2, 95, 20, "B", "B2") ++
+      f(3, -10, 200): _*).repartition(2).write.parquet(dir.toString)
+    val data = spark.read.parquet(dir.toString)
+    val report = Shacl.validateTtl(data,
+      s"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+         |<$Ex/FacilityShape> a sh:NodeShape ; sh:targetClass <$fac> ;
+         |  sh:property [ sh:path <$lat> ; sh:minInclusive -90 ;
+         |                sh:maxInclusive 90 ] ;
+         |  sh:property [ sh:path <$lon> ; sh:minInclusive -180 ;
+         |                sh:maxInclusive 180 ] ;
+         |  sh:property [ sh:path <$name> ; sh:maxCount 1 ] .
+         |""".stripMargin)
+    assert(rows(report) == Set(
+      (s"$Ex/f2", lat, "sh:MaxInclusiveConstraintComponent", "95.0"),
+      (s"$Ex/f2", name, "sh:MaxCountConstraintComponent", null),
+      (s"$Ex/f3", lon, "sh:MaxInclusiveConstraintComponent", "200.0")))
+    report.collect()
+    // the final adaptive plan, reused stages counted once
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    val plan = nodes(report.queryExecution.executedPlan)
+    // predicates each scan reads: its `p = …` / `p IN (…)` data filters
+    val scans = plan.collect { case s: FileSourceScanExec =>
+      s.dataFilters.flatMap(_.collect {
+        case In(a: AttributeReference, l) if a.name == "p" =>
+          l.collect { case Literal(v, _) => v.toString }
+        case InSet(a: AttributeReference, l) if a.name == "p" =>
+          l.map(_.toString)
+        case EqualTo(a: AttributeReference, Literal(v, _)) if a.name == "p" =>
+          Seq(v.toString)
+      }.flatten).toSet
+    }
+    Seq(lat, lon, name).foreach(p =>
+      assert(scans.count(_.contains(p)) == 1, s"$p read by: $scans"))
+    assert(scans.exists(s => s.contains(lat) && s.contains(lon)), scans)
+    // one shuffle, the count aggregation: the focus joins are broadcast
+    // semi-joins, which need no distinct focus set
+    assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+      report.queryExecution.executedPlan)
   }
 
   test("conforms: clean data yields an empty report") {
