@@ -132,7 +132,6 @@ final class Engine(val catalog: GraphCatalog,
     }: _*)
   }
 
-  /** ASK → existence (G7). Driver-side by design: ASK is a scalar. */
   /** EXPLAIN surface (the reference engine's query-plan view): the Spark
     * physical plan of a SPARQL query, formatted — what you read to check
     * pushdown/broadcast/codegen before running at scale.
@@ -147,6 +146,7 @@ final class Engine(val catalog: GraphCatalog,
       "explain supports SELECT queries")
   }
 
+  /** ASK → existence (G7). Driver-side by design: ASK is a scalar. */
   def ask(query: String): Boolean = SparqlParser.parse(query) match {
     case AskQ(op) =>
       runGuarded(!compiler.compile(Slice(0, Some(1), op)).df.isEmpty)

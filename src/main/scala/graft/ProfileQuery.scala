@@ -4,6 +4,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import graft.algebra.ShapeCache
 
 /** Measurement tool (optimization rounds, guide §1/§7): runs named headline
   * queries with a SparkListener and prints per-JOB and per-STAGE wall/metric
@@ -12,7 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * the bench's warm medians. Each rep also prints how many classes Janino
   * compiled and the milliseconds it spent doing so: that time is driver
   * work outside every Spark job, and a warm rep of a query whose constants
-  * reach generated code as parameters compiles nothing.
+  * reach generated code as parameters compiles nothing. Next to it each rep
+  * prints the prepared-query-shape counters of the rep
+  * ([[graft.algebra.ShapeCache.counters]]).
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <q1,q2,...> [reps]
   */
@@ -91,12 +94,16 @@ object ProfileQuery {
         l.reset()
         spark.sparkContext.setJobDescription(s"$name rep$r")
         val (c0, ns0) = (compiles.getCount, CodeGenerator.compileTime)
+        val shapes0 = ShapeCache.counters.toMap
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         val compileMs = (CodeGenerator.compileTime - ns0) / 1e6
+        val shapes = ShapeCache.counters.map { case (k, v) =>
+          s"$k ${v - shapes0(k)}" }.mkString(", ")
         println(f"== $name rep$r: $sec%.3f s wall (cold $warmSec%.3f s); " +
-          f"codegen ${compiles.getCount - c0} compiles, $compileMs%.1f ms")
+          f"codegen ${compiles.getCount - c0} compiles, $compileMs%.1f ms; " +
+          s"query shapes: $shapes")
         println(l.report())
       }
     }

@@ -125,6 +125,21 @@ final case class ServiceOp(endpoint: PTerm, inner: Op, silent: Boolean,
 /** Embed a precomputed solution (path closures, inference output) (G5). */
 final case class Wrap(df: org.apache.spark.sql.DataFrame, cert: Set[String],
     maybe: Set[String] = Set.empty) extends Op
+/** A parsed SELECT or ASK root, compiled through its shape's cached plan
+  * ([[ShapeCache]]). `shape` is the query text with each constant slot
+  * replaced by the slot's class; `slots` are this query's constants, in
+  * text order; `reparse` parses the same text with other constants in the
+  * slots; `op` is this query's own algebra.
+  */
+final case class Prepared(shape: ShapeCache.Shape, slots: Seq[RdfTerm],
+    reparse: Seq[RdfTerm] => Op, op: Op) extends Op
+object Prepared {
+  /** The algebra under a parsed root, for matchers on its structure. */
+  def unwrap(op: Op): Op = op match {
+    case p: Prepared => p.op
+    case other => other
+  }
+}
 /** Recursive property path `s path+ o` / `path*` — compiled via the
   * semi-naive closure in [[graft.paths.PropertyPaths]] (G5). `graph` scopes
   * the step's edge scan (GRAPH / single-FROM datasets).

@@ -48,7 +48,11 @@ final class Compiler(val catalog: GraphCatalog) {
   private def resolver(c: Sol): String => Column =
     n => if (c.df.columns.contains(n)) c.df(n) else E.nullTerm
 
+  /** Per-compiler cache of prepared SELECT/ASK shapes. */
+  private val shapes = new ShapeCache(this)
+
   def compile(op: Op): Sol = op match {
+    case p: Prepared => shapes.compile(p)
     // Statistics rewrite: global COUNT(*) over a single all-variable pattern
     // needs no quad lift — per-table cell-count aggregates suffice (the
     // reference's verification query shape, init-graphdb.sh:133).
@@ -1249,8 +1253,13 @@ final class Compiler(val catalog: GraphCatalog) {
     // graph → one property-table scan per group (SURVEY §4.3); groups
     // linked by key variables merge into one join on raw keys.
     val (starrable, rest) = patterns.partition(p => starTable(p).isDefined)
+    // constant subjects first, in text order, so the order never depends
+    // on a constant's value (a prepared shape's plan serves every value)
     val groups = starrable.groupBy(p => (p.s, starTable(p).get)).toSeq
-      .sortBy { case ((s, t), _) => (s.toString, t) }
+      .sortBy { case ((s, t), ps) => s match {
+        case _: I => ("", t, starrable.indexOf(ps.head))
+        case v => (v.toString, t, 0)
+      } }
     val starSols = mergeStars(groups.map { case ((s, t), pats) => starOf(s, t, pats) })
     val patSols = rest.map(tp => (compilePattern(tp), estimate(tp)))
     val all = starSols ++ patSols ++ rankSols ++ lucSols ++ simSols ++

@@ -1862,6 +1862,11 @@ object SparqlFunctions {
   // matches FIRST, so even a same-IRI race cannot override it.
   private val registeredFns =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Column] => Column]()
+  private val fnVersion = new java.util.concurrent.atomic.AtomicLong
+  /** Bumped by every (un)registration: compiled plans may embed a custom
+    * function, so cached query shapes key on it.
+    */
+  def version: Long = fnVersion.get
   /** Namespaces owned by the engine's built-in dispatch. */
   val BuiltinFnNamespaces: Seq[String] = Seq(
     "http://www.w3.org/2001/XMLSchema#",
@@ -1873,9 +1878,12 @@ object SparqlFunctions {
       throw new IllegalArgumentException(
         s"cannot register <$iri>: namespace $ns is built-in"))
     registeredFns.put(iri, impl)
+    fnVersion.incrementAndGet()
     ()
   }
-  def unregisterFunction(iri: String): Unit = { registeredFns.remove(iri); () }
+  def unregisterFunction(iri: String): Unit = {
+    registeredFns.remove(iri); fnVersion.incrementAndGet(); ()
+  }
 
   /** IRI-named function dispatch (GeoSPARQL et al. are addressed by IRI,
     * not keyword: `geof:distance(?a, ?b)`).

@@ -3,6 +3,7 @@ package graft.parser
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.lit
 import graft.algebra._
+import graft.algebra.ShapeCache.Slot
 import graft.functions.SparqlFunctions
 import graft.model.{Quad, Rdf, RdfTerm}
 import graft.paths.{PAlt, PInv, PNegated, POneOrMore, PSeq, PZeroOrOne, Path, Pred}
@@ -121,8 +122,31 @@ object SparqlParser {
     sb.toString
   }
 
+  /** A SELECT or ASK root comes back as a [[Prepared]] op, so the
+    * compiler answers it from its shape's cached plan ([[ShapeCache]]).
+    */
   def parse(query: String): QueryForm = {
-    val p = new P(unescapeCodepoints(query))
+    val text = unescapeCodepoints(query)
+    val p = new P(text)
+    val q = complete(p)
+    def prepared(op: Op): Op = {
+      val slots = p.slots
+      Prepared(ShapeCache.shape(text, slots), slots.map(_.term),
+        terms => complete(new P(text,
+            overrides = slots.map(_.start).zip(terms).toMap)) match {
+          case SelectQ(o, _) => o
+          case AskQ(o) => o
+          case other => throw new IllegalStateException(s"re-parsed as $other")
+        }, op)
+    }
+    q match {
+      case SelectQ(op, projection) => SelectQ(prepared(op), projection)
+      case AskQ(op) => AskQ(prepared(op))
+      case other => other
+    }
+  }
+
+  private def complete(p: P): QueryForm = {
     val q = p.parseQuery()
     // trailing text after a complete query is a SYNTAX error, not silently
     // ignored input (tranche 28 — a dropped second HAVING constraint hid
@@ -197,9 +221,38 @@ object SparqlParser {
 
   // ------------------------------------------------------------------ P
 
-  private final class P(input: String, execId: Long = 0) {
+  /** `overrides`: constants to parse in the slots starting at these
+    * offsets instead of the text's own (a prepared shape's sentinels).
+    */
+  private final class P(input: String, execId: Long = 0,
+      overrides: Map[Int, RdfTerm] = Map.empty) {
     private var pos = 0
     private val n = input.length
+
+    /** Constant slots by start offset, each with the text's own constant
+      * (not an override). See [[ShapeCache]] for what is a slot.
+      */
+    private val slotMap = collection.mutable.TreeMap[Int, Slot]()
+    def slots: Seq[Slot] = slotMap.values.toSeq
+    private def slotOf(start: Int, t: RdfTerm, end: Int = pos): Option[Slot] =
+      ShapeCache.slotClass(t, numeric = "+-.0123456789".contains(input.charAt(start)))
+        .map(Slot(start, end, _, t))
+    /** Record `s` as a slot; the constant this parse uses there. */
+    private def fill(s: Slot): RdfTerm = {
+      slotMap(s.start) = s
+      overrides.getOrElse(s.start, s.term)
+    }
+    /** A triple pattern's subject or object term. */
+    private def slotTerm(): PTerm = {
+      ws()
+      val start = pos
+      parseTerm() match {
+        case I(iri) =>
+          slotOf(start, RdfTerm.iri(iri)).fold[PTerm](I(iri))(s => I(fill(s).value))
+        case L(t) => slotOf(start, t).fold[PTerm](L(t))(s => L(fill(s)))
+        case other => other
+      }
+    }
     private val prefixes = collection.mutable.Map[String, String]()
     // BASE for relative IRIREFs — same resolution convention as the Turtle
     // loader (TurtleReader.parseIriRef): RFC 3986 §5.2 via IriResolver, so
@@ -929,7 +982,7 @@ object SparqlParser {
         if (peekChar != '.' && peekChar != '}')
           parsePredicateObjectList(s, graph, pats, ops)
       } else {
-        val s = parseTerm()
+        val s = slotTerm()
         parsePredicateObjectList(s, graph, pats, ops)
       }
       val all = (if (pats.nonEmpty) Seq(Bgp(pats.toSeq)) else Nil) ++ ops
@@ -995,7 +1048,7 @@ object SparqlParser {
       peekChar match {
         case '[' => parseBnodePropList(graph, pats, ops)
         case '(' => parseCollectionTerm(graph, pats, ops)
-        case _ => parseTerm()
+        case _ => slotTerm()
       }
     }
 
@@ -1104,12 +1157,15 @@ object SparqlParser {
       * `predHints` carries FILTER-derived predicate constraints
       * `?v ∈ iris` upward so [[applyFilters]] can prune variable-predicate
       * scans (see [[pruneVarPred]]); `&&` merges hints (both conjuncts
-      * hold), every other combinator drops them.
+      * hold), every other combinator drops them. `slot` marks a bare
+      * constant that becomes a slot if it turns out to be an operand of a
+      * comparison or IN.
       */
     final case class Ex(term: (String => Column) => Column,
         boolOpt: Option[(String => Column) => Column] = None,
         srcVar: Option[String] = None, srcIri: Option[String] = None,
-        predHints: List[(String, Seq[String])] = Nil) {
+        predHints: List[(String, Seq[String])] = Nil,
+        slot: Option[Slot] = None) {
       def boolC(r: String => Column): Column =
         boolOpt.map(_(r)).getOrElse(SparqlFunctions.ebv(term(r)))
     }
@@ -1143,13 +1199,15 @@ object SparqlParser {
     private def parseRel(): Ex = {
       val a = parseAdd()
       ws()
-      if (accept("!=")) { val b = parseAdd(); boolEx(r => SparqlFunctions.neqB(a.term(r), b.term(r))) }
-      else if (accept("<=")) { val b = parseAdd(); boolEx(r => SparqlFunctions.leqB(a.term(r), b.term(r))) }
-      else if (accept(">=")) { val b = parseAdd(); boolEx(r => SparqlFunctions.geqB(a.term(r), b.term(r))) }
-      else if (peekChar == '<' && accept("<")) { val b = parseAdd(); boolEx(r => SparqlFunctions.ltB(a.term(r), b.term(r))) }
-      else if (accept(">")) { val b = parseAdd(); boolEx(r => SparqlFunctions.gtB(a.term(r), b.term(r))) }
+      def operands(xs: Seq[Ex]): Unit = (a +: xs).foreach(_.slot.foreach(fill))
+      if (accept("!=")) { val b = parseAdd(); operands(Seq(b)); boolEx(r => SparqlFunctions.neqB(a.term(r), b.term(r))) }
+      else if (accept("<=")) { val b = parseAdd(); operands(Seq(b)); boolEx(r => SparqlFunctions.leqB(a.term(r), b.term(r))) }
+      else if (accept(">=")) { val b = parseAdd(); operands(Seq(b)); boolEx(r => SparqlFunctions.geqB(a.term(r), b.term(r))) }
+      else if (peekChar == '<' && accept("<")) { val b = parseAdd(); operands(Seq(b)); boolEx(r => SparqlFunctions.ltB(a.term(r), b.term(r))) }
+      else if (accept(">")) { val b = parseAdd(); operands(Seq(b)); boolEx(r => SparqlFunctions.gtB(a.term(r), b.term(r))) }
       else if (accept("=")) {
         val b = parseAdd()
+        operands(Seq(b))
         val hint = ((a.srcVar, b.srcIri), (b.srcVar, a.srcIri)) match {
           case ((Some(v), Some(i)), _) => List(v -> Seq(i))
           case (_, (Some(v), Some(i))) => List(v -> Seq(i))
@@ -1161,10 +1219,12 @@ object SparqlParser {
       else if (peek("NOT") && { val s = pos; expect("NOT"); val in = peek("IN"); pos = s; in }) {
         expect("NOT"); expect("IN")
         val xs = parseExprList()
+        operands(xs)
         boolEx(r => !SparqlFunctions.inB(a.term(r), xs.map(_.term(r))))
       }
       else if (accept("IN")) {
         val xs = parseExprList()
+        operands(xs)
         // constraint hint only when EVERY member is a constant IRI — a
         // variable/expression member could match terms outside the set
         val hint = a.srcVar match {
@@ -1262,21 +1322,33 @@ object SparqlParser {
 
     val aggNames = Set("COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT")
 
+    /** A constant primary parsed from `start`: in a slot being re-parsed,
+      * the override.
+      */
+    private def constEx(start: Int, t0: RdfTerm, end: Int = pos): Ex = {
+      val slot = slotOf(start, t0, end)
+      val t = slot.flatMap(s => overrides.get(s.start)).getOrElse(t0)
+      Ex(_ => E.termLit(t), srcIri = Some(t.value).filter(_ => t.isIri),
+        slot = slot)
+    }
+
     private def parsePrimaryExpr(): Ex = {
       ws()
+      val start = pos
       peekChar match {
         case '(' => parseBracketedExpr()
         case '?' | '$' => val v = parseVarName(); Ex(r => r(v), srcVar = Some(v))
-        case '"' | '\'' => val t = parseLiteralTerm(); Ex(_ => E.termLit(t))
+        case '"' | '\'' => constEx(start, parseLiteralTerm())
         case c if c.isDigit || c == '.' || c == '+' || c == '-' =>
-          val t = parseLiteralTerm(); Ex(_ => E.termLit(t))
+          constEx(start, parseLiteralTerm())
         case '<' =>
           val iri = parseIriRef()
+          val end = pos
           // IRI-named function call, e.g. <http://…/geosparql/distance>(…)
           if (peekChar == '(') {
             val args = parseExprList()
             Ex(r => SparqlFunctions.callIri(iri, args.map(_.term(r))))
-          } else Ex(_ => E.termLit(RdfTerm.iri(iri)), srcIri = Some(iri))
+          } else constEx(start, RdfTerm.iri(iri), end)
         case _ =>
           if (peek("true") || peek("false")) { val t = parseLiteralTerm(); Ex(_ => E.termLit(t)) }
           else {
@@ -1310,11 +1382,12 @@ object SparqlParser {
             } else {
               pos = save
               val iri = parsePName()
+              val end = pos
               // prefixed-name function call: geof:distance(?a, ?b)
               if (peekChar == '(') {
                 val args = parseExprList()
                 Ex(r => SparqlFunctions.callIri(iri, args.map(_.term(r))))
-              } else Ex(_ => E.termLit(RdfTerm.iri(iri)), srcIri = Some(iri))
+              } else constEx(start, RdfTerm.iri(iri), end)
             }
           }
       }

@@ -702,7 +702,7 @@ object Shacl {
           case FilterOp(f, ch) => strip(ch, f :: acc)
           case other => (other, acc)
         }
-        strip(op, Nil) match {
+        strip(graft.algebra.Prepared.unwrap(op), Nil) match {
           case (Unit0, fns) if fns.nonEmpty => Some(fns)
           case _ => None
         }

@@ -27,14 +27,22 @@ final class GraphCatalog(val spark: SparkSession) {
   private val tables = mutable.LinkedHashMap[String, (DataFrame, TableSpec)]()
   private var extras: List[DataFrame] = Nil
 
+  private val versions = new java.util.concurrent.atomic.AtomicLong
+  /** Bumped by every registration or computed index/statistic that can
+    * change how a query compiles: the compiler's cached query shapes
+    * ([[graft.algebra.ShapeCache]]) key on it.
+    */
+  def version: Long = versions.get
+  private def changed(): this.type = { versions.incrementAndGet(); this }
+
   def register(spec: TableSpec, df: DataFrame): this.type = {
-    tables(spec.name) = (df, spec); invalidateEdgeSet(); this
+    tables(spec.name) = (df, spec); invalidateEdgeSet(); changed()
   }
   def table(name: String): Option[(DataFrame, TableSpec)] = tables.get(name)
 
   /** Append already-shaped quads (graph,s,p,o) — Turtle loads, inference. */
   def addQuads(q: DataFrame): this.type = {
-    extras = q :: extras; invalidateEdgeSet(); this
+    extras = q :: extras; invalidateEdgeSet(); changed()
   }
 
   // SERVICE endpoint registry: IRI → HTTP-shaped endpoint client
@@ -45,7 +53,7 @@ final class GraphCatalog(val spark: SparkSession) {
   def registerService(iri: String, cat: GraphCatalog): this.type =
     registerEndpoint(iri, new LoopbackEndpoint(cat))
   def registerEndpoint(iri: String, ep: SparqlEndpoint): this.type = {
-    services(iri) = ep; this
+    services(iri) = ep; changed()
   }
   def serviceFor(iri: String): Option[SparqlEndpoint] = services.get(iri)
   /** All registered endpoints — SERVICE with a VARIABLE iterates these. */
@@ -75,12 +83,15 @@ final class GraphCatalog(val spark: SparkSession) {
   private val pseudoResolvers =
     mutable.ArrayBuffer[String => Option[() => DataFrame]]()
   def registerPseudoGraph(iri: String, view: () => DataFrame): this.type = {
-    pseudos(iri) = view; pseudoCache.remove(iri); this
+    pseudos(iri) = view; pseudoCache.remove(iri); changed()
   }
   def registerPseudoGraphResolver(
       f: String => Option[() => DataFrame]): this.type = {
-    pseudoResolvers += f; this
+    pseudoResolvers += f; changed()
   }
+  /** Does `iri` name a pseudo-graph? Unlike [[pseudoGraph]], builds no view. */
+  def isPseudoGraph(iri: String): Boolean =
+    pseudos.contains(iri) || pseudoResolvers.exists(_(iri).isDefined)
   def pseudoGraph(iri: String): Option[DataFrame] =
     pseudos.get(iri).map(f => pseudoCache.getOrElseUpdate(iri, f()))
       .orElse(pseudoResolvers.iterator.flatMap(_(iri)).nextOption()
@@ -92,7 +103,7 @@ final class GraphCatalog(val spark: SparkSession) {
   private var proofRuleset: Seq[graft.inference.CustomRules.Rule] = Nil
   def registerProofRules(
       rules: Seq[graft.inference.CustomRules.Rule]): this.type = {
-    proofRuleset = rules; this
+    proofRuleset = rules; changed()
   }
   def proofRules: Seq[graft.inference.CustomRules.Rule] = proofRuleset
 
@@ -140,7 +151,7 @@ final class GraphCatalog(val spark: SparkSession) {
         .map(r => r.getString(0) -> r.getLong(1)))
     objStats = Some((objFromTables ++ objFromQuads).groupBy(_._1)
       .view.mapValues(_.map(_._2).sum).toMap)
-    this
+    changed()
   }
   /** Per-predicate triple counts when [[computeStatistics]] has run. */
   def statistics: Option[Map[String, Long]] = predStats
@@ -240,9 +251,11 @@ final class GraphCatalog(val spark: SparkSession) {
   // rewrites to a join against this table. localCheckpoint materializes
   // the fixed-iteration result once so every query reads, never recomputes.
   private var rdfRank: Option[DataFrame] = None
-  def computeRdfRank(predicates: Seq[String] = Nil, iters: Int = 3): Unit =
+  def computeRdfRank(predicates: Seq[String] = Nil, iters: Int = 3): Unit = {
     rdfRank = Some(graft.graph.GraphAnalytics
       .pageRankFixed(allQuads, predicates, iters).localCheckpoint())
+    changed()
+  }
   def rdfRanks: Option[DataFrame] = rdfRank
 
   // ---- FTS plugin indexes (the GraphDB legacy Lucene plugin, final-r12):
@@ -279,6 +292,7 @@ final class GraphCatalog(val spark: SparkSession) {
     val tf = toks.groupBy(col("doc"), col("term"))
       .agg(count(lit(1)).cast("long").as("tf")).localCheckpoint()
     ftsIdx(name) = (tf, tf.select(col("doc")).distinct().count(), analyzed)
+    changed()
   }
   def ftsIndex(name: String): Option[(DataFrame, Long, Boolean)] =
     ftsIdx.get(name)
@@ -313,6 +327,7 @@ final class GraphCatalog(val spark: SparkSession) {
       .agg(sum(col("tf") * col("tf")).cast("double").as("nn"))
       .localCheckpoint()
     simIdx(name) = (tf, norms, analyzed)
+    changed()
   }
   def similarityIndex(name: String): Option[(DataFrame, DataFrame, Boolean)] =
     simIdx.get(name)
@@ -330,6 +345,7 @@ final class GraphCatalog(val spark: SparkSession) {
       subjectPrefix: String): Unit = {
     require(name.nonEmpty, "registerEmbeddingIndex needs a name")
     embIdx(name) = (idx, subjectPrefix)
+    changed()
   }
   /** Build + register in one step (specs/ad-hoc use; the artifact name
     * is the plugin index name — pass a salted name for multi-sf JVMs).
@@ -371,6 +387,7 @@ final class GraphCatalog(val spark: SparkSession) {
       .agg(sum(col("tf") * col("tf")).cast("double").as("nn"))
       .localCheckpoint()
     psiIdx(name) = (tf, norms)
+    changed()
   }
   def predicationIndex(name: String): Option[(DataFrame, DataFrame)] =
     psiIdx.get(name)

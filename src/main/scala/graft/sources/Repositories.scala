@@ -99,6 +99,8 @@ final class Repositories(spark: SparkSession) {
     def epoch(k: Int): DataFrame = history(k - 1 - droppedEpochs)
   }
   private val repos = mutable.LinkedHashMap[String, Repo]()
+  /** [[engine]]'s memo: the engine of each repository's latest snapshot. */
+  private val engines = mutable.Map[String, (Repo, Int, graft.Engine)]()
 
   private def repo(id: String): Repo =
     repos.getOrElse(id, throw new IllegalArgumentException(
@@ -164,7 +166,9 @@ final class Repositories(spark: SparkSession) {
 
   def list: Seq[String] = repos.keys.toSeq
   def exists(id: String): Boolean = repos.contains(id)
-  def drop(id: String): Unit = { repos.remove(id); nsStore.remove(id); () }
+  def drop(id: String): Unit = {
+    repos.remove(id); nsStore.remove(id); engines.synchronized(engines.remove(id)); ()
+  }
 
   /** Current snapshot (empty quad set if nothing loaded yet). */
   def quads(id: String): DataFrame =
@@ -438,8 +442,20 @@ final class Repositories(spark: SparkSession) {
       if (from == 0) GraphUpdate.quadsDf(spark, Nil) else r.epoch(from)
     GraphStore.diff(before, r.epoch(to))
   }
-  def engine(id: String): graft.Engine =
-    new graft.Engine(catalog(id), repo(id).config.queryTimeoutSec)
+  /** The engine over the repository's current snapshot: one per snapshot,
+    * so reads between two commits share its compiled query shapes. A
+    * commit (or a drop and re-create) starts a new one.
+    */
+  def engine(id: String): graft.Engine = engines.synchronized {
+    val r = repo(id)
+    engines.get(id) match {
+      case Some((r0, epoch, e)) if (r0 eq r) && epoch == r.lastEpoch => e
+      case _ =>
+        val e = new graft.Engine(catalog(id), r.config.queryTimeoutSec)
+        engines(id) = (r, r.lastEpoch, e)
+        e
+    }
+  }
 
   // ---- RDF4J-protocol conveniences (r12 cont. — the remaining read-only
   // repository endpoints a GraphDB client calls: GET /size, GET /contexts,

@@ -402,4 +402,104 @@ class CompilerSpec extends AnyFunSuite {
     assert(rows == expect, rows.diff(expect))
     assert(rows.size == t("customer").count() && rows.count(_(2) != null) == 1)
   }
+
+  // ------------------------------------------ prepared query shapes
+
+  import ShapeParity.counted
+
+  /** The six perfbench point-lookup shapes, with constants drawn from `k`. */
+  private def lookupShapes(k: Int): Seq[String] = {
+    val u = "urn:graft"
+    Seq(
+      s"SELECT ?name ?bal ?seg WHERE { <$u/customer/$k> <$u/customer#c_name> ?name ; " +
+        s"<$u/customer#c_acctbal> ?bal ; <$u/customer#c_mktsegment> ?seg }",
+      s"SELECT ?cn ?nn WHERE { <$u/lineitem/$k/1> <$u/lineitem#l_orderkey> ?o . " +
+        s"?o <$u/orders#o_custkey> ?c . ?c <$u/customer#c_name> ?cn ; " +
+        s"<$u/customer#c_nationkey> ?n . ?n <$u/nation#n_name> ?nn }",
+      s"SELECT ?o ?tp WHERE { ?o <$u/orders#o_custkey> <$u/customer/$k> ; " +
+        s"<$u/orders#o_totalprice> ?tp . FILTER(?tp > ${k * 1000}) }",
+      s"SELECT ?s ?name ?bal WHERE { ?s <$u/supplier#s_nationkey> <$u/nation/${k % 25}> ; " +
+        s"<$u/supplier#s_name> ?name . OPTIONAL { ?s <$u/supplier#s_acctbal> ?bal . " +
+        s"FILTER(?bal > ${k * 100}) } }",
+      s"SELECT ?p ?price WHERE { ?p <$u/part#p_size> ${k % 50 + 1} ; " +
+        s"<$u/part#p_brand> \"Brand#${k % 20}\" ; <$u/part#p_retailprice> ?price } " +
+        "ORDER BY DESC(?price) ?p LIMIT 5",
+      s"ASK { <$u/customer/$k> <$u/customer#c_mktsegment> \"BUILDING\" }")
+  }
+
+  /** `q` compiled through its prepared shape and compiled directly from
+    * the same text, as DataFrames.
+    */
+  private def cachedAndDirect(eng: Engine, q: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import graft.parser.SparqlParser
+    val (op, root) = SparqlParser.parse(q) match {
+      case SparqlParser.SelectQ(op, _) => (op, (o: Op) => o)
+      case SparqlParser.AskQ(op) => (op, (o: Op) => Slice(0, Some(1), o): Op)
+      case other => fail(s"not SELECT/ASK: $other")
+    }
+    (eng.compiler.compile(root(op)).df,
+      eng.compiler.compile(root(Prepared.unwrap(op))).df)
+  }
+
+  private def collected(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("prepared shapes: each perfbench point-lookup shape is cached; a " +
+      "second key is a hit with its own answer, and the optimized plan " +
+      "equals a direct compile's modulo expression ids") {
+    val eng = new Engine(catalog)
+    Seq(7, 8).foreach { k =>
+      lookupShapes(k).foreach { q =>
+        val ((cached, direct), d) = counted(cachedAndDirect(eng, q))
+        if (k == 7) assert(d("misses") == 1 && d("hits") == 0, q)
+        else assert(d("hits") == 1 && d("misses") == 0, q)
+        assert(d.filter(_._1.startsWith("uncacheable")).values.sum == 0, q)
+        assert(cached.queryExecution.optimizedPlan.canonicalized ==
+          direct.queryExecution.optimizedPlan.canonicalized,
+          s"$q\n${cached.queryExecution.optimizedPlan}\n" +
+            direct.queryExecution.optimizedPlan)
+        assert(collected(cached) == collected(direct), q)
+      }
+    }
+  }
+
+  test("prepared shapes: two keys of one shape each get their own answer") {
+    val eng = new Engine(catalog)
+    def name(k: Int) = eng.select(s"SELECT ?n WHERE { <urn:graft/customer/$k> " +
+      "<urn:graft/customer#c_name> ?n }").collect().map(_.getStruct(0).getString(1)).toSeq
+    val (got, d) = counted(Seq(7, 8).map(name))
+    val want = Seq(7, 8).map(k => t("customer").filter(s"c_custkey = $k")
+      .collect().map(_.getAs[String]("c_name")).toSeq)
+    assert(got == want && want.forall(_.size == 1) && want(0) != want(1))
+    assert(d("misses") == 1 && d("hits") == 1, d)
+  }
+
+  test("prepared shapes: a non-canonical or out-of-range key hits the " +
+      "canonical key's shape, keeps the IRI string compare and matches nothing") {
+    val eng = new Engine(catalog)
+    def q(k: String) = s"SELECT ?n WHERE { <urn:graft/customer/$k> " +
+      "<urn:graft/customer#c_name> ?n }"
+    assert(eng.select(q("7")).count() == 1)
+    Seq("007", "+7", "99999999999999999999").foreach { k =>
+      val (df, d) = counted(eng.select(q(k)))
+      assert(d("hits") == 1 && d("misses") == 0, k)
+      assert(df.queryExecution.optimizedPlan.toString
+        .contains(s"urn:graft/customer/$k"), df.queryExecution.optimizedPlan)
+      assert(df.count() == 0, k)
+    }
+  }
+
+  test("prepared shapes: equal constants in two slots answer like distinct ones") {
+    val eng = new Engine(catalog)
+    def n(a: Int, b: Int) = eng.select("SELECT ?l WHERE { ?l " +
+      "<urn:graft/lineitem#l_quantity> ?q ; <urn:graft/lineitem#l_linenumber> ?ln . " +
+      s"FILTER(?q > $a && ?ln < $b) }").count()
+    def want(a: Int, b: Int) =
+      t("lineitem").filter(s"l_quantity > $a AND l_linenumber < $b").count()
+    Seq((5, 5), (3, 3), (5, 3), (3, 5), (5, 5)).foreach { case (a, b) =>
+      assert(n(a, b) == want(a, b), (a, b))
+    }
+    assert(want(5, 5) != want(3, 3))
+  }
 }

@@ -13,7 +13,7 @@ import graft.sources.DirectMapper.TableSpec
   * per-session testdata caches, and answers for bound constants at type
   * edges.
   */
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends AnyFunSuite with ShapeParity {
   import TestSpark._
 
   private def withCap[T](cap: String)(body: => T): T = {
@@ -230,5 +230,121 @@ class EngineSpec extends AnyFunSuite {
           .select("e_key").as[Long].collect().toSet
         assert(got == want, d)
     }
+  }
+
+  // ------------------------------------------ prepared query shapes
+
+  import ShapeParity.counted
+
+  test("prepared shapes: RAND() and STRUUID() give fresh values on each call") {
+    val eng = new Engine(catalog)
+    Seq("RAND()", "STRUUID()").foreach { f =>
+      val q = s"SELECT ?r WHERE { <urn:graft/customer/7> <urn:graft/customer#c_name> ?n " +
+        s"BIND($f AS ?r) }"
+      val (vals, d) = counted((1 to 3).map(_ =>
+        eng.select(q).collect().map(_.getStruct(0).getString(1)).head))
+      assert(vals.distinct.size == 3, s"$f: $vals")
+      assert(d("uncacheable.nondeterministic") == 1 && d("direct") == 2 && d("hits") == 0, d)
+    }
+  }
+
+  test("prepared shapes: a catalog mutation and a function registration each " +
+      "invalidate the cached shapes") {
+    import spark.implicits._
+    import graft.functions.SparqlFunctions
+    import graft.model.{Quad, RdfTerm}
+    def quads(vals: Int*) = vals.map(v => Quad(graft.model.Rdf.DefaultGraph, s"urn:prep:s$v",
+      "urn:prep:p", RdfTerm.typed(v.toString, graft.model.Rdf.XsdInteger))).toDS().toDF()
+    val cat = new GraphCatalog(spark).addQuads(quads(1, 2, 3))
+    val eng = new Engine(cat)
+    def got(q: String): Set[String] =
+      eng.select(q).collect().map(_.getStruct(0).getString(1)).toSet
+    val q = "SELECT ?o WHERE { ?s <urn:prep:p> ?o FILTER(?o > 1) }"
+    val (first, d1) = counted(Seq(got(q), got(q)))
+    assert(first == Seq(Set("2", "3"), Set("2", "3")) && d1("misses") == 1 && d1("hits") == 1)
+    cat.addQuads(quads(4))
+    val (second, d2) = counted(got(q))
+    assert(second == Set("2", "3", "4") && d2("misses") == 1, d2)
+
+    val f = "urn:prep:fn"
+    val qf = s"SELECT ?y WHERE { ?s <urn:prep:p> ?o FILTER(?o > 3) BIND(<$f>(?o) AS ?y) }"
+    try {
+      SparqlFunctions.registerFunction(f, a => SparqlFunctions.numT(a.head.getField("num") + 1.0))
+      assert(got(qf) == Set("5.0") && got(qf) == Set("5.0"))
+      SparqlFunctions.registerFunction(f, a => SparqlFunctions.numT(a.head.getField("num") + 100.0))
+      val (third, d3) = counted(got(qf))
+      assert(third == Set("104.0") && d3("misses") == 1, d3)
+    } finally SparqlFunctions.unregisterFunction(f)
+  }
+
+  test("prepared shapes: 4 threads alternating keys of one shape on one " +
+      "engine each get their own answer") {
+    val eng = new Engine(catalog)
+    def q(k: Int) = s"SELECT ?n WHERE { <urn:graft/customer/$k> <urn:graft/customer#c_name> ?n }"
+    val keys = 1 to 8
+    val want = keys.map(k => k -> spark.read.parquet(s"$sf/customer.parquet")
+      .filter(s"c_custkey = $k").collect().map(_.getAs[String]("c_name")).toSeq).toMap
+    val pool = Executors.newFixedThreadPool(4)
+    val start = new CyclicBarrier(4)
+    val wrong = new AtomicInteger
+    try {
+      val futures = (0 until 4).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            (0 until 6).foreach { i =>
+              val k = keys((t + 4 * (i % 2)) % keys.size)
+              val got = eng.select(q(k)).collect().map(_.getStruct(0).getString(1)).toSeq
+              if (got != want(k)) wrong.incrementAndGet()
+            }
+          }
+        })
+      }
+      futures.foreach(_.get(300, TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(wrong.get == 0)
+    assert(want.values.forall(_.size == 1))
+  }
+
+  test("prepared shapes: a constant the compile reads (an FTS query string) " +
+      "fails the sentinel check; its shape compiles directly per query") {
+    import spark.implicits._
+    import graft.model.{Quad, Rdf, RdfTerm}
+    val p = "urn:prep:label"
+    val cat = new GraphCatalog(spark).addQuads(Seq(
+      Quad(Rdf.DefaultGraph, "urn:prep:a", p, RdfTerm.str("green steel")),
+      Quad(Rdf.DefaultGraph, "urn:prep:b", p, RdfTerm.str("red steel"))).toDS().toDF())
+    cat.createFtsIndex("prep", Seq(p))
+    val eng = new Engine(cat)
+    def got(word: String) = eng.select("SELECT ?s WHERE { ?s " +
+      s"""<http://www.ontotext.com/owlim/lucene#prep> "$word" }""")
+      .collect().map(_.getStruct(0).getString(1)).toSet
+    val (answers, d) = counted(Seq("green", "red", "steel").map(got))
+    assert(answers == Seq(Set("urn:prep:a"), Set("urn:prep:b"),
+      Set("urn:prep:a", "urn:prep:b")))
+    assert(d("uncacheable.sentinel_check") == 1 && d("direct") == 2 && d("hits") == 0, d)
+  }
+
+  test("repository reads share one engine per snapshot; a read after a " +
+      "commit sees the new data") {
+    val repos = new graft.sources.Repositories(spark)
+    repos.create("prep")
+    repos.update("prep", "INSERT DATA { <urn:prep:s> <urn:prep:p> 1 }")
+    val q = "SELECT ?o WHERE { <urn:prep:s> <urn:prep:p> ?o FILTER(?o > 0) }"
+    def got(e: Engine) = e.select(q).collect().map(_.getStruct(0).getString(1)).toSet
+    val e1 = repos.engine("prep")
+    assert(got(e1) == Set("1") && (repos.engine("prep") eq e1))
+    repos.update("prep", "INSERT DATA { <urn:prep:s> <urn:prep:p> 2 }")
+    val e2 = repos.engine("prep")
+    assert((e2 ne e1) && got(e2) == Set("1", "2"))
+    repos.drop("prep")
+    repos.create("prep")
+    assert(got(repos.engine("prep")).isEmpty)
+  }
+
+  // runs last: the suite's queries before it went through ShapeParity
+  test("prepared shapes: queries answered from cached shapes plan as direct " +
+      "compiles of their text") {
+    assert(parityChecked.get > 0)
   }
 }

@@ -246,7 +246,7 @@ class SparqlParserSpec extends AnyFunSuite {
       case _ => None
     }
     val graft.parser.SparqlParser.SelectQ(op, _) = q: @unchecked
-    val lj = findLj(op).get
+    val lj = findLj(graft.algebra.Prepared.unwrap(op)).get
     assert(lj.exists.size == 1 && lj.exists.head._2)
     def hasExists(o: Op): Boolean = o match {
       case _: ExistsOp => true

@@ -15,7 +15,7 @@ import graft.sources.{GraphCatalog, TrigReader, TurtleReader}
   * `value` (None = unbound) so term kinds flow through the full engine
   * path: parser → algebra → Catalyst plan → collect.
   */
-class W3cConformanceSpec extends AnyFunSuite {
+class W3cConformanceSpec extends AnyFunSuite with ShapeParity {
   import TestSpark.spark
 
   private def engine(ttl: String): Engine = {
@@ -5020,5 +5020,11 @@ class W3cConformanceSpec extends AnyFunSuite {
         "AS ?r) WHERE { }", Seq("r")) == Seq(Vector(None)), bad)
     assert(eng.ask(DX + "ASK { ex:a ex:off ?o " +
       "FILTER(TIMEZONE(?o) = \"PT2H\"^^xsd:dayTimeDuration) }"))
+  }
+
+  // runs last: the suite's queries before it went through ShapeParity
+  test("prepared shapes: queries answered from cached shapes plan as direct " +
+      "compiles of their text") {
+    assert(parityChecked.get > 0)
   }
 }
