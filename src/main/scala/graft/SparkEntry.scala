@@ -2439,7 +2439,7 @@ object SparkEntry {
     "stream_merge_select" -> ((s, dir) => {
       val (cat0, _) = ctx(s, dir)
       val initial = cat0.forPredicate(DirectMapper.predIri("nation", "n_name"))
-      val merged = graft.streaming.StreamIngest.mergeToStore(s,
+      val merged = graft.streaming.StreamIngest.merge(s,
         graft.streaming.StreamIngest.quadStream(s, dir), initial)
       val df = new Engine(new GraphCatalog(s).addQuads(merged)).select(
         """SELECT ?t (COUNT(*) AS ?n) WHERE {
@@ -2463,13 +2463,13 @@ object SparkEntry {
       // (not per batch) and run the single-pass closure: DirectMapper
       // event quads can add neither schema rows nor sameAs facts (the
       // materializeOnceWith preconditions), the batch arrives deduped
-      // (assumeDistinct), and mergeToStore persists each batch union
-      // itself (cut = false would double-materialize)
+      // (assumeDistinct), and merge cuts each batch union itself (a cut
+      // here would double-materialize)
       val vocab = Inference.vocab(onto)
-      val merged = graft.streaming.StreamIngest.mergeToStore(s,
+      val merged = graft.streaming.StreamIngest.merge(s,
         graft.streaming.StreamIngest.quadStream(s, dir), initial,
-        inferDelta = b => Inference.materializeOnceWith(s, b.unionAll(onto),
-          vocab, assumeDistinct = true, cut = false))
+        graft.inference.Closure.batchLocal(b => Inference.materializeOnceWith(
+          s, b.unionAll(onto), vocab, assumeDistinct = true, cut = false)))
       val df = new Engine(new GraphCatalog(s).addQuads(merged)).select(
         "SELECT (COUNT(*) AS ?n) WHERE { ?ev a <urn:graft/class/stream_event> }")
       df.select(df("n").getField("num").cast("bigint").as("n"))
@@ -2492,8 +2492,10 @@ object SparkEntry {
           |    ---
           |    ev x:userNation n
           |}""".stripMargin)
-      val merged = graft.streaming.StreamIngest.mergeWithRules(s,
-        graft.streaming.StreamIngest.quadStream(s, dir), initial, rules)
+      val merged = graft.streaming.StreamIngest.merge(s,
+        graft.streaming.StreamIngest.quadStream(s, dir), initial,
+        graft.inference.Closure.ruleset(s,
+          graft.inference.CustomRules.Ruleset(rules, Nil)))
       ordered(merged.filter(col("p") === "urn:x:userNation")
         .groupBy(col("o.value").as("nation"))
         .agg(count(lit(1)).cast("bigint").as("n")))
@@ -2533,11 +2535,11 @@ object SparkEntry {
       val vocab = Inference.vocab(onto)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      val merged = graft.streaming.StreamIngest.mergeWithRetractions(s,
-        stream, initial = onto,
-        inferDelta = b => Inference.materializeOnceWith(s, b.unionAll(onto),
-          vocab, assumeDistinct = true, cut = false),
-        closeAll = st => Inference.materialize(s, st))
+      val merged = graft.streaming.StreamIngest.merge(s,
+        stream, initial = onto, graft.inference.Closure.batchLocal(
+          b => Inference.materializeOnceWith(s, b.unionAll(onto),
+            vocab, assumeDistinct = true, cut = false),
+          close = st => Inference.materialize(s, st)))
       val df = new Engine(new GraphCatalog(s).addQuads(merged)).select(
         "SELECT ?x WHERE { ?x a <urn:t#Nation> }")
       ordered(df.select(df("x").getField("value").as("x")))

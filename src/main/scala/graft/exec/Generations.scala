@@ -3,6 +3,7 @@ package graft.exec
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -64,6 +65,14 @@ final class Generations private {
     df
   }
 
+  /** `df` as a generation of this scope: adopted when its rows are already
+    * materialized (a cut, or driver-local rows), cut otherwise.
+    */
+  def own(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case _: LogicalRDD | _: LocalRelation => adopt(df)
+    case _ => cut(df)._1
+  }
+
   /** Release the generations of this scope that `df` reads: call it on a
     * superseded generation once its successor is materialized.
     */
@@ -98,6 +107,12 @@ object Generations {
 
   /** A one-off cut outside any loop; the caller owns the generation. */
   def cut(df: DataFrame): DataFrame = scope(_.cut(df)._1)
+
+  /** Release the generations `df` reads — a one-off [[cut]] whose
+    * successor is materialized.
+    */
+  def release(df: DataFrame): Unit =
+    read(df).foreach(_.unpersist(blocking = false))
 
   /** The persisted rows under the cut leaves `df` reads (`createDataFrame`
     * wraps each in one converting map).

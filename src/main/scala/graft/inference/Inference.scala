@@ -243,20 +243,11 @@ object Inference {
         d.distinct().join(base, Seq("graph", "s", "p", "o"), "left_anti"))
     }
     // `cut = false` when the caller materializes the result itself
-    // (mergeToStore persists each batch's union) — a cut here would
+    // (StreamIngest.merge cuts each batch's union) — a cut here would
     // double-materialize every batch.
     if (cut) graft.exec.Generations.cut(out) else out
   }
 
-  /** `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
-    * substitution rules — the engine's `onto:disable-sameAs` pseudo-graph
-    * (GraphDB's `FROM <http://www.ontotext.com/disable-sameAs>` answers
-    * queries without expanding statements over sameAs equivalence
-    * classes). The sameAs statements THEMSELVES still close (symmetric +
-    * transitive) and (inverse-)functional properties still derive them —
-    * identity is still asserted, it just no longer copies statements
-    * between equivalent nodes.
-    */
   /** Stores at or below this row count close on the DRIVER
     * ([[materializeLocal]]): an ontology closure over a dimension-sized
     * store is driver-sized by definition, and the distributed fixpoint
@@ -269,8 +260,24 @@ object Inference {
     */
   private val LocalCloseThreshold = 100000L
 
+  /** `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
+    * substitution rules — the engine's `onto:disable-sameAs` pseudo-graph
+    * (GraphDB's `FROM <http://www.ontotext.com/disable-sameAs>` answers
+    * queries without expanding statements over sameAs equivalence
+    * classes). The sameAs statements THEMSELVES still close (symmetric +
+    * transitive) and (inverse-)functional properties still derive them —
+    * identity is still asserted, it just no longer copies statements
+    * between equivalent nodes.
+    *
+    * `extension = true` marks `quads` as an already-closed view plus an
+    * additive change — the RDFS-Plus extender of [[Closure.rdfsPlus]]. A
+    * store over the threshold then takes [[materializeOnce]], whose one
+    * rule pass suffices unless the merged vocabulary or sameAs data
+    * cascades; under it the store still closes on the driver, the probe
+    * running first.
+    */
   def materialize(spark: SparkSession, quads: DataFrame, maxIters: Int = 10,
-      sameAsSubst: Boolean = true): DataFrame = {
+      sameAsSubst: Boolean = true, extension: Boolean = false): DataFrame = {
     // conf override exists for the parity tests (set 0 to force the
     // distributed loop); production leaves the default
     val threshold = spark.conf.getOption("spark.graft.inference.localThreshold")
@@ -288,6 +295,7 @@ object Inference {
         sameAsSubst)
       return spark.createDataset(local).toDF()
     }
+    if (extension) return materializeOnce(spark, quads)
     val v = vocab(quads)
     graft.exec.Generations.scope { gen =>
       var all = gen.cut(quads.distinct())._1

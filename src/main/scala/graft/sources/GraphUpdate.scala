@@ -36,9 +36,9 @@ object GraphUpdate {
     // template within one solution — label ⊕ a per-row id. The id expression
     // is nondeterministic and each template quad re-executes the plan in its
     // own union branch, so the stamped frame is materialized ONCE
-    // (localCheckpoint) to guarantee all branches — and the asserted vs
-    // inference-closure instantiations in Repositories.update — see
-    // identical ids.
+    // (localCheckpoint) to guarantee all branches — and every job that
+    // re-reads the inserted quads, as a repository's closed-view delta
+    // does — see identical ids.
     val hasB = template.exists(tp =>
       tp.s.isInstanceOf[B] || tp.o.isInstanceOf[B])
     val df = if (hasB)
@@ -156,10 +156,11 @@ object GraphUpdate {
     * while mutating the asserted set: WHERE sees entailments (the
     * reference's ruleset-aware update matching) but only explicit quads
     * are ever added to or removed from the store, per SPARQL 1.1 Update
-    * on top of an entailment regime.
+    * on top of an entailment regime. `matchStore` is read only by a form
+    * with a WHERE pattern.
     */
   def applyUpdate(store: DataFrame, form: UpdateForm,
-      matchStore: DataFrame = null,
+      matchStore: => DataFrame = null,
       decorate: GraphCatalog => GraphCatalog = identity): DataFrame =
     form match {
     case InsertDataU(quads) => insertData(store, quadsDf(store.sparkSession, quads))
@@ -218,7 +219,7 @@ object GraphUpdate {
     * union/anti-join nodes over the previous snapshot, so a 100-op request
     * would otherwise build a 100-deep plan (analyzer blow-up at scale).
     */
-  private val CutEvery = 8
+  private[sources] val CutEvery = 8
 
   /** Apply a full SPARQL Update request (text) to a quad snapshot. Long
     * `;`-chained requests get a [[graft.exec.Generations]] lineage cut every

@@ -48,9 +48,15 @@ final case class RepoConfig(inference: Boolean = false,
   *
   * Each repository owns an immutable quad snapshot; loads and updates
   * produce new snapshots (the same versioned-Parquet posture as
-  * [[GraphUpdate]]). With a `location`, each load writes the snapshot to
-  * Parquet and re-reads it — the store survives the session and every later
-  * query plans against plain partition-pruned file scans.
+  * [[GraphUpdate]]). Every write is one transaction ([[transact]]): a
+  * loaded document is one additive change, each form of an update request
+  * one change. The repository's [[graft.inference.Closure]] extends the
+  * closed view on additive changes and re-closes it from the asserted set
+  * on removals; the SHACL and consistency gates then see the request's
+  * final state, and only a state that passes both commits. With a
+  * `location`, each commit writes the snapshot to Parquet and re-reads it —
+  * the store survives the session and every later query plans against
+  * plain partition-pruned file scans.
   */
 final class Repositories(spark: SparkSession) {
 
@@ -64,7 +70,8 @@ final class Repositories(spark: SparkSession) {
   private final class Repo(var quads: Option[DataFrame],
       var asserted: Option[DataFrame], val config: RepoConfig,
       val shapes: Seq[graft.shacl.Shacl.NodeShape],
-      val ruleset: graft.inference.CustomRules.Ruleset) {
+      val ruleset: graft.inference.CustomRules.Ruleset,
+      val closure: graft.inference.Closure) {
     /** Memoized `onto:disable-sameAs` view — the RDFS-Plus closure WITHOUT
       * sameAs expansion. Computed only when a query names the pseudo-graph
       * (it is a second materialization); dropped on every commit.
@@ -120,19 +127,10 @@ final class Repositories(spark: SparkSession) {
     val ruleset = config.rulesetPie // parse at create: fail-fast like shapes
       .map(graft.inference.CustomRules.parseRuleset)
       .getOrElse(graft.inference.CustomRules.Ruleset(Nil, Nil))
-    repos(id) = new Repo(None, None, config, shapes, ruleset)
+    repos(id) = new Repo(None, None, config, shapes, ruleset,
+      graft.inference.Closure.of(spark, config.inference, ruleset))
     this
   }
-
-  /** The configured closure over a candidate store (built-in RDFS-Plus,
-    * custom ruleset, or identity).
-    */
-  private def close(r: Repo, merged: DataFrame): DataFrame =
-    if (r.ruleset.rules.nonEmpty || r.ruleset.axioms.nonEmpty)
-      graft.inference.CustomRules.materializeRuleset(spark, merged, r.ruleset)
-    else if (r.config.inference)
-      graft.inference.Inference.materialize(spark, merged)
-    else merged
 
   /** Transactional CONSISTENCY gate (r15 — GraphDB .pie Consistency
     * sections): every consistency rule of the custom ruleset must hold on
@@ -174,24 +172,32 @@ final class Repositories(spark: SparkSession) {
   def quads(id: String): DataFrame =
     repo(id).quads.getOrElse(GraphUpdate.quadsDf(spark, Nil))
 
-  private def commit(id: String, next: DataFrame): DataFrame = {
-    val r = repo(id)
+  /** Commit a transaction's final state as the next epoch. The asserted set
+    * is cut once per commit, so its plan never replays the write history,
+    * and the cut it replaces is released; the closed view is already
+    * materialized unless it is the asserted set itself.
+    */
+  private def commit(id: String, r: Repo, asserted: DataFrame,
+      closed: DataFrame): DataFrame = {
     // epoch-numbered persisted paths: an overwrite-in-place would CLOBBER
     // older epochs' lazy parquet reads out from under the history views
     val epoch = r.lastEpoch + 1
+    def cutIfNew(df: DataFrame, old: Option[DataFrame]) =
+      if (old.exists(_ eq df)) df else graft.exec.Generations.cut(df)
     val snap = r.config.location match {
       case Some(loc) if r.config.partitionByPredicate =>
-        GraphStore.write(next, s"$loc/$id/e$epoch")
+        GraphStore.write(closed, s"$loc/$id/e$epoch")
         GraphStore.read(spark, s"$loc/$id/e$epoch")
       case Some(loc) =>
-        next.write.mode("overwrite").parquet(s"$loc/$id/e$epoch")
+        closed.write.mode("overwrite").parquet(s"$loc/$id/e$epoch")
         spark.read.parquet(s"$loc/$id/e$epoch")
-          .select(org.apache.spark.sql.functions.col("graph"),
-            org.apache.spark.sql.functions.col("s"),
-            org.apache.spark.sql.functions.col("p"),
-            org.apache.spark.sql.functions.col("o"))
-      case None => next
+          .select(col("graph"), col("s"), col("p"), col("o"))
+      case None if closed eq asserted => cutIfNew(closed, r.quads)
+      case None => closed
     }
+    val kept = if (r.closure.isIdentity) snap else cutIfNew(asserted, r.asserted)
+    r.asserted.filterNot(_ eq kept).foreach(graft.exec.Generations.release)
+    r.asserted = Some(kept)
     r.quads = Some(snap)
     r.noSameAs = None // the pseudo-graph views are per-snapshot
     r.implicitV = None
@@ -211,29 +217,30 @@ final class Repositories(spark: SparkSession) {
   }
 
   /** Load an RDF document (format by extension: ttl/nt/nq/trig/jsonld/
-    * rdf+xml) into the repository; applies the configured inference closure
-    * over the merged snapshot and persists per config. → new snapshot.
+    * rdf+xml) into the repository as one additive change. → new snapshot.
     */
-  def load(id: String, path: String, graph: String = Rdf.DefaultGraph): DataFrame = {
-    val r = repo(id)
-    val incoming = GraphUpdate.loadByExtension(spark,
-      path.stripPrefix("file://"), graph)
-    val merged = r.asserted.map(GraphUpdate.insertData(_, incoming))
-      .getOrElse(incoming.distinct())
-    val closed = close(r, merged)
-    requireConforms(r, closed)
-    requireConsistent(r, closed)
-    r.asserted = Some(merged)
-    commit(id, closed)
-  }
+  def load(id: String, path: String, graph: String = Rdf.DefaultGraph): DataFrame =
+    transact(id, Seq(graft.parser.SparqlParser.LoadU(path, Some(graph),
+      silent = false)))
 
-  /** True when applying the form can only ADD quads to the store — the
-    * incremental-closure fast path (closure(closure(A) ∪ D) = closure(A ∪ D),
-    * so inserts re-close over the already-closed view in ONE rule pass via
-    * [[graft.inference.Inference.materializeOnce]]). Anything that can
-    * remove quads forces re-materialization from the asserted set: a
-    * deleted triple's entailments may lose their last support (DRed-style
-    * counting is a possible later refinement).
+  /** Apply a SPARQL Update request to the repository, one change per
+    * operation. → new snapshot.
+    *
+    * Inference repos maintain the materialization across the update
+    * (S4×S6 — the reference's `/statements` endpoint is always
+    * ruleset-aware): each operation mutates the ASSERTED set and its WHERE
+    * patterns match against the CLOSED view (entailment-aware matching).
+    */
+  def update(id: String, text: String): DataFrame =
+    transact(id, graft.parser.SparqlParser.parseUpdate(text))
+
+  /** True when applying the form can only ADD quads to the store: the
+    * transaction then extends the closed view by the new asserted set A'
+    * (the view closure(A) ⊆ closure(A'), so closure(view ∪ A') =
+    * closure(A'); each extender skips what the view already holds). Any
+    * other form re-closes the view from the asserted set — a removed
+    * quad's entailments may lose their last support (DRed-style counting
+    * is a possible later refinement).
     */
   private def additive(f: graft.parser.SparqlParser.UpdateForm): Boolean =
     f match {
@@ -245,78 +252,39 @@ final class Repositories(spark: SparkSession) {
       case _ => false
     }
 
-  /** Apply a SPARQL Update request to the repository. → new snapshot.
-    *
-    * Inference repos maintain the RDFS-Plus materialization across the
-    * update (S4×S6 — the reference's `/statements` endpoint is always
-    * ruleset-aware): each operation mutates the ASSERTED set, WHERE
-    * patterns match against the CLOSED view (entailment-aware matching),
-    * and the closure is refreshed per operation — one incremental rule
-    * pass for pure inserts, a full re-close from the asserted set after
-    * deletes (an entailment whose support was deleted must disappear).
+  /** The one write path: apply `changes` in order to the asserted set,
+    * keep the closed view by the repository's closure, gate the final
+    * state, commit. The view is re-closed lazily — before the first write
+    * and after a removal it is rebuilt only when a WHERE pattern, or the
+    * end of the request, reads it — so a request closes in full at most
+    * once per removal and a repository's first write closes in full.
     */
-  def update(id: String, text: String): DataFrame = {
+  private def transact(id: String,
+      changes: Seq[graft.parser.SparqlParser.UpdateForm]): DataFrame = {
     val r = repo(id)
-    if (r.ruleset.rules.nonEmpty || r.ruleset.axioms.nonEmpty ||
-        r.ruleset.consistencies.nonEmpty)
-      return updateCustom(id, r, text)
-    if (!r.config.inference) {
-      val next = GraphUpdate.update(quads(id), text,
-        decorate = registerPseudos(id, r, _))
-      requireConforms(r, next)
-      r.asserted = Some(next)
-      return commit(id, next)
-    }
-    var asserted = r.asserted.getOrElse(GraphUpdate.quadsDf(spark, Nil))
-    var closed = quads(id)
+    val c = r.closure
     val dec = registerPseudos(id, r, _: GraphCatalog)
-    graft.parser.SparqlParser.parseUpdate(text).foreach { f =>
-      asserted = GraphUpdate.applyUpdate(asserted, f, matchStore = closed,
-        decorate = dec)
-      closed =
-        if (additive(f)) graft.inference.Inference.materializeOnce(spark,
-          GraphUpdate.applyUpdate(closed, f, matchStore = closed,
-            decorate = dec))
-        else graft.inference.Inference.materialize(spark, asserted)
+    graft.exec.Generations.scope { gen =>
+      var asserted = r.asserted.getOrElse(GraphUpdate.quadsDf(spark, Nil))
+      var closed = r.quads // None: stale, re-close from `asserted`
+      def view(): DataFrame = if (c.isIdentity) asserted else
+        closed.getOrElse { val v = c.close(asserted); closed = Some(v); v }
+      changes.zipWithIndex.foreach { case (f, i) =>
+        val next = GraphUpdate.applyUpdate(asserted, f,
+          matchStore = view(), decorate = dec)
+        closed = if (!additive(f) || c.isIdentity) None
+          else closed.map(c.extend(_, next))
+        // a long `;`-chained request cuts its plan every few operations
+        asserted = if ((i + 1) % GraphUpdate.CutEvery == 0)
+          gen.advance(next, asserted) else next
+      }
+      val out = view()
+      // the gates see the whole request's post-state (a request may pass
+      // through a violating intermediate legally)
+      requireConforms(r, out)
+      requireConsistent(r, out)
+      commit(id, r, asserted, out)
     }
-    // the transaction gate sees the whole request's post-state (a request
-    // may pass through a violating intermediate legally)
-    requireConforms(r, closed)
-    r.asserted = Some(asserted)
-    commit(id, closed)
-  }
-
-  /** Update maintenance under a CUSTOM ruleset: additive forms re-close
-    * INCREMENTALLY over the already-closed view (semi-naive with
-    * delta = the applied insert — sound for any monotone Datalog),
-    * deletes re-materialize from the asserted set (a derivation may lose
-    * its last support).
-    */
-  private def updateCustom(id: String, r: Repo, text: String): DataFrame = {
-    var asserted = r.asserted.getOrElse(GraphUpdate.quadsDf(spark, Nil))
-    // First touch of a never-materialized repo: the ruleset's AXIOMS are
-    // already facts (GraphDB inserts .pie axiomatic triples at init) —
-    // close the empty store so the incremental path sees them.
-    var closed = r.quads.map(_ => quads(id)).getOrElse(
-      graft.inference.CustomRules.materializeRuleset(spark,
-        GraphUpdate.quadsDf(spark, Nil), r.ruleset))
-    val dec = registerPseudos(id, r, _: GraphCatalog)
-    graft.parser.SparqlParser.parseUpdate(text).foreach { f =>
-      asserted = GraphUpdate.applyUpdate(asserted, f, matchStore = closed,
-        decorate = dec)
-      closed =
-        if (additive(f))
-          graft.inference.CustomRules.materializeIncremental(spark, closed,
-            GraphUpdate.applyUpdate(closed, f, matchStore = closed,
-              decorate = dec),
-            r.ruleset.rules)
-        else graft.inference.CustomRules.materializeRuleset(spark, asserted,
-          r.ruleset)
-    }
-    requireConforms(r, closed)
-    requireConsistent(r, closed)
-    r.asserted = Some(asserted)
-    commit(id, closed)
   }
 
   /** A catalog (and engine) over the current snapshot, with GraphDB's

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Rdf
 import graft.sources.DirectMapper
@@ -203,113 +203,54 @@ object StreamIngest {
   }
 
   /** Continuous S6 — stream → queryable store merge: each micro-batch of
-    * quads is appended to an evolving snapshot with SET semantics (batch
-    * deduped, then anti-joined against the store — the store itself is NEVER
-    * re-distincted), so streamed quads become immediately visible to SPARQL
-    * over a catalog wrapping the returned snapshot.
+    * quads joins an evolving snapshot with SET semantics, so streamed quads
+    * become immediately visible to SPARQL over a catalog wrapping the
+    * returned (closed) snapshot.
     *
-    * `inferDelta` is the incremental-inference seam: it runs per micro-batch
-    * over the BATCH ONLY (cost ∝ batch size, not store size) — pass e.g.
-    * `b => Inference.materialize(spark, b.unionAll(ontology))` to close each
-    * delta against a fixed vocabulary; derived quads merge like streamed
-    * ones. Identity by default.
+    * `closure` keeps the snapshot closed by the same rule as a repository
+    * write ([[graft.inference.Closure]]): `initial` is closed once, an
+    * add-only batch extends the closed view, and a batch that retracts
+    * anything re-closes the asserted set, so an entailment whose last
+    * support was retracted disappears from the next snapshot. The extender
+    * sets the per-batch cost: ∝ the batch for a batch-local one
+    * ([[graft.inference.Closure.batchLocal]]); ∝ the derivations touching
+    * the batch for a custom ruleset, whose rules also join batch facts to
+    * stored ones. The default, [[graft.inference.Closure.none]], is plain
+    * set semantics.
     *
-    * Plan hygiene: one lineage cut per batch, previous cut released once the
-    * next materializes — the plan stays flat and at most ONE cached RDD is
-    * live regardless of how many batches arrive (the same cascade as
-    * `GraphUpdate.update`).
+    * A stream retracts when its rows carry a boolean `tombstone` column:
+    * each batch then applies SPARQL-Update order — tombstoned quads leave
+    * the asserted set first, added quads then enter it — and only then is
+    * the asserted set kept apart from the closed view.
+    *
+    * Plan hygiene: each batch materializes the frames it changes and
+    * releases the generations they replace, so the plan stays flat and one
+    * generation per kept frame is live.
     */
-  def mergeToStore(spark: SparkSession, quadStream: DataFrame,
-      initial: DataFrame,
-      inferDelta: DataFrame => DataFrame = identity): DataFrame =
+  def merge(spark: SparkSession, quadStream: DataFrame, initial: DataFrame,
+      closure: graft.inference.Closure = graft.inference.Closure.none): DataFrame =
     graft.exec.Generations.scope { gen =>
       val keys = Seq("graph", "s", "p", "o")
-      var store = initial
-      val q = quadStream.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val delta = inferDelta(batch.dropDuplicates(keys))
-          val fresh = delta.join(store, keys, "left_anti")
-          // eager: the next batch builds on rows, not the plan
-          store = gen.advance(store.unionByName(fresh), store)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      store
-    }
-
-  /** Continuous merge under a CUSTOM RULESET (r14 cont. — the streaming
-    * twin of `Repositories.updateCustom`'s additive path): each arriving
-    * micro-batch re-closes the store INCREMENTALLY with the batch as the
-    * semi-naive delta ([[graft.inference.CustomRules.materializeIncremental]]),
-    * so derivations JOINING batch facts to already-stored facts fire —
-    * the cross-batch joins a batch-local closure (the `inferDelta` seam
-    * of [[mergeToStore]]) cannot see — and per-batch rule work is
-    * ∝ derivations touching the batch, never a store re-close. One live
-    * cached store generation at a time (previous released as the next
-    * materializes); returns the final closed snapshot.
-    */
-  def mergeWithRules(spark: SparkSession, quadStream: DataFrame,
-      initial: DataFrame,
-      rules: Seq[graft.inference.CustomRules.Rule]): DataFrame =
-    graft.exec.Generations.scope { gen =>
-      // both closers return materialized generations: adopt, don't re-cut
-      var closed = gen.adopt(graft.inference.CustomRules.materialize(
-        spark, initial, rules))
-      val q = quadStream.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val next = gen.adopt(graft.inference.CustomRules.materializeIncremental(
-            spark, closed, batch.dropDuplicates(Seq("graph", "s", "p", "o")),
-            rules))
-          if (next ne closed) gen.release(closed)
-          closed = next
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      closed
-    }
-
-  /** DELETE-AWARE continuous merge — the streaming mirror of
-    * `Repositories.update`'s asserted/closed split (S4 × S6): the stream
-    * carries assertions AND tombstones (a boolean `tombstone` column on the
-    * quad shape). Each micro-batch applies SPARQL-Update order — tombstoned
-    * quads leave the ASSERTED store first, added quads then enter it — and
-    * the CLOSED (query) view refreshes per the same discipline as the
-    * repository path: an add-only batch costs ONE `inferDelta` pass over
-    * the batch (∝ batch, like [[mergeToStore]]); a batch that retracts
-    * anything re-closes the asserted set with `closeAll`, so an entailment
-    * whose last support was retracted disappears from the next snapshot
-    * (DRed-style counting is a possible later refinement). Identity
-    * closers give plain inference-off set semantics. Returns the final
-    * closed snapshot; plan hygiene mirrors [[mergeToStore]] (one live
-    * cached RDD per store, lineage cut per batch).
-    */
-  def mergeWithRetractions(spark: SparkSession, quadStream: DataFrame,
-      initial: DataFrame,
-      inferDelta: DataFrame => DataFrame = identity,
-      closeAll: DataFrame => DataFrame = identity): DataFrame =
-    graft.exec.Generations.scope { gen =>
-      val keys = Seq("graph", "s", "p", "o")
+      val retracts = quadStream.columns.contains("tombstone")
       var asserted = initial
-      var closed = closeAll(initial)
+      var closed = closure.close(initial)
+      if (!(closed eq initial)) gen.adopt(closed)
       val q = quadStream.writeStream.outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.dropDuplicates(keys :+ "tombstone")
-          val dels = b.filter(col("tombstone")).select(keys.map(col): _*)
-          val adds = b.filter(!col("tombstone")).select(keys.map(col): _*)
-          val hasDels = !dels.isEmpty
-          val remaining =
-            if (hasDels) asserted.join(dels, keys, "left_anti") else asserted
-          // eager: the next batch builds on rows, not the plan
-          asserted = gen.advance(
-            remaining.unionByName(adds.join(remaining, keys, "left_anti")),
-            asserted)
-          closed = gen.advance(
-            if (hasDels) closeAll(asserted)
-            else closed.unionByName(
-              inferDelta(adds).join(closed, keys, "left_anti")),
-            closed)
+          val b = batch.dropDuplicates(if (retracts) keys :+ "tombstone" else keys)
+          def quads(rows: Column) = b.filter(rows).select(keys.map(col): _*)
+          val adds = if (retracts) quads(!col("tombstone")) else b
+          lazy val dels = quads(col("tombstone"))
+          val hasDels = retracts && !dels.isEmpty
+          val before = Seq(asserted, closed)
+          if (retracts) asserted = gen.own(graft.inference.Closure.insert(
+            if (hasDels) asserted.join(dels, keys, "left_anti") else asserted,
+            adds))
+          closed = gen.own(
+            if (hasDels) closure.close(asserted)
+            else closure.extend(closed, adds))
+          before.filterNot(f => (f eq asserted) || (f eq closed))
+            .foreach(gen.release)
           ()
         }
         .start()

@@ -331,11 +331,11 @@ class UpdateSpec extends AnyFunSuite {
     val vocab = graft.inference.Inference.vocab(onto)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-    val merged = graft.streaming.StreamIngest.mergeWithRetractions(spark,
-      stream, initial = onto,
-      inferDelta = b => graft.inference.Inference.materializeOnceWith(spark,
-        b.unionAll(onto), vocab, assumeDistinct = true, cut = false),
-      closeAll = st => graft.inference.Inference.materialize(spark, st))
+    val merged = graft.streaming.StreamIngest.merge(spark,
+      stream, initial = onto, graft.inference.Closure.batchLocal(
+        b => graft.inference.Inference.materializeOnceWith(spark,
+          b.unionAll(onto), vocab, assumeDistinct = true, cut = false),
+        close = st => graft.inference.Inference.materialize(spark, st)))
     val typed = merged
       .filter(col("p") === graft.model.Rdf.RdfType &&
         col("o.value") === "urn:t#Facility")
@@ -354,10 +354,10 @@ class UpdateSpec extends AnyFunSuite {
     // trivial per-batch inference rule: every event_type quad derives a
     // urn:t#sawType companion — runs over the BATCH only (the seam a real
     // vocabulary-closure plugs into)
-    val merged = graft.streaming.StreamIngest.mergeToStore(spark,
+    val merged = graft.streaming.StreamIngest.merge(spark,
       graft.streaming.StreamIngest.quadStream(spark, TestSpark.sf), initial,
-      inferDelta = b => b.unionByName(b.filter(col("p") === evType)
-        .select(col("graph"), col("s"), lit("urn:t#sawType").as("p"), col("o"))))
+      graft.inference.Closure.batchLocal(b => b.unionByName(b.filter(col("p") === evType)
+        .select(col("graph"), col("s"), lit("urn:t#sawType").as("p"), col("o")))))
     assert(merged.filter(col("p") === evType).count() == 1000)
     assert(merged.filter(col("p") === "urn:t#sawType").count() == 1000)
     assert(merged.filter(col("p") === DirectMapper.predIri("nation", "n_name")).count() == 25)
