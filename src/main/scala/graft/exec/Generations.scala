@@ -65,6 +65,14 @@ final class Generations private {
     df
   }
 
+  /** Hand the generations `df` reads to the caller: the scope no longer
+    * releases them, on a return or a later throw.
+    */
+  def keep(df: DataFrame): DataFrame = {
+    synchronized(live --= Generations.read(df))
+    df
+  }
+
   /** `df` as a generation of this scope: adopted when its rows are already
     * materialized (a cut, or driver-local rows), cut otherwise.
     */

@@ -39,10 +39,16 @@ object Closure {
   def insert(closed: DataFrame, added: DataFrame): DataFrame =
     closed.unionByName(added.join(closed, keys, "left_anti"))
 
-  /** The built-in RDFS-Plus closure ([[Inference]]). */
+  /** The built-in RDFS-Plus closure ([[Inference]]). An extension whose
+    * set union fits under the local threshold closes on the driver, as a
+    * full close of that store would; a larger one takes
+    * [[Inference.materializeOnce]], whose one rule pass suffices unless the
+    * merged vocabulary or sameAs data cascades.
+    */
   def rdfsPlus(spark: SparkSession): Closure =
     Closure(Inference.materialize(spark, _), (closed, added) =>
-      Inference.materialize(spark, closed.unionAll(added), extension = true))
+      Inference.closeOnDriver(spark, Seq(closed, added)).getOrElse(
+        Inference.materializeOnce(spark, insert(closed, added))))
 
   /** A custom ruleset: its axioms join the full closure; an extension is
     * semi-naive with the added quads as the delta.

@@ -254,30 +254,21 @@ object Inference {
     * pays tens of Spark jobs (per-iteration rule unions, anti-join
     * counts, lineage-cut persists) that dwarf the actual work — profiled
     * at ~2 s per materialization on a 28-quad repository, the whole wall
-    * of `s4_pseudo_graphs`. The threshold probe is a `limit(n+1).count()`
-    * — bounded work on a store of ANY size — and the distributed
-    * semi-naive loop below stays the path for real fact stores.
+    * of `s4_pseudo_graphs`. The threshold probe is a bounded
+    * `limit(n+1).collect()` — bounded work on a store of ANY size, and
+    * under the threshold the probe's rows are the ones closed — and the
+    * distributed semi-naive loop below stays the path for real fact stores.
     */
   private val LocalCloseThreshold = 100000L
 
-  /** `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
-    * substitution rules — the engine's `onto:disable-sameAs` pseudo-graph
-    * (GraphDB's `FROM <http://www.ontotext.com/disable-sameAs>` answers
-    * queries without expanding statements over sameAs equivalence
-    * classes). The sameAs statements THEMSELVES still close (symmetric +
-    * transitive) and (inverse-)functional properties still derive them —
-    * identity is still asserted, it just no longer copies statements
-    * between equivalent nodes.
-    *
-    * `extension = true` marks `quads` as an already-closed view plus an
-    * additive change — the RDFS-Plus extender of [[Closure.rdfsPlus]]. A
-    * store over the threshold then takes [[materializeOnce]], whose one
-    * rule pass suffices unless the merged vocabulary or sameAs data
-    * cascades; under it the store still closes on the driver, the probe
-    * running first.
+  /** The closure of the set union of `parts`, computed on the driver when
+    * that union holds at most [[LocalCloseThreshold]] quads; None when it
+    * holds more. Each part is read once, by a bounded collect.
     */
-  def materialize(spark: SparkSession, quads: DataFrame, maxIters: Int = 10,
-      sameAsSubst: Boolean = true, extension: Boolean = false): DataFrame = {
+  private[inference] def closeOnDriver(spark: SparkSession,
+      parts: Seq[DataFrame], maxIters: Int = 10,
+      sameAsSubst: Boolean = true): Option[DataFrame] = {
+    import spark.implicits._
     // conf override exists for the parity tests (set 0 to force the
     // distributed loop); production leaves the default
     val threshold = spark.conf.getOption("spark.graft.inference.localThreshold")
@@ -287,15 +278,34 @@ object Inference {
     // quads is nonsense anyway)
     require(threshold >= 0 && threshold < Int.MaxValue,
       s"spark.graft.inference.localThreshold must be in [0, ${Int.MaxValue - 1}], got $threshold")
-    if (threshold > 0 && quads.limit((threshold + 1).toInt).count()
-        <= threshold) {
-      import spark.implicits._
-      val local = materializeLocal(
-        quads.as[graft.model.Quad].collect().toIndexedSeq, maxIters,
-        sameAsSubst)
-      return spark.createDataset(local).toDF()
+    val quads = scala.collection.mutable.LinkedHashSet[graft.model.Quad]()
+    val fits = threshold > 0 && parts.forall { p =>
+      val rows = p.as[graft.model.Quad].limit((threshold + 1).toInt).collect()
+      quads ++= rows
+      rows.length <= threshold && quads.size <= threshold
     }
-    if (extension) return materializeOnce(spark, quads)
+    if (!fits) None
+    else Some(spark.createDataset(
+      materializeLocal(quads.toIndexedSeq, maxIters, sameAsSubst)).toDF())
+  }
+
+  /** `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
+    * substitution rules — the engine's `onto:disable-sameAs` pseudo-graph
+    * (GraphDB's `FROM <http://www.ontotext.com/disable-sameAs>` answers
+    * queries without expanding statements over sameAs equivalence
+    * classes). The sameAs statements THEMSELVES still close (symmetric +
+    * transitive) and (inverse-)functional properties still derive them —
+    * identity is still asserted, it just no longer copies statements
+    * between equivalent nodes.
+    */
+  def materialize(spark: SparkSession, quads: DataFrame, maxIters: Int = 10,
+      sameAsSubst: Boolean = true): DataFrame =
+    closeOnDriver(spark, Seq(quads), maxIters, sameAsSubst)
+      .getOrElse(fixpoint(spark, quads, maxIters, sameAsSubst))
+
+  /** The distributed semi-naive fixpoint behind [[materialize]]. */
+  private def fixpoint(spark: SparkSession, quads: DataFrame, maxIters: Int,
+      sameAsSubst: Boolean): DataFrame = {
     val v = vocab(quads)
     graft.exec.Generations.scope { gen =>
       var all = gen.cut(quads.distinct())._1

@@ -172,18 +172,17 @@ final class Repositories(spark: SparkSession) {
   def quads(id: String): DataFrame =
     repo(id).quads.getOrElse(GraphUpdate.quadsDf(spark, Nil))
 
-  /** Commit a transaction's final state as the next epoch. The asserted set
-    * is cut once per commit, so its plan never replays the write history,
-    * and the cut it replaces is released; the closed view is already
-    * materialized unless it is the asserted set itself.
+  /** Commit a transaction's final state as the next epoch. `asserted` is
+    * the request's one cut of the asserted set (or the committed set itself
+    * when nothing changed), so its plan never replays the write history; the
+    * cut it replaces is released. The closed view is already materialized
+    * unless it is the asserted set itself.
     */
   private def commit(id: String, r: Repo, asserted: DataFrame,
       closed: DataFrame): DataFrame = {
     // epoch-numbered persisted paths: an overwrite-in-place would CLOBBER
     // older epochs' lazy parquet reads out from under the history views
     val epoch = r.lastEpoch + 1
-    def cutIfNew(df: DataFrame, old: Option[DataFrame]) =
-      if (old.exists(_ eq df)) df else graft.exec.Generations.cut(df)
     val snap = r.config.location match {
       case Some(loc) if r.config.partitionByPredicate =>
         GraphStore.write(closed, s"$loc/$id/e$epoch")
@@ -192,11 +191,11 @@ final class Repositories(spark: SparkSession) {
         closed.write.mode("overwrite").parquet(s"$loc/$id/e$epoch")
         spark.read.parquet(s"$loc/$id/e$epoch")
           .select(col("graph"), col("s"), col("p"), col("o"))
-      case None if closed eq asserted => cutIfNew(closed, r.quads)
       case None => closed
     }
-    val kept = if (r.closure.isIdentity) snap else cutIfNew(asserted, r.asserted)
-    r.asserted.filterNot(_ eq kept).foreach(graft.exec.Generations.release)
+    val kept = if (r.closure.isIdentity) snap else asserted
+    (r.asserted.toSeq :+ asserted).filterNot(_ eq kept)
+      .foreach(graft.exec.Generations.release)
     r.asserted = Some(kept)
     r.quads = Some(snap)
     r.noSameAs = None // the pseudo-graph views are per-snapshot
@@ -272,18 +271,22 @@ final class Repositories(spark: SparkSession) {
       changes.zipWithIndex.foreach { case (f, i) =>
         val next = GraphUpdate.applyUpdate(asserted, f,
           matchStore = view(), decorate = dec)
-        closed = if (!additive(f) || c.isIdentity) None
-          else closed.map(c.extend(_, next))
-        // a long `;`-chained request cuts its plan every few operations
-        asserted = if ((i + 1) % GraphUpdate.CutEvery == 0)
+        // the request's final asserted set is cut before the closure reads
+        // it (a loaded document parses once) and is the one the commit
+        // keeps; a long `;`-chained request also cuts every few operations
+        val cut = i == changes.size - 1 ||
+          (i + 1) % GraphUpdate.CutEvery == 0
+        asserted = if (cut && !r.asserted.exists(_ eq next))
           gen.advance(next, asserted) else next
+        closed = if (!additive(f) || c.isIdentity) None
+          else closed.map(c.extend(_, asserted))
       }
       val out = view()
       // the gates see the whole request's post-state (a request may pass
       // through a violating intermediate legally)
       requireConforms(r, out)
       requireConsistent(r, out)
-      commit(id, r, asserted, out)
+      commit(id, r, gen.keep(asserted), out)
     }
   }
 

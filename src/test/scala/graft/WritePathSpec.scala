@@ -35,10 +35,12 @@ class WritePathSpec extends AnyFunSuite {
        |""".stripMargin
 
   /** One configuration of the law: the repository config, the triple pool
-    * writes draw from, and the full closure of a driver-side asserted set.
+    * writes draw from, the full closure of a driver-side asserted set, and
+    * the local-close threshold it runs under (None: the default).
     */
   private final case class Law(name: String, config: RepoConfig,
-      pool: Seq[String], closure: Set[Quad] => Set[Quad])
+      pool: Seq[String], closure: Set[Quad] => Set[Quad],
+      threshold: Option[String] = None)
 
   private def iri(s: String) = s"<$L$s>"
   private def nodes(rnd: scala.util.Random) = iri(s"i${rnd.nextInt(5)}")
@@ -70,7 +72,11 @@ class WritePathSpec extends AnyFunSuite {
         GraphUpdate.quadsDf(spark, a.toSeq),
         CustomRules.parseRuleset(ruleset)))),
     Law("no inference", RepoConfig(shapesTtl = Some(shapesTtl)), Nil,
-      a => a))
+      a => a),
+    // threshold 0: every close and extension takes the distributed path
+    Law("RDFS-Plus, distributed", RepoConfig(inference = true,
+      shapesTtl = Some(shapesTtl)), rdfsPool,
+      a => Inference.materializeLocal(a.toSeq).toSet, threshold = Some("0")))
 
   /** A random triple: vocabulary from the law's pool, or instance data —
     * now and then a `Flag` type that no `ok` ever backs (SHACL rejects it).
@@ -104,7 +110,8 @@ class WritePathSpec extends AnyFunSuite {
     val drawn = collection.mutable.Set[Int]()
     var rejected = 0
     laws.foreach { law =>
-      (0 until 4).foreach { seq =>
+      law.threshold.foreach(spark.conf.set("spark.graft.inference.localThreshold", _))
+      try (0 until 4).foreach { seq =>
         val repos = new Repositories(spark)
         val id = s"law$seq"
         repos.create(id, law.config)
@@ -198,7 +205,7 @@ class WritePathSpec extends AnyFunSuite {
               ctx)
           }
         }
-      }
+      } finally spark.conf.unset("spark.graft.inference.localThreshold")
     }
     // the seed draws every write kind and some rejected writes
     assert(drawn.size == 7 && rejected > 0, s"kinds $drawn, rejected $rejected")
@@ -239,6 +246,32 @@ class WritePathSpec extends AnyFunSuite {
       RdfTerm.iri(s"${L}i1")))) // the axiom
     assert(got.contains(Quad(Rdf.DefaultGraph, s"${L}i0", s"${L}part",
       RdfTerm.iri(s"${L}i2")))) // derived from axiom and loaded fact
+  }
+
+  test("an RDFS-Plus extension whose set union fits under the local " +
+      "threshold closes on the driver, though the closed view and the new " +
+      "asserted set together count more rows") {
+    val repos = new Repositories(spark)
+    repos.create("local", RepoConfig(inference = true))
+    repos.load("local", ttlFile(
+      s"""@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+         |<${L}p0> rdfs:domain <${L}C0> .
+         |<${L}a> <${L}p0> <${L}b> . <${L}b> <${L}p0> <${L}c> .
+         |<${L}c> <${L}p0> <${L}d> .""".stripMargin))
+    val closed = repos.quads("local").count()
+    val asserted = repos.statements("local", infer = false).count()
+    // |closed ∪ A'| = closed + 1 ≤ threshold < closed + |A'| = closed + asserted + 1
+    spark.conf.set("spark.graft.inference.localThreshold", (closed + 1).toString)
+    try repos.update("local", s"INSERT DATA { <${L}d> <${L}name> \"d\" }")
+    finally spark.conf.unset("spark.graft.inference.localThreshold")
+    assert(asserted > 1)
+    val view = repos.quads("local")
+    assert(view.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      view.queryExecution.logical.treeString)
+    assert(facts(view) == facts(Inference.materialize(spark,
+      repos.statements("local", infer = false))))
+    assert(facts(view).size == closed + 1)
   }
 
   test("the asserted set of an in-memory inference repository stays one " +
