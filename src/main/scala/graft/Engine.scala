@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.algebra._
+import graft.exec.Generations
 import graft.model.Rdf
 import graft.parser.SparqlParser
 import graft.parser.SparqlParser.{AskQ, ConstructQ, DescribeQ, SelectQ}
@@ -160,15 +161,12 @@ final class Engine(val catalog: GraphCatalog,
     case ConstructQ(op, template) =>
       val sol = compiler.compile(op)
       // Template bnodes (16.2.1) are FRESH per solution but shared across
-      // the template within one solution: label ⊕ a per-row id. Spark marks
-      // monotonically_increasing_id nondeterministic, and each template
-      // triple re-executes the plan in its own union branch — after a
-      // shuffle, intra-partition order (hence the ids) could differ between
-      // branches. localCheckpoint materializes the stamped frame ONCE so all
-      // branches read identical ids (spec: one solution's _:b is shared).
+      // the template within one solution: label ⊕ a per-row id. Each
+      // template triple reads the stamped frame in its own union branch, so
+      // it is cut: every branch reads the same drawn ids.
       val needB = template.exists(tp => Seq(tp.s, tp.o).exists(_.isInstanceOf[B]))
       val df = if (needB)
-        sol.df.withColumn("_cbn", monotonically_increasing_id()).localCheckpoint()
+        Generations.cut(sol.df.withColumn("_cbn", monotonically_increasing_id()))
       else sol.df
       def termOf(t: PTerm): Column = t match {
         case V(n) if sol.visible(n) => df(n)
@@ -235,76 +233,59 @@ final class Engine(val catalog: GraphCatalog,
     * bnode OBJECT of an included statement pulls in that bnode's outbound
     * statements, to fixpoint.
     *
-    * Semi-naive with a DISTRIBUTED frontier (r12 — the same anti-join +
-    * lineage-cut cascade as `PropertyPaths.closure`): frontier and visited
-    * are DataFrames of bnode labels, never driver `Set`s, so a deep
-    * rdf:first/rest chain (every element a bnode) streams through
-    * executors instead of funnelling the closure through the driver. Each
-    * round is one semi-join (layer), one union (visited), one anti-join
-    * (next frontier) — all label sets are description-output-bounded and
-    * broadcast when small; superseded generations unpersist as their
-    * successors materialize, so the plan stays flat and at most four
-    * cached RDDs are live. The no-bnode common case takes an EARLY EXIT
-    * with a fully declarative plan (zero persisted state). Rounds ∝ chain
-    * DEPTH; the quad scan is never shuffled.
+    * The resource set, the first bnode layer and the reached label set are
+    * generations of one scope; the result keeps the ones it reads pinned.
+    * The no-bnode common case returns after the first layer. Rounds ∝
+    * chain DEPTH; the quad scan is never shuffled.
     */
   private def cbd(resources: DataFrame): DataFrame = {
-    val spark = catalog.spark
     val quads = catalog.allQuads
-    val bLimit = 100000L
-    // RDD-level localCheckpoint, not persist: a depth-D closure chains D/K
-    // generations of cuts, and persist keeps the full RDD lineage -- task
-    // serialization then recurses D-deep and StackOverflows around a few
-    // hundred generations. localCheckpoint TRUNCATES lineage at first
-    // materialization (the count below), so every generation's task graph
-    // is one level deep. Superseded generations are unpersisted only after
-    // their successor's count(), so the truncated (non-recomputable) blocks
-    // are never needed again. (DataFrame-level localCheckpoint would do the
-    // same but trips the AQE attribute bug Generations documents; the raw
-    // RDD path bypasses Catalyst entirely.)
-    def cutR(df: DataFrame): (DataFrame,
-        org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long) = {
-      val rdd = df.rdd.localCheckpoint()
-      val n = rdd.count()
-      (spark.createDataFrame(rdd, df.schema), rdd, n)
-    }
-    def maybeB(df: DataFrame, n: Long): DataFrame =
-      if (n <= bLimit) broadcast(df) else df
-    def outOf(rs: DataFrame, n: Long): DataFrame =
-      quads.join(maybeB(rs, n), quads("s") === rs("r"), "left_semi")
     def blankObjectsOf(layer: DataFrame): DataFrame = layer
       .filter(col("o").getField("kind") === lit(Rdf.KindBlank))
       .select(col("o").getField("value").as("r")).distinct()
 
-    val (res, resRdd, nRes) = cutR(resources.distinct())
-    val in = quads.join(maybeB(res, nRes),
-      quads("o").getField("kind") === lit(Rdf.KindIri) &&
-        quads("o").getField("value") === res("r"), "left_semi")
-    val first = outOf(res, nRes).unionAll(in)
-
-    val (f0, f0Rdd, nF0) = cutR(
-      blankObjectsOf(first).join(maybeB(res, nRes), Seq("r"), "left_anti"))
-    if (nF0 == 0) {
-      // common shape (no bnode objects): hand back the (almost) declarative
-      // plan. resRdd stays cached — localCheckpoint truncated its lineage,
-      // so the returned plan (which joins against it) could not recompute
-      // it; one live description-sized cut per result is the contract.
-      f0Rdd.unpersist(blocking = false)
-      return first.distinct()
+    // each quad join against a label set is sized from its cut
+    Generations.scope { gen =>
+      val res = gen.cut(resources.distinct())._1
+      val in = quads.join(res,
+        quads("o").getField("kind") === lit(Rdf.KindIri) &&
+          quads("o").getField("value") === res("r"), "left_semi")
+      val first = quads.join(res, quads("s") === res("r"), "left_semi")
+        .unionAll(in)
+      val (f0, nF0) = gen.cut(
+        blankObjectsOf(first).join(res, Seq("r"), "left_anti"))
+      // common shape (no bnode objects): the (almost) declarative plan
+      if (nF0 == 0) first.distinct()
+      else {
+        val reached = labelClosure(gen, f0)
+        val bq = quads.filter(col("s").startsWith("_:"))
+        first.unionAll(bq.join(reached, bq("s") === reached("r"), "left_semi"))
+          .distinct()
+      }
     }
+  }
 
-    // The closure itself runs over LABELS ONLY, as RAW RDDs: the
-    // bnode-to-bnode adjacency (src -> dst), hash-partitioned once; each
-    // hop is a narrow co-partitioned join plus a tiny distinct -- no
-    // Catalyst analysis per level (a DataFrame formulation spent ~95% of a
-    // 1000-level closure planning 32-join trees), no broadcast collect per
-    // level, and K levels run lazily per job. Full quad rows join back in
-    // ONE semi-join at the end; the quad set is scanned twice total,
-    // however deep the chains.
+  /** The generation of every bnode label (column `r`) reachable from the
+    * labels `f0` over bnode-to-bnode statements, `f0` included.
+    *
+    * The closure runs over LABELS ONLY, as RAW RDDs: the bnode-to-bnode
+    * adjacency (src -> dst), hash-partitioned once; each hop is a narrow
+    * co-partitioned join plus a tiny distinct -- no Catalyst analysis per
+    * level (a DataFrame formulation spent ~95% of a 1000-level closure
+    * planning 32-join trees), no broadcast collect per level, and K levels
+    * run lazily per job. The caller joins the full quad rows back in ONE
+    * semi-join, so the quad set is scanned twice total, however deep the
+    * chains. RDD `localCheckpoint` stays here, not Generations: a depth-D
+    * closure chains D/K rounds of raw RDDs, and only a truncated lineage
+    * keeps task serialization from recursing D deep.
+    */
+  private def labelClosure(gen: Generations, f0: DataFrame): DataFrame = {
+    val spark = catalog.spark
+    import spark.implicits._
     import org.apache.spark.rdd.RDD
     val nPart = 4
     val part = new org.apache.spark.HashPartitioner(nPart)
-    val eRdd: RDD[(String, String)] = quads
+    val eRdd: RDD[(String, String)] = catalog.allQuads
       .filter(col("s").startsWith("_:") &&
         col("o").getField("kind") === lit(Rdf.KindBlank))
       .select(col("s"), col("o").getField("value"))
@@ -321,13 +302,14 @@ final class Engine(val catalog: GraphCatalog,
     // nodes; the round-end subtract against the FULL visited set kills
     // it, so termination holds on arbitrary graphs) but DO dedup --
     // converging diamond paths would otherwise multiply duplicates
-    // exponentially within a round.
+    // exponentially within a round. Superseded rounds are unpersisted
+    // only after their successor's count(), so the truncated
+    // (non-recomputable) blocks are never needed again.
     var K = 4
-    var visitedR: RDD[String] = f0Rdd.map(_.getString(0))
-    var visitedCut: RDD[String] = null
-    var fr: RDD[String] = visitedR
-    var frCut: RDD[String] = null
-    var nF = nF0
+    var visited: RDD[String] = f0.rdd.map(_.getString(0))
+    var fr: RDD[String] = visited
+    var cuts = Seq.empty[RDD[String]]
+    var nF = 1L
     while (nF > 0) {
       var f = fr
       val consumed = collection.mutable.ListBuffer[RDD[String]]()
@@ -336,37 +318,21 @@ final class Engine(val catalog: GraphCatalog,
         f = f.map((_, ())).partitionBy(part).join(eRdd)
           .map(_._2._2).distinct(nPart)
       }
-      val v2 = visitedR
+      val v2 = visited
         .union(spark.sparkContext.union(consumed.toSeq)).distinct(nPart)
         .localCheckpoint()
       v2.count()
       val f2 = f.subtract(v2, nPart).localCheckpoint()
-      val nF2 = f2.count()
-      if (visitedCut != null) visitedCut.unpersist(blocking = false)
-      if (frCut != null) frCut.unpersist(blocking = false)
-      visitedR = v2; visitedCut = v2
-      fr = f2; frCut = f2; nF = nF2
+      nF = f2.count()
+      cuts.foreach(_.unpersist(blocking = false))
+      cuts = Seq(v2, f2)
+      visited = v2; fr = f2
       K = math.min(K * 4, 512)
     }
-    if (frCut != null) frCut.unpersist(blocking = false)
+    val reached = gen.cut(visited.toDF("r"))._1
     eRdd.unpersist(blocking = false)
-
-    // one semi-join pulls every reached bnode's statements (reached =
-    // final visited label set, which still includes f0). The final cuts
-    // stay cached until the result is consumed -- same contract as
-    // GraphUpdate's snapshot cascade (a bounded number of live cuts per
-    // result).
-    val reached = spark.createDataFrame(
-      visitedR.map(org.apache.spark.sql.Row(_)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("r",
-          org.apache.spark.sql.types.StringType))))
-    val nReached = visitedR.count()
-    val bq = quads.filter(col("s").startsWith("_:"))
-    first.unionAll(
-      bq.join(maybeB(reached, nReached), bq("s") === reached("r"),
-        "left_semi"))
-      .distinct()
+    cuts.foreach(_.unpersist(blocking = false))
+    reached
   }
 
   /** SPARQL Update request (text) applied to a quad snapshot → new snapshot

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.algebra._
+import graft.exec.Generations
 import graft.inference.Inference
 import graft.model.{Quad, Rdf, RdfTerm}
 import graft.paths._
@@ -52,34 +53,6 @@ object SparkEntry {
   private def pred(t: String, c: String): I = I(DirectMapper.predIri(t, c))
   private def cls(t: String): I = I(DirectMapper.classIri(t))
 
-  /** Scan-parallelism floor (r18 optimization, guide §2.5 "input skew: one
-    * huge unsplittable file — repartition immediately after the read"): the
-    * testdata tables are single-file, SINGLE-ROW-GROUP parquet, so the scan
-    * is one task no matter what `maxPartitionBytes`/`minPartitionNum` say —
-    * row groups are the split floor — and every narrow compute-heavy stage
-    * above it (tokenize+md5, vector folds, k-means assignment) inherited
-    * 1-way parallelism (profiled: dd_semantic spent 6+ s in 1-task stages
-    * on a 32-core box). Scale-ADAPTIVE: when the planned scan already has
-    * >= defaultParallelism partitions (any real multi-row-group/multi-file
-    * table, so every production layout), this is the identity — the
-    * exchange exists only for inputs too small to split, where it costs
-    * one shuffle of the (tiny) raw bytes.
-    */
-  private def widen(spark: SparkSession, key: Option[String], df: DataFrame): DataFrame = {
-    val p = spark.sparkContext.defaultParallelism
-    // planning-only probe, recomputed per call (r19, ADVICE: the r18 memo
-    // keyed on path + spark.hashCode — identity hashes can collide across
-    // sessions and a regenerated file silently kept the stale count)
-    val n = df.rdd.getNumPartitions
-    // r19: hash on the table's declared key, not round-robin — a keyless
-    // repartition(p) pays a LOCAL SORT of every full-text row first
-    // (sortBeforeRepartition, for retry determinism; guide §2.5), profiled
-    // as the single biggest stage of dd_decontam's widen. The key is the
-    // table's unique primary key, so the spread is uniform by construction;
-    // a table with no declared key falls back to round-robin.
-    if (n >= p) df
-    else key.fold(df.repartition(p))(k => df.repartition(p, col(k)))
-  }
   private def tbl(spark: SparkSession, sfDir: String, t: String): DataFrame = {
     spark.read.parquet(s"$sfDir/$t.parquet")
   }
@@ -92,8 +65,7 @@ object SparkEntry {
     * aggregation saves), so widening is per CALL SITE, not in [[tbl]].
     */
   private[graft] def tblW(spark: SparkSession, sfDir: String, t: String): DataFrame =
-    widen(spark, DirectMapper.testdataSpecs.get(t).flatMap(_.pks.headOption),
-      tbl(spark, sfDir, t))
+    GraphCatalog.widen(tbl(spark, sfDir, t), DirectMapper.testdataSpecs.get(t))
 
   /** Unwrap a term-struct var to a plain typed column. */
   private def sv(df: DataFrame, v: String, as: String): Column =
@@ -2168,15 +2140,14 @@ object SparkEntry {
     // within total cost 8 — semi-naive Bellman-Ford, integer-exact.
     "gx_wsssp" -> ((s, dir) => {
       val li = tbl(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      // localCheckpoint: the co-occurrence self-join is the expensive part
-      // of this query and BOTH consumers below (source pick, relaxation
-      // loop) would otherwise re-execute it from parquet.
-      val w = graft.graph.GraphAnalytics.coOccurrenceEdges(
+      // cut: the co-occurrence self-join is the expensive part of this
+      // query and BOTH consumers below (source pick, relaxation loop)
+      // would otherwise re-execute it from parquet.
+      val w = Generations.cut(graft.graph.GraphAnalytics.coOccurrenceEdges(
         li, "l_orderkey", "l_partkey")
         .groupBy("src", "dst").agg(count(lit(1)).as("n"))
         .select(col("src"), col("dst"),
-          greatest(lit(6) - col("n"), lit(1)).cast("bigint").as("w"))
-        .localCheckpoint()
+          greatest(lit(6) - col("n"), lit(1)).cast("bigint").as("w")))
       val source = w.agg(min(col("src"))).collect()(0).getLong(0)
       ordered(graft.graph.GraphAnalytics.ssspWeighted(w, source, maxCost = 8)
         .select(col("v").as("part_id"), col("dist")))
@@ -2459,17 +2430,10 @@ object SparkEntry {
         RdfTerm.iri("urn:graft/class/stream_event"))).toDS().toDF()
       val (cat0, _) = ctx(s, dir)
       val initial = cat0.forPredicate(DirectMapper.predIri("nation", "n_name")).limit(0)
-      // the vocabulary is the FIXED one-rule ontology — collect it ONCE
-      // (not per batch) and run the single-pass closure: DirectMapper
-      // event quads can add neither schema rows nor sameAs facts (the
-      // materializeOnceWith preconditions), the batch arrives deduped
-      // (assumeDistinct), and merge cuts each batch union itself (a cut
-      // here would double-materialize)
-      val vocab = Inference.vocab(onto)
       val merged = graft.streaming.StreamIngest.merge(s,
         graft.streaming.StreamIngest.quadStream(s, dir), initial,
-        graft.inference.Closure.batchLocal(b => Inference.materializeOnceWith(
-          s, b.unionAll(onto), vocab, assumeDistinct = true, cut = false)))
+        graft.inference.Closure.batchLocal(b =>
+          Inference.materialize(s, b.unionAll(onto))))
       val df = new Engine(new GraphCatalog(s).addQuads(merged)).select(
         "SELECT (COUNT(*) AS ?n) WHERE { ?ev a <urn:graft/class/stream_event> }")
       df.select(df("n").getField("num").cast("bigint").as("n"))
@@ -2532,13 +2496,11 @@ object SparkEntry {
       writeBatch(quadsOf(_ < 10), tomb = true, "b1", now)
       val onto = Seq(graft.model.Quad(Rdf.DefaultGraph, "urn:t#name",
         Rdf.RdfsDomain, RdfTerm.iri("urn:t#Nation"))).toDS().toDF()
-      val vocab = Inference.vocab(onto)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
       val merged = graft.streaming.StreamIngest.merge(s,
         stream, initial = onto, graft.inference.Closure.batchLocal(
-          b => Inference.materializeOnceWith(s, b.unionAll(onto),
-            vocab, assumeDistinct = true, cut = false),
+          b => Inference.materialize(s, b.unionAll(onto)),
           close = st => Inference.materialize(s, st)))
       val df = new Engine(new GraphCatalog(s).addQuads(merged)).select(
         "SELECT ?x WHERE { ?x a <urn:t#Nation> }")
@@ -4374,11 +4336,10 @@ object SparkEntry {
     // Here: customers over an account-balance cap + a market-segment
     // allow-list; every nation under-counts a required duplicate name.
     "shacl_report" -> ((s, dir) => {
-      // ~15 constraint branches each re-scan the quad view; materialize the
-      // (row-count-bounded) exploded quads ONCE so every branch reads the
-      // checkpoint instead of re-running the 3-table explode
-      val data = DirectMapper.testdataQuads(s, dir,
-        Seq("customer", "nation", "region")).localCheckpoint()
+      // ~15 constraint branches each re-scan the quad view; cut the
+      // exploded quads once instead of re-running the 3-table explode
+      val data = Generations.cut(DirectMapper.testdataQuads(s, dir,
+        Seq("customer", "nation", "region")))
       val shapes =
         """@prefix sh: <http://www.w3.org/ns/shacl#> .
           |<urn:shape/Customer> a sh:NodeShape ;
@@ -4412,8 +4373,9 @@ object SparkEntry {
     // LITERAL objects of c_mktsegment (pattern XOR in-list on the focus
     // term itself).
     "shacl_xone" -> ((s, dir) => {
-      val data = DirectMapper.testdataQuads(s, dir, Seq("customer"))
-        .localCheckpoint()
+      // every constraint branch re-scans the quad view: cut it once
+      val data = Generations.cut(
+        DirectMapper.testdataQuads(s, dir, Seq("customer")))
       val shapes =
         """@prefix sh: <http://www.w3.org/ns/shacl#> .
           |<urn:shape/Bal> a sh:NodeShape ;
@@ -4452,8 +4414,9 @@ object SparkEntry {
     // sh:alternativePath (one IN-list scan over the alternatives) and
     // sh:zeroOrOnePath (the focus node itself joins the value set).
     "shacl_paths" -> ((s, dir) => {
-      val data = DirectMapper.testdataQuads(s, dir, Seq("customer", "nation"))
-        .localCheckpoint()
+      // every constraint branch re-scans the quad view: cut it once
+      val data = Generations.cut(
+        DirectMapper.testdataQuads(s, dir, Seq("customer", "nation")))
       val shapes =
         """@prefix sh: <http://www.w3.org/ns/shacl#> .
           |@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
@@ -4500,8 +4463,9 @@ object SparkEntry {
     // compare by the numeric shadow) over lineitem's discount-vs-tax — a
     // real data-quality mix: ~55% of lineitems discount above their tax.
     "shacl_pairs" -> ((s, dir) => {
-      val data = DirectMapper.testdataQuads(s, dir, Seq("part", "lineitem"))
-        .localCheckpoint()
+      // every constraint branch re-scans the quad view: cut it once
+      val data = Generations.cut(
+        DirectMapper.testdataQuads(s, dir, Seq("part", "lineitem")))
       val shapes =
         """@prefix sh: <http://www.w3.org/ns/shacl#> .
           |<urn:shape/PartPair> a sh:NodeShape ;
@@ -4524,8 +4488,9 @@ object SparkEntry {
     // customers (inverse path) whose IRI passes the qualifying value-level
     // shape, gated by qualifiedMinCount / qualifiedMaxCount.
     "shacl_qualified" -> ((s, dir) => {
-      val data = DirectMapper.testdataQuads(s, dir, Seq("customer", "nation"))
-        .localCheckpoint()
+      // every constraint branch re-scans the quad view: cut it once
+      val data = Generations.cut(
+        DirectMapper.testdataQuads(s, dir, Seq("customer", "nation")))
       val shapes =
         """@prefix sh: <http://www.w3.org/ns/shacl#> .
           |<urn:shape/NationCust> a sh:NodeShape ;

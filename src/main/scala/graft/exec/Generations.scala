@@ -2,23 +2,32 @@ package graft.exec
 
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
-/** The generations one iterative loop materializes — the single owner of
-  * every lineage cut in path search, graph analytics, property-path
-  * closure, the inference fixpoints, streaming merge and SPARQL Update
-  * (Pregelix-style: each superstep is one materialized dataflow generation).
+/** The one way the engine materializes an intermediate: the rounds of
+  * every iterative loop (path search, graph analytics, property-path
+  * closure, the inference fixpoints, streaming merge, SPARQL Update) and
+  * the frames a query reads more than once (pipeline signatures and
+  * candidate sets, bnode-stamped solutions). Pregelix-style: each
+  * superstep is one materialized generation, and the join plan against it
+  * is chosen from that generation's size.
   *
-  * A cut persists a frame MEMORY_AND_DISK, counts it in the same job and
-  * re-wraps the rows as a LogicalRDD leaf, so the next round plans over
-  * rows instead of every earlier round's plan (a persist-only loop blows up
-  * the analyzer at depth; DataFrame `localCheckpoint` makes the same cut but
-  * trips an AQE attribute-resolution bug, "key not found: …#N", on
-  * multi-partition plans). An RDD-backed frame carries no Catalyst stats,
-  * so callers size broadcast and lookup choices from the returned count.
+  * A cut keeps the frame's internal (Unsafe) rows MEMORY_AND_DISK and
+  * wraps them in a LogicalRDD leaf, so the next round plans over rows
+  * instead of every earlier round's plan. The leaf carries statistics:
+  * [[Generations#cut]] sums the exact row count and byte size in the one
+  * job that materializes the rows, [[Generations#cutLazy]] takes the
+  * optimizer's estimate of the frame's plan. Spark and AQE therefore
+  * choose broadcast or shuffle for a join against a generation as they do
+  * for a file scan; no loop keeps its own row bound. A cut of a
+  * nondeterministic plan (e.g. `monotonically_increasing_id` stamps) is
+  * locally checkpointed, so it is never recomputed with new values.
   *
   * Release contract of [[Generations.scope]]: when the body returns, every
   * generation it made is released except those the returned frame reads —
@@ -32,19 +41,35 @@ final class Generations private {
 
   /** Materialize `df` as a generation of this scope, with its row count. */
   def cut(df: DataFrame): (DataFrame, Long) = {
-    val (out, rows) = persist(df)
-    (out, rows.count())
+    val rows = materialize(df)
+    val (n, bytes) = rows.aggregate((0L, 0L))(
+      (a, r) => (a._1 + 1, a._2 + r.getSizeInBytes),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    (Generations.leaf(df, rows, Statistics(bytes, Some(BigInt(n)))), n)
   }
 
   /** A cut without the count job: the rows materialize in the first job
-    * that reads them.
+    * that reads them, and the leaf is sized by the optimizer's estimate.
     */
-  def cutLazy(df: DataFrame): DataFrame = persist(df)._1
+  def cutLazy(df: DataFrame): DataFrame = {
+    val est = df.queryExecution.optimizedPlan.stats
+    Generations.leaf(df, materialize(df), Statistics(est.sizeInBytes, est.rowCount))
+  }
 
-  private def persist(df: DataFrame): (DataFrame, RDD[Row]) = {
-    val rows = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+  private def materialize(df: DataFrame): RDD[UnsafeRow] = {
+    val schema = df.schema
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      it.map {
+        case u: UnsafeRow => u.copy()
+        case r => toUnsafe(r).copy()
+      }
+    }.setName(Generations.Name)
+    if (df.queryExecution.optimizedPlan.deterministic)
+      rows.persist(StorageLevel.MEMORY_AND_DISK)
+    else rows.localCheckpoint()
     synchronized(live += rows)
-    (df.sparkSession.createDataFrame(rows, df.schema), rows)
+    rows
   }
 
   /** Columnar cache of a STATIC input the loop re-reads every round: keeps
@@ -106,6 +131,9 @@ final class Generations private {
 
 object Generations {
 
+  /** The RDD name that marks a generation's rows. */
+  private val Name = "graft.exec.Generations"
+
   /** Run one loop; see the class doc for what stays pinned. */
   def scope(body: Generations => DataFrame): DataFrame = {
     val g = new Generations
@@ -122,11 +150,20 @@ object Generations {
   def release(df: DataFrame): Unit =
     read(df).foreach(_.unpersist(blocking = false))
 
-  /** The persisted rows under the cut leaves `df` reads (`createDataFrame`
-    * wraps each in one converting map).
+  /** A DataFrame over a generation's rows: a LogicalRDD leaf with fresh
+    * attributes of `df`'s columns and the given statistics.
     */
+  private def leaf(df: DataFrame, rows: RDD[UnsafeRow],
+      stats: Statistics): DataFrame = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val output = df.queryExecution.analyzed.output.map(_.newInstance())
+    ColumnBridge.ofRows(spark, LogicalRDD(output,
+      rows.asInstanceOf[RDD[InternalRow]])(spark, Some(stats), None))
+  }
+
+  /** The generations (still materialized) under the leaves `df` reads. */
   private def read(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.logical.collectWithSubqueries {
-      case l: LogicalRDD => l.rdd.dependencies.map(_.rdd)
-    }.flatten.filter(_.getStorageLevel != StorageLevel.NONE)
+      case l: LogicalRDD if l.rdd.name == Name => l.rdd
+    }.filter(_.getStorageLevel != StorageLevel.NONE)
 }

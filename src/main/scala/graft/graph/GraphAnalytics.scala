@@ -218,9 +218,6 @@ object GraphAnalytics {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxCost >= 0)
-    val BcastLimit = 500000L
-    def bc(df: DataFrame, n: Long): DataFrame =
-      if (n <= BcastLimit) broadcast(df) else df
     Generations.scope { gen =>
       // materialize the edge set ONCE — its lineage (often an expensive
       // self-join) must not re-execute every relaxation round
@@ -228,28 +225,26 @@ object GraphAnalytics {
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
         .filter(col("src") =!= col("dst"))
         .groupBy("src", "dst").agg(min(col("w")).as("w"))) // parallel edges: keep cheapest
-      var (best, bestN) = gen.cut(Seq((source, 0L)).toDF("v", "dist"))
+      var (best, frontierN) = gen.cut(Seq((source, 0L)).toDF("v", "dist"))
       var frontier = best
-      var frontierN = bestN
       var go = true
       while (go && frontierN > 0) {
-        // broadcast the frontier: the edge set never shuffles per round
-        val cand = bc(frontier, frontierN).join(und, frontier("v") === und("src"))
+        // a frontier-sized generation broadcasts: the edge set never
+        // shuffles per round
+        val cand = frontier.join(und, frontier("v") === und("src"))
           .select(und("dst").as("v"), (frontier("dist") + und("w")).as("dist"))
           .filter(col("dist") <= maxCost)
           .groupBy("v").agg(min(col("dist")).as("dist"))
         val (improved, impN) = gen.cut(cand.alias("c")
-          .join(bc(best, bestN).alias("b"), Seq("v"), "left_outer")
+          .join(best.alias("b"), Seq("v"), "left_outer")
           .filter(col("b.dist").isNull || col("c.dist") < col("b.dist"))
           .select(col("v"), col("c.dist").as("dist")))
         if (impN == 0) go = false
         else {
-          // lineage cut WITHOUT a count job: |best ∪ improved| ≤ bestN + impN
-          // and the count only feeds the broadcast bound, so the upper bound
-          // keeps decisions safe and saves one job per relaxation round
-          best = gen.cutLazy(best.join(bc(improved, impN), Seq("v"), "left_anti")
+          // lineage cut WITHOUT a count job: the optimizer's estimate
+          // (|best| + |improved|) sizes the next round's joins
+          best = gen.cutLazy(best.join(improved, Seq("v"), "left_anti")
             .unionAll(improved))
-          bestN = bestN + impN
           frontier = improved; frontierN = impN
         }
       }
@@ -285,8 +280,8 @@ object GraphAnalytics {
           s"kCore: no fixpoint within $maxRounds rounds — raise maxRounds " +
             "(and the oracle's unroll depth)")
         prev = n
-        // no broadcast hint: the survivor set starts graph-sized — AQE
-        // downgrades to broadcast as peeling shrinks it
+        // the survivor set's cut carries its size: it broadcasts once
+        // peeling has shrunk it under Spark's threshold
         cur = gen.cut(cur
           .join(keep, cur("src") === keep("v"), "left_semi")
           .join(keep, cur("dst") === keep("v"), "left_semi"))._1

@@ -31,7 +31,8 @@ import graft.exec.Generations
   * so pruning is exact). `allPaths` necessarily carries every live simple
   * path (the OUTPUT complexity of all-paths enumeration), bounded by
   * `maxLen ≤ 16`; at 100 TB the edge view persists partitioned by `src`
-  * so the tiny-frontier joins broadcast and prune.
+  * so the tiny-frontier joins prune, and broadcast because each frontier
+  * generation carries its own size.
   */
 object PathSearch {
 
@@ -50,18 +51,6 @@ object PathSearch {
       .toDF("path_idx", "plen", "edge_idx", "start", "pred", "end")
   }
 
-  /** Broadcast `df` when its known row count is frontier-sized; above the
-    * bound fall back to the shuffle join (a 100 TB frontier must not be
-    * collected to the driver). Row count alone is a poor byte proxy for
-    * DEEP frontiers — each row carries nodes/path arrays that grow
-    * linearly with depth — so the bound shrinks with `width` (the per-row
-    * array length, 1 for plain vertex sets): the admitted broadcast stays
-    * ~constant bytes at every depth instead of growing 16× by the hop cap.
-    */
-  private val BroadcastRows = 100000L
-  private def maybeBroadcast(df: DataFrame, n: Long, width: Int = 1): DataFrame =
-    if (n <= BroadcastRows / math.max(1, width)) broadcast(df) else df
-
   /** INDEX-LOOKUP pruning for small frontiers: a broadcast-frontier join
     * still SCANS the whole edge set every hop — at 26.5M cached edges
     * that is the entire per-hop cost (~1.5 s × hops) for a walk whose
@@ -73,7 +62,8 @@ object PathSearch {
     * batches and the hop becomes a point lookup instead of a scan — the
     * only shape that survives a 100 TB edge set. Above the bound the
     * filter is skipped (a huge IN list would cost more than it saves);
-    * the plain scan-join still answers.
+    * the plain scan-join still answers. This prunes the scan; it does not
+    * pick the join — Spark sizes the frontier join from the cut's stats.
     */
   private val LookupRows = 8192L
   private def frontierEdges(edges: DataFrame, frontier: DataFrame,
@@ -159,9 +149,8 @@ object PathSearch {
       var depth = 0
       while (depth < maxLen && fn > 0) {
         depth += 1
-        val fr = maybeBroadcast(frontier, fn, width = depth)
         val hop = frontierEdges(edges, frontier, fn)
-        val (ext, _) = gen.cut(hop.join(fr, fr("end") === hop("src"))
+        val (ext, _) = gen.cut(hop.join(frontier, frontier("end") === hop("src"))
           .filter(!array_contains(col("nodes"), col("dst")))
           .select(col("dst").as("end"),
             concat(col("nodes"), array(col("dst"))).as("nodes"),
@@ -199,17 +188,15 @@ object PathSearch {
     if (source == dest) return emptyResult(edges0)
     Generations.scope { gen =>
       val edges = edgeView(edges0, bidirectional, gen, assumeSet)
-      var (visited, vn) = gen.cut(Seq(source).toDF("v"))
+      var visited = gen.cut(Seq(source).toDF("v"))._1
       var (frontier, fn) = gen.cut(Seq((source, Seq(source))).toDF("end", "path"))
       var result: DataFrame = null
       var depth = 0
       while (result == null && depth < maxLen && fn > 0) {
         depth += 1
-        val fr = maybeBroadcast(frontier, fn, width = depth)
         val hop = frontierEdges(edges, frontier, fn)
-        val (ext, _) = gen.cut(hop.join(fr, fr("end") === hop("src"))
-          .join(maybeBroadcast(visited, vn), col("dst") === visited("v"),
-            "left_anti")
+        val (ext, _) = gen.cut(hop.join(frontier, frontier("end") === hop("src"))
+          .join(visited, col("dst") === visited("v"), "left_anti")
           .select(col("dst").as("end"),
             concat(col("path"), array(col("p"), col("dst"))).as("path")))
         val destPath = ext.filter(col("end") === lit(dest))
@@ -218,8 +205,7 @@ object PathSearch {
         else {
           val (nxt, nn) = gen.cut(ext.groupBy(col("end"))
             .agg(min(col("path")).as("path")))
-          val cutV = gen.cut(visited.unionAll(nxt.select(col("end").as("v"))))
-          visited = cutV._1; vn = cutV._2
+          visited = gen.cut(visited.unionAll(nxt.select(col("end").as("v"))))._1
           frontier = nxt; fn = nn
         }
       }

@@ -171,83 +171,6 @@ object Inference {
       (if (withSameAsSubst) Seq(subjSub, objSub) else Nil)
   }
 
-  /** Materialize the closure: `asserted ∪ inferred`, deduplicated.
-    *
-    * Accumulation is SEMI-NAIVE: each iteration dedups only what the rules
-    * DERIVED this round, anti-joins it against the store to keep just the
-    * genuinely new facts, and appends — the store itself is never re-shuffled
-    * through a global distinct again (at 100 TB a per-iteration distinct over
-    * the whole fact store would dominate everything else).
-    *
-    * Each iteration's output is a [[graft.exec.Generations]] cut: the
-    * iterative union lineage otherwise grows multiplicatively and every later
-    * query over the inferred store would re-carry that whole logical plan per
-    * triple-pattern scan (SURVEY §7.4 risk #4 — observed as an analyzer OOM).
-    */
-  /** Single-pass closure for NON-RECURSIVE vocabularies — the streaming
-    * delta-inference fast path. When no rule's output can fire another rule
-    * (no class/property hierarchies, no inverse/symmetric/transitive, no
-    * (inverse-)functional sameAs derivation, domain/range not declared on
-    * rdf:type itself) and the data carries no owl:sameAs facts, the fixpoint
-    * is reached after ONE rule application — so the iterate-and-verify pass
-    * of [[materialize]] (a second full rule stack + anti-join + count over
-    * the whole batch) is pure overhead and is skipped. Falls back to the
-    * full fixpoint whenever the vocabulary or data could cascade, so the
-    * semantics are ALWAYS those of [[materialize]].
-    */
-  def materializeOnce(spark: SparkSession, quads: DataFrame,
-      assumeDistinct: Boolean = false, cut: Boolean = true): DataFrame = {
-    val v = vocab(quads)
-    if (vocabRecursive(v) || !quads.filter(col("p") === Rdf.OwlSameAs).isEmpty)
-      materialize(spark, quads)
-    else onePass(spark, quads, v, assumeDistinct, cut)
-  }
-
-  /** True when some rule output could fire another rule — the single-pass
-    * closure is only sound when this is false AND the data carries no
-    * owl:sameAs facts.
-    */
-  private[graft] def vocabRecursive(v: Vocab): Boolean =
-    v.subClass.nonEmpty || v.subProp.nonEmpty ||
-      v.inverses.nonEmpty || v.symmetric.nonEmpty || v.transitive.nonEmpty ||
-      v.functional.nonEmpty || v.invFunctional.nonEmpty ||
-      v.domain.contains(Rdf.RdfType) || v.range.contains(Rdf.RdfType)
-
-  /** [[materializeOnce]] with a PRECOMPUTED vocabulary and caller-asserted
-    * preconditions — the per-batch fast path for a production stream whose
-    * ontology is fixed: no per-batch vocabulary collect, no per-batch
-    * sameAs guard scan. The CALLER asserts that (a) `v` covers every
-    * schema triple in `quads` (the stream adds data, not vocabulary) and
-    * (b) `quads` carries no owl:sameAs facts; `v` itself is still checked
-    * for recursion and falls back to the fixpoint.
-    */
-  def materializeOnceWith(spark: SparkSession, quads: DataFrame, v: Vocab,
-      assumeDistinct: Boolean = false, cut: Boolean = true): DataFrame =
-    if (vocabRecursive(v)) materialize(spark, quads)
-    else onePass(spark, quads, v, assumeDistinct, cut)
-
-  private def onePass(spark: SparkSession, quads: DataFrame, v: Vocab,
-      assumeDistinct: Boolean, cut: Boolean): DataFrame = {
-    // `assumeDistinct`: a streaming caller already dropDuplicates'd the
-    // batch — a second full-batch shuffle here would be pure overhead.
-    val base = if (assumeDistinct) quads else quads.distinct()
-    // sameAs emptiness is established by the caller (guard scan in
-    // materializeOnce, caller assertion in materializeOnceWith) — the
-    // substitution rules fire on nothing, so skip them, or they'd still
-    // shuffle the whole batch twice (AQE can't always elide a join whose
-    // build side is only empty at runtime).
-    val out = applyRules(base, v, withSameAsSubst = false)
-      .reduceOption(_.unionAll(_)) match {
-      case None => base
-      case Some(d) => base.unionAll(
-        d.distinct().join(base, Seq("graph", "s", "p", "o"), "left_anti"))
-    }
-    // `cut = false` when the caller materializes the result itself
-    // (StreamIngest.merge cuts each batch's union) — a cut here would
-    // double-materialize every batch.
-    if (cut) graft.exec.Generations.cut(out) else out
-  }
-
   /** Stores at or below this row count close on the DRIVER
     * ([[materializeLocal]]): an ontology closure over a dimension-sized
     * store is driver-sized by definition, and the distributed fixpoint
@@ -289,7 +212,20 @@ object Inference {
       materializeLocal(quads.toIndexedSeq, maxIters, sameAsSubst)).toDF())
   }
 
-  /** `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
+  /** Materialize the closure: `asserted ∪ inferred`, deduplicated.
+    *
+    * Accumulation is SEMI-NAIVE: each iteration dedups only what the rules
+    * DERIVED this round, anti-joins it against the store to keep just the
+    * genuinely new facts, and appends — the store itself is never re-shuffled
+    * through a global distinct again (at 100 TB a per-iteration distinct over
+    * the whole fact store would dominate everything else).
+    *
+    * Each iteration's output is a [[graft.exec.Generations]] cut: the
+    * iterative union lineage otherwise grows multiplicatively and every later
+    * query over the inferred store would re-carry that whole logical plan per
+    * triple-pattern scan (SURVEY §7.4 risk #4 — observed as an analyzer OOM).
+    *
+    * `sameAsSubst = false` computes the closure WITHOUT the owl:sameAs
     * substitution rules — the engine's `onto:disable-sameAs` pseudo-graph
     * (GraphDB's `FROM <http://www.ontotext.com/disable-sameAs>` answers
     * queries without expanding statements over sameAs equivalence

@@ -52,14 +52,6 @@ object PropertyPaths {
     case PZeroOrOne(step) => PathZeroOrOneOp(s, step, o, graph)
   }
 
-  /** Pairs below this count are broadcast in the closure joins: a cut
-    * frame carries no partitioning info, so a shuffle join would
-    * re-shuffle BOTH sides every iteration. Most real edge sets (ontology
-    * hierarchies, location forests) are far below it; at/above it the loop
-    * falls back to shuffle joins, which is the right plan for huge graphs.
-    */
-  private val BroadcastPairLimit = 1000000L
-
   /** Transitive closure of an edge set (`src`,`dst` columns of any equatable
     * type — strings or term structs) — semi-naive: join only the frontier
     * with the edges each round. Each round's frontier and accumulator are
@@ -80,21 +72,21 @@ object PropertyPaths {
           col("dst.dst").as("dst"))
     }
     Generations.scope { gen =>
+      // every join below is against a generation, which carries its size:
+      // Spark broadcasts the edges and the accumulator while they are small
+      // and shuffles once they are not
       val (edges, eCount) = gen.cut(edges0.select("src", "dst").distinct())
-      val e = if (eCount <= BroadcastPairLimit) broadcast(edges) else edges
       var all = edges
-      var allCount = eCount
       var frontier = edges
       var iter = 0
       var done = eCount == 0
       while (!done && iter < maxIters) {
         val next = frontier.alias("f")
-          .join(e.alias("e"), col("f.dst") === col("e.src"))
+          .join(edges.alias("e"), col("f.dst") === col("e.src"))
           .select(col("f.src").as("src"), col("e.dst").as("dst"))
           .distinct()
-        val allB = if (allCount <= BroadcastPairLimit) broadcast(all) else all
         val (newPairs, npCount) =
-          gen.cut(next.join(allB, Seq("src", "dst"), "left_anti"))
+          gen.cut(next.join(all, Seq("src", "dst"), "left_anti"))
         if (frontier ne edges) gen.release(frontier)
         frontier = newPairs
         if (npCount == 0) done = true
@@ -102,7 +94,6 @@ object PropertyPaths {
           val all2 = gen.cut(all.unionAll(newPairs))._1
           if (all ne edges) gen.release(all)
           all = all2
-          allCount += npCount
         }
         iter += 1
       }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.exec.Generations
 
 /** Deduplication operators for training-data pipelines (north-star ops).
   *
@@ -16,25 +17,6 @@ import org.apache.spark.sql.functions._
   * All signature math is `functions._` expressions (codegen), no UDFs.
   */
 object Dedup {
-
-  /** Materialize a DataFrame to temp Parquet and read it back — the
-    * scale-safe alternative to `persist` when a stage's output is reused by
-    * several downstream joins: no executor-memory pressure (round 1: the two
-    * MEMORY_AND_DISK persists here were the stall under box contention), no
-    * recomputation, columnar-compressed. At cluster scale this is exactly
-    * the signatures table you'd write once and reuse across runs.
-    */
-  private[pipeline] def materialize(df: DataFrame, tag: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
-    df.write.mode("overwrite").parquet(dir.toString)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }))
-    df.sparkSession.read.parquet(dir.toString)
-  }
 
   // ------------------------------------------------------------- exact
 
@@ -140,10 +122,9 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, id: String, text: String, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.5, maxBucket: Int = 200): DataFrame = {
-    // Signatures are the expensive narrow stage — materialize ONCE to temp
-    // Parquet (three downstream consumers; a cache would hold the whole
-    // table in executor memory and spill-stall under pressure).
-    val sigs = materialize(minhashSignatures(df, id, text, k), "sigs")
+    // Signatures are the expensive narrow stage, read by three downstream
+    // consumers — cut once.
+    val sigs = Generations.cut(minhashSignatures(df, id, text, k))
     minhashPairsFromSigs(sigs, k, bands, threshold, maxBucket)
   }
 
@@ -288,15 +269,13 @@ object Dedup {
     // Only shingle documents that actually appear in a candidate pair — the
     // verify stage must stay proportional to |candidates|, not |corpus| —
     // and run the set intersection as row joins (codegen) rather than
-    // interpreted array_intersect. Both the candidate set (often an LSH DAG,
-    // referenced 3×) and the shingle rows are materialized to temp Parquet
-    // rather than cached (memory-pressure robustness; see [[materialize]]).
-    val pairs = materialize(pairs0, "cand")
+    // interpreted array_intersect. The candidate set (often an LSH DAG,
+    // referenced 3×) and the shingle rows (read twice) are cut once.
+    val pairs = Generations.cut(pairs0)
     val ids = pairs.select(col("a").as("doc"))
       .unionAll(pairs.select(col("b").as("doc"))).distinct()
-    val sh = materialize(
-      shingleRows(df.join(ids, col(id) === col("doc"), "left_semi"), id, text, n),
-      "shingles")
+    val sh = Generations.cut(
+      shingleRows(df.join(ids, col(id) === col("doc"), "left_semi"), id, text, n))
     jaccardVerifyCore(pairs, sh)
   }
 
@@ -305,7 +284,7 @@ object Dedup {
     * the corpus ([[minhashDedupPairs]]).
     */
   def jaccardVerifyFromShingles(shRows: DataFrame, pairs0: DataFrame): DataFrame = {
-    val pairs = materialize(pairs0, "cand")
+    val pairs = Generations.cut(pairs0)
     val ids = pairs.select(col("a").as("doc"))
       .unionAll(pairs.select(col("b").as("doc"))).distinct()
     jaccardVerifyCore(pairs, shRows.join(ids, Seq("doc"), "left_semi"))
@@ -342,8 +321,8 @@ object Dedup {
   def minhashDedupPairs(df: DataFrame, id: String, text: String, k: Int = 32,
       bands: Int = 8, estThreshold: Double = 0.2, threshold: Double = 0.5,
       maxBucket: Int = 200, n: Int = 3): DataFrame = {
-    val sh = materialize(shingleRows(df, id, text, n), "shingles")
-    val sigs = materialize(minhashSignaturesFrom(df, id, sh, k), "sigs")
+    val sh = Generations.cut(shingleRows(df, id, text, n))
+    val sigs = Generations.cut(minhashSignaturesFrom(df, id, sh, k))
     val cand = minhashPairsFromSigs(sigs, k, bands, estThreshold, maxBucket)
     jaccardVerifyFromShingles(sh, cand.select(col("a"), col("b")))
       .filter(col("jaccard") >= threshold)

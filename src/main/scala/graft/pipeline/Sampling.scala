@@ -221,14 +221,12 @@ object Sampling {
     // Pre-aggregate the corpus token stream to (doc, bucket, cnt) ONCE
     // (r18 optimization, guide §2.3 "aggregate before you shuffle"): the
     // raw-count aggregate AND the final per-doc score both derive from it,
-    // where previously each re-ran the full tokenize+md5 pass; the
-    // materialization (localCheckpoint — ≤ B rows per doc, far smaller
-    // than the token stream) is what lets one pass feed both. The score is
-    // unchanged: Σ_tokens w_bucket = Σ_b cnt_b·w_b and ntok = Σ_b cnt_b —
-    // exact integer/decimal sums commute.
-    val docB = toks(corpus)
-      .groupBy(col("doc"), col("b")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    // where previously each re-ran the full tokenize+md5 pass; it is cut
+    // (≤ B rows per doc, far smaller than the token stream) so one pass
+    // feeds both. The score is unchanged: Σ_tokens w_bucket = Σ_b cnt_b·w_b
+    // and ntok = Σ_b cnt_b — exact integer/decimal sums commute.
+    val docB = graft.exec.Generations.cut(toks(corpus)
+      .groupBy(col("doc"), col("b")).agg(count(lit(1)).as("cnt")))
     val rawCnt = docB.groupBy(col("b")).agg(sum(col("cnt")).as("rc"))
     val tgtCnt = toks(target).groupBy(col("b")).agg(count(lit(1)).as("tc"))
     val totals = rawCnt.agg(sum(col("rc")).as("rN")).crossJoin(

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exec.Generations
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — north-star similarity-search operators.
@@ -265,12 +266,11 @@ object Similarity {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
       k: Int, m: Int = 4, ksub: Int = 8, iters: Int = 2): DataFrame = {
-    // the training loop re-reads this frame per iteration and the encode
-    // re-reads it once more — materialize the quantized corpus ONCE
-    // (index-build posture; at scale this is the standard
-    // cache-the-training-set step, released when the build ends)
-    val c0 = prepared(corpus, id, vec, "neighbor_id", "_vc", "_nc")
-      .withColumn("_vi", ivfQuant(col("_vc"))).localCheckpoint()
+    // the training loop re-reads the quantized corpus per iteration and
+    // the encode once more — cut it once
+    val c0 = Generations.cut(
+      prepared(corpus, id, vec, "neighbor_id", "_vc", "_nc")
+        .withColumn("_vi", ivfQuant(col("_vc"))))
     val dim = c0.select(size(col("_vi"))).limit(1).collect().headOption
       .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
         "pqTopK: empty corpus — nothing to train codebooks on"))
@@ -306,8 +306,9 @@ object Similarity {
       vec: String, k: Int, nlist: Int = 8, nprobe: Int = 3,
       coarseIters: Int = 3, m: Int = 4, ksub: Int = 8,
       pqIters: Int = 2): DataFrame = {
-    val c0 = prepared(corpus, id, vec, "neighbor_id", "_vc", "_nc")
-      .withColumn("_vi", ivfQuant(col("_vc"))).localCheckpoint()
+    val c0 = Generations.cut(
+      prepared(corpus, id, vec, "neighbor_id", "_vc", "_nc")
+        .withColumn("_vi", ivfQuant(col("_vc"))))
     val dim = c0.select(size(col("_vi"))).limit(1).collect().headOption
       .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
         "ivfPqTopK: empty corpus — nothing to train codebooks on"))
@@ -337,13 +338,16 @@ object Similarity {
     */
   def trainedBooks(corpus: DataFrame, id: String, vec: String, m: Int = 4,
       ksub: Int = 8, iters: Int = 2): Seq[Seq[(Long, Seq[Double])]] = {
-    val c0 = prepared(corpus, id, vec, "neighbor_id", "_vc", "_nc")
-      .withColumn("_vi", ivfQuant(col("_vc"))).localCheckpoint()
-    val dim = c0.select(size(col("_vi"))).limit(1).collect().headOption
-      .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
-        "trainedBooks: empty corpus — nothing to train codebooks on"))
-    require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
-    pqTrainJoint(c0, m, dim / m, ksub, iters)
+    val c0 = Generations.cut(
+      prepared(corpus, id, vec, "neighbor_id", "_vc", "_nc")
+        .withColumn("_vi", ivfQuant(col("_vc"))))
+    try {
+      val dim = c0.select(size(col("_vi"))).limit(1).collect().headOption
+        .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
+          "trainedBooks: empty corpus — nothing to train codebooks on"))
+      require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
+      pqTrainJoint(c0, m, dim / m, ksub, iters)
+    } finally Generations.release(c0)
   }
 
   /** STREAM-safe PQ encoding against batch-trained codebooks: each code
@@ -534,13 +538,10 @@ object Similarity {
     val c = prepared(corpus, id, vec, "a", "_vc", "_nc")
       .withColumn("_vi", ivfQuant(col("_vc")))
     val cents = ivfTrain(c, "a", nlist, iters)
-    // materialize the assignment ONCE (r18 optimization): both join sides
-    // read it, and lazily each would re-run the full prepare+assign pass
-    // (profiled as the two largest stages of the query). localCheckpoint,
-    // not cache: the frame is consumed within this one query, and the
-    // checkpoint breaks the lineage so the pair join plans over a leaf.
-    val assigned = ivfNearest(c, cents, "_vi", 1).drop("_vi")
-      .localCheckpoint(true)
+    // cut the assignment once: both join sides read it, and lazily each
+    // would re-run the full prepare+assign pass (profiled as the two
+    // largest stages of the query)
+    val assigned = Generations.cut(ivfNearest(c, cents, "_vi", 1).drop("_vi"))
     val l = assigned.select(col("cid"), col("a"), col("_vc"), col("_nc"))
     val r = assigned.select(col("cid"), col("a").as("b"),
       col("_vc").as("_vq"), col("_nc").as("_nq"))

@@ -307,23 +307,22 @@ object TextAnalysis {
         slice(col("_t"), lit(2), size(col("_t")) - 1))).as("bg"))
       .select(col("doc"), col("bg.0").as("w1"), col("bg.1").as("w2"))
     val c2 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-    // unigram model: vocabulary-sized aggregate, materialized once
-    // (localCheckpoint) so V — previously a SEPARATE full-corpus
-    // distinct+count pass — is a metadata-cheap count of the model rows.
-    val c1 = toks.select(explode(col("_t")).as("w1c"))
-      .groupBy(col("w1c")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint(true)
-    val v = c1.count()
-    bi.join(c2, Seq("w1", "w2"))
-      .join(c1, col("w1") === col("w1c"))
-      .select(col("doc"),
-        floor((col("c2") + 1) * lit(1000000.0) / (col("c1") + lit(v.toDouble)))
-          .cast("bigint").as("s"))
-      .groupBy(col("doc"))
-      .agg(sum(col("s")).cast("bigint").as("total"),
-        count(lit(1)).cast("bigint").as("n_bigrams"))
-      .select(col("doc"), col("n_bigrams"), col("total"),
-        round(col("total").cast("double") / col("n_bigrams"), 4).as("fluency"))
+    // unigram model: vocabulary-sized aggregate, cut once, so V is the
+    // cut's row count instead of a separate full-corpus distinct+count
+    graft.exec.Generations.scope { gen =>
+      val (c1, v) = gen.cut(toks.select(explode(col("_t")).as("w1c"))
+        .groupBy(col("w1c")).agg(count(lit(1)).as("c1")))
+      bi.join(c2, Seq("w1", "w2"))
+        .join(c1, col("w1") === col("w1c"))
+        .select(col("doc"),
+          floor((col("c2") + 1) * lit(1000000.0) / (col("c1") + lit(v.toDouble)))
+            .cast("bigint").as("s"))
+        .groupBy(col("doc"))
+        .agg(sum(col("s")).cast("bigint").as("total"),
+          count(lit(1)).cast("bigint").as("n_bigrams"))
+        .select(col("doc"), col("n_bigrams"), col("total"),
+          round(col("total").cast("double") / col("n_bigrams"), 4).as("fluency"))
+    }
   }
 
   def pack(df: DataFrame, id: String, text: String, shard: String,

@@ -249,7 +249,8 @@ final class GraphCatalog(val spark: SparkSession) {
   // operation — a batch job, like GraphDB's) and cached; queries then read
   // them through the `rank:hasRDFRank` pseudo-property, which the compiler
   // rewrites to a join against this table. localCheckpoint materializes
-  // the fixed-iteration result once so every query reads, never recomputes.
+  // the fixed-iteration result once so every query reads, never recomputes;
+  // it lives as long as the catalog, so it is no query-scoped generation.
   private var rdfRank: Option[DataFrame] = None
   def computeRdfRank(predicates: Seq[String] = Nil, iters: Int = 3): Unit = {
     rdfRank = Some(graft.graph.GraphAnalytics
@@ -265,7 +266,8 @@ final class GraphCatalog(val spark: SparkSession) {
   // restricted to those predicates); queries then match it through the
   // `luc:<name>` pseudo-property, which the compiler rewrites to
   // conjunctive token joins (see Compiler.compileLuc). localCheckpoint
-  // materializes the index once; at 100 TB the same postings persist
+  // materializes the index once, for the catalog's lifetime (no
+  // query-scoped generation); at 100 TB the same postings persist
   // term-bucketed (FullTextIndex) — this is the in-store query surface.
   // Stored per index (r14, for `luc:score`): tf postings (doc, term, tf)
   // — unique per (doc, term), so the pre-r14 set queries run unchanged —
@@ -321,6 +323,7 @@ final class GraphCatalog(val spark: SparkSession) {
         t => length(t) > 0)).as("term"))
     val toks = if (analyzed) graft.pipeline.Analyzer.analyzeTerms(toks0)
       else toks0
+    // catalog-lifetime index: localCheckpoint, not a query generation
     val tf = toks.groupBy(col("doc"), col("term"))
       .agg(count(lit(1)).cast("long").as("tf")).localCheckpoint()
     val norms = tf.groupBy(col("doc"))
@@ -378,6 +381,7 @@ final class GraphCatalog(val spark: SparkSession) {
       "createPredicationIndex needs a name and at least one predicate")
     val quads = predicates.map(forPredicate(_)).reduce(_.unionAll(_))
       .filter(col("graph") === Rdf.DefaultGraph)
+    // catalog-lifetime index: localCheckpoint, not a query generation
     val tf = quads
       .select(col("s").as("doc"),
         concat(col("p"), lit("\u0001"), col("o.value")).as("term"))
@@ -499,6 +503,8 @@ final class GraphCatalog(val spark: SparkSession) {
       val persisted = edgeIndexPath
         .filter(dir => new java.io.File(dir, "_SUCCESS").exists())
         .map(dir => spark.read.parquet(dir.getPath))
+      // localCheckpoint, not a Generations cut: it lives as long as the
+      // catalog and keeps the src hash partitioning that path search joins on
       val e = persisted.getOrElse(
         dedupBySrc(resourceEdges, 32).localCheckpoint())
       resEdgeSet = Some(e); e
@@ -527,6 +533,31 @@ final class GraphCatalog(val spark: SparkSession) {
 }
 
 object GraphCatalog {
+
+  /** Scan-parallelism floor (r18 optimization, guide §2.5 "input skew: one
+    * huge unsplittable file — repartition immediately after the read"): the
+    * testdata tables are single-file, SINGLE-ROW-GROUP parquet, so the scan
+    * is one task no matter what `maxPartitionBytes`/`minPartitionNum` say —
+    * row groups are the split floor — and every narrow stage above it
+    * inherited 1-way parallelism (profiled: dd_semantic spent 6+ s in
+    * 1-task stages on a 32-core box). Scale-ADAPTIVE: when the planned
+    * scan already has >= defaultParallelism partitions (every real
+    * multi-row-group/multi-file layout), this is the identity.
+    *
+    * The repartition hashes on the table's declared primary key, not
+    * round-robin: a keyless repartition(p) pays a LOCAL SORT of every row
+    * first (sortBeforeRepartition, for retry determinism; guide §2.5),
+    * profiled as the single biggest stage of dd_decontam's widen. The key
+    * is unique, so the spread is uniform; a table with no declared key
+    * falls back to round-robin.
+    */
+  private[graft] def widen(df: DataFrame,
+      spec: Option[DirectMapper.TableSpec]): DataFrame = {
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= p) df
+    else spec.flatMap(_.pks.headOption)
+      .fold(df.repartition(p))(k => df.repartition(p, col(k)))
+  }
   /** Catalog over a driver testdata scale-factor directory (TESTDATA.md).
     *
     * `events.ts` is a naive µs TIMESTAMP (read as TIMESTAMP_NTZ under
@@ -543,26 +574,12 @@ object GraphCatalog {
     DirectMapper.testdataSpecs.toSeq.sortBy(_._1).foreach { case (t, spec) =>
       scala.util.Try(spark.read.parquet(s"$sfDir/$t.parquet"))
         .foreach { df =>
-          // Scan-parallelism floor (r18 optimization, guide §2.5): the
-          // testdata files are single-row-group parquet — an unsplittable
-          // 1-task scan — and the quad LIFT (IRI string construction) is
-          // fused into the scan stage, so every compiled query's lift ran
-          // single-threaded. Widen only tables whose source is big enough
-          // for the lift to matter (≥ 1 MiB: measured net-negative below —
-          // the exchange taxes every small-table query for nothing), and
-          // only when the planned scan is narrower than the session's
-          // parallelism (identity for any real multi-row-group layout).
-          // hash-repartition on the key column, NOT round-robin: a plain
-          // repartition(n) pays a per-partition sort of the whole row
-          // (sortBeforeRepartition, for retry determinism) that the hash
-          // route avoids, and the leading column is the table's key —
-          // uniform, so the spread is even.
-          val p = spark.sparkContext.defaultParallelism
+          // the quad LIFT (IRI string construction) is fused into the scan
+          // stage, so widen tables whose source is big enough for the lift
+          // to matter (≥ 1 MiB: measured net-negative below — the exchange
+          // taxes every small-table query for nothing)
           val big = df.queryExecution.optimizedPlan.stats.sizeInBytes >= (1L << 20)
-          val wide = if (big && df.rdd.getNumPartitions < p)
-            df.repartition(p, org.apache.spark.sql.functions.col(df.columns.head))
-          else df
-          cat.register(spec, wide)
+          cat.register(spec, if (big) widen(df, Some(spec)) else df)
         }
     }
     // store identity = md5 over every source file's (path, length, mtime)

@@ -33,16 +33,15 @@ object GraphUpdate {
     */
   def instantiate(sol: Sol, template: Seq[TriplePattern]): DataFrame = {
     // INSERT-template bnodes (19.6): fresh per SOLUTION, shared across the
-    // template within one solution — label ⊕ a per-row id. The id expression
-    // is nondeterministic and each template quad re-executes the plan in its
-    // own union branch, so the stamped frame is materialized ONCE
-    // (localCheckpoint) to guarantee all branches — and every job that
-    // re-reads the inserted quads, as a repository's closed-view delta
-    // does — see identical ids.
+    // template within one solution — label ⊕ a per-row id. Each template
+    // quad reads the stamped frame in its own union branch, and a
+    // repository's closed-view delta re-reads the inserted quads, so it is
+    // cut: every reader sees the same drawn ids.
     val hasB = template.exists(tp =>
       tp.s.isInstanceOf[B] || tp.o.isInstanceOf[B])
     val df = if (hasB)
-      sol.df.withColumn("_ubn", monotonically_increasing_id()).localCheckpoint()
+      graft.exec.Generations.cut(
+        sol.df.withColumn("_ubn", monotonically_increasing_id()))
     else sol.df
     def bLabel(lbl: String) =
       concat(lit("_:u"), md5(concat(lit(lbl + " "), col("_ubn").cast("string"))))

@@ -100,7 +100,8 @@ object StreamIngest {
     // driver-local, non-recomputable state — there is no lineage back to a
     // replayable source to preserve; a cluster caller wanting fault
     // tolerance should write the stream to a durable sink (parquet +
-    // checkpointLocation) instead of a memory-sink helper.
+    // checkpointLocation) instead of a memory-sink helper. A Generations
+    // cut would keep the lineage, and with it the sink's rows.
     val out = spark.table(name).localCheckpoint(true)
     spark.catalog.dropTempView(name)
     out

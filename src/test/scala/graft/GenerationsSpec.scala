@@ -1,19 +1,23 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.exec.Generations
 import graft.graph.{GraphAnalytics, PathSearch}
 import graft.inference.{CustomRules, Inference}
 import graft.model.{Quad, Rdf, RdfTerm}
 import graft.paths.PropertyPaths
 
-/** Release contract of the iterative loops' lineage cuts
-  * ([[graft.exec.Generations]]): a loop that throws leaves nothing pinned,
-  * and a fixpoint keeps at most the generation it returns.
+/** The engine's one materialization primitive ([[graft.exec.Generations]]):
+  * a cut is a sized leaf that Spark plans joins against, a nondeterministic
+  * frame is drawn once, a loop that throws leaves nothing pinned, and a
+  * fixpoint keeps at most the generation it returns.
   */
 class GenerationsSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -118,5 +122,47 @@ class GenerationsSpec extends AnyFunSuite {
     assert(leftByInference <= 1 && leftByRules <= 1,
       s"Inference.materialize left $leftByInference, " +
         s"CustomRules.materialize left $leftByRules")
+  }
+
+  private def rowCount(df: DataFrame): Option[BigInt] =
+    df.queryExecution.optimizedPlan.stats.rowCount
+
+  test("a cut's leaf carries its exact row count") {
+    val cut = Generations.cut(
+      spark.range(0, 1000, 1, 4).filter(col("id") % 3 === 0).toDF())
+    assert(rowCount(cut) == Some(BigInt(334)))
+    assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes > 0)
+  }
+
+  test("an un-hinted join against a small cut broadcasts the cut") {
+    // an RDD-backed frame has no size estimate: only the cut's own
+    // statistics can make this join a broadcast
+    val big = spark.createDataFrame(
+      spark.sparkContext.parallelize(0L until 100000L, 4).map(Row(_)),
+      StructType(Seq(StructField("k", LongType))))
+    val small = Generations.cut(Seq(1L, 2L, 3L).toDF("k"))
+    val joined = big.join(small, "k")
+    val plan = joined.queryExecution.sparkPlan
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty, plan)
+    assert(joined.count() == 3)
+  }
+
+  test("a cut of a nondeterministic frame is drawn once") {
+    val stamped = spark.range(0, 200, 1, 4).toDF()
+      .repartition(3).withColumn("stamp", monotonically_increasing_id())
+    val cut = Generations.cut(stamped)
+    val rdds = cut.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
+    assert(rdds.size == 1 && rdds.head.isCheckpointed)
+    def ids() = cut.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(ids() == ids())
+  }
+
+  test("a lazy cut of a union of two cuts is sized within their sum") {
+    val a = Generations.cut(spark.range(0, 500).toDF())
+    val b = Generations.cut(spark.range(500, 800).toDF())
+    def size(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val u = Generations.scope(_.cutLazy(a.unionAll(b)))
+    assert(size(u) <= size(a) + size(b))
+    assert(u.count() == 800)
   }
 }

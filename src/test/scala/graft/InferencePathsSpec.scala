@@ -147,38 +147,6 @@ class InferencePathsSpec extends AnyFunSuite {
     assert(got.contains(("e:a2", Rdf.OwlSameAs, "e:a1")))
   }
 
-  test("materializeOnce: equals the fixpoint on non-recursive vocabularies; " +
-    "falls back to it on recursive ones and on sameAs data") {
-    import spark.implicits._
-    def once(quads: Seq[Quad]): Set[(String, String, String)] =
-      Inference.materializeOnce(spark, quads.toDS().toDF())
-        .select("s", "p", "o.value").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    // non-recursive: domain + range only — one pass suffices
-    val flat = Seq(
-      q("p:likes", Rdf.RdfsDomain, iri("c:Person")),
-      q("p:likes", Rdf.RdfsRange, iri("c:Thing")),
-      q("i:a", "p:likes", iri("i:b")),
-      q("i:c", "p:likes", iri("i:d")))
-    assert(once(flat) == materialize(flat))
-    // recursive vocabulary (subClassOf chain): must STILL produce the full
-    // closure (fallback), not a truncated one-pass result
-    val chain = Seq(
-      q("p:likes", Rdf.RdfsDomain, iri("c:Person")),
-      q("c:Person", Rdf.RdfsSubClassOf, iri("c:Agent")),
-      q("c:Agent", Rdf.RdfsSubClassOf, iri("c:Thing")),
-      q("i:a", "p:likes", iri("i:b")))
-    val got = once(chain)
-    assert(got == materialize(chain))
-    assert(got.contains(("i:a", Rdf.RdfType, "c:Thing"))) // 2-level derivation
-    // sameAs in the DATA (no schema): substitution must still cascade
-    val same = Seq(
-      q("i:x", Rdf.OwlSameAs, iri("i:y")),
-      q("i:x", "p:v", RdfTerm.str("k")))
-    assert(once(same) == materialize(same))
-    assert(once(same).contains(("i:y", "p:v", "k")))
-  }
-
   test("vocab collect is vocabulary-sized: data-scale rdf:type rows excluded") {
     import spark.implicits._
     val data = (1 to 500).map(i => q(s"e:$i", Rdf.RdfType, iri("c:Widget"))) ++

@@ -40,6 +40,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(bruteDupPairs.nonEmpty) // data has planted near-dups
   }
 
+  test("dedup spills nothing to the driver's temp dir; answers unchanged") {
+    // the engine names every temp dir it makes graft_*; other processes
+    // sharing the temp dir are left out of the comparison
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries() = Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft"))
+    val before = entries()
+    val cand = Dedup.minhashPairs(docs, "doc_id", "text", k = 32, bands = 8,
+      threshold = 0.2)
+    val verified = Dedup.jaccardVerify(docs, cand.select("a", "b"), "doc_id", "text")
+      .filter(col("jaccard") >= 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val onePass = Dedup.minhashDedupPairs(docs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = (ps: Set[(Long, Long)]) =>
+      ps.map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))
+    assert(pairs(verified) == bruteDupPairs)
+    assert(pairs(onePass) == bruteDupPairs)
+    assert(entries() -- before == Set.empty)
+  }
+
   test("dedupKeep: one representative (min id) per near-dup cluster survives") {
     val kept = Dedup.dedupKeep(docs, "doc_id", "text")
       .collect().map(_.getLong(0)).toSet

@@ -328,13 +328,11 @@ class UpdateSpec extends AnyFunSuite {
       tomb = true, "b1", now)
     val onto = store(Quad(dg, "urn:t#hasType", graft.model.Rdf.RdfsDomain,
       RdfTerm.iri("urn:t#Facility")))
-    val vocab = graft.inference.Inference.vocab(onto)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val merged = graft.streaming.StreamIngest.merge(spark,
       stream, initial = onto, graft.inference.Closure.batchLocal(
-        b => graft.inference.Inference.materializeOnceWith(spark,
-          b.unionAll(onto), vocab, assumeDistinct = true, cut = false),
+        b => graft.inference.Inference.materialize(spark, b.unionAll(onto)),
         close = st => graft.inference.Inference.materialize(spark, st)))
     val typed = merged
       .filter(col("p") === graft.model.Rdf.RdfType &&
