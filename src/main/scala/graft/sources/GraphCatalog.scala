@@ -558,6 +558,7 @@ object GraphCatalog {
     else spec.flatMap(_.pks.headOption)
       .fold(df.repartition(p))(k => df.repartition(p, col(k)))
   }
+
   /** Catalog over a driver testdata scale-factor directory (TESTDATA.md).
     *
     * `events.ts` is a naive µs TIMESTAMP (read as TIMESTAMP_NTZ under
